@@ -659,8 +659,8 @@ object SparkEntry {
     "q109_pagerank" -> ((s, dir) =>
       // The 3 rank iterations ride the session ADJACENCY artifact (r18):
       // per round the broadcast rank table is probed once per NODE and
-      // the out-cells fan out map-side — value-identical to the
-      // edge-frame core (GraphSpec pins it), with per-edge work cut to
+      // the out-cells fan out map-side (GraphSpec pins the values
+      // against a driver-side reference), with per-edge work cut to
       // emit + combinable sum. Degrees and |V| come off the artifacts.
       G.pageRankAdjPrepared(symAdjFrame(s, dir),
           degreeTable(s, dir).select(col("node"), col("deg").as("outdeg")),
@@ -1518,13 +1518,12 @@ object SparkEntry {
     // ORIENTED layout + adjacency artifacts (r15): the per-query cost
     // is the compact-forward intersect kernel + output-scale census
     // folds; orientation/adjacency prep is corpus-pure topology built
-    // once beside the degree table (spec-pinned identical to the
-    // from-scratch census in GraphSpec).
+    // once beside the degree table (spec-pinned against a brute-force
+    // triangle census in GraphSpec and PropertySpec).
     "q166_clustering_census" -> ((s, dir) =>
       G.localClusteringCensusPrepared(orientedEdgesFrame(s, dir),
         orientedAdjFrame(s, dir),
         degreeTable(s, dir).select(col("node"), col("deg")),
-        coPurchaseNodeCount(s, dir),
         coPurchaseSymCount(s, dir) / 2)),
 
     // L149: revenue concentration — the Pareto question ("what share of
@@ -1605,12 +1604,12 @@ object SparkEntry {
 
     // L152: degree assortativity of the co-purchase graph — do popular
     // parts co-occur with popular parts? One number, exact integer
-    // sufficient statistics (GraphOps.degreeAssortativity).
+    // sufficient statistics ([[GraphOps.degreeAssortativityCanon]]).
     "q170_degree_assortativity" -> ((s, dir) =>
       G.degreeAssortativityCanon(coPurchaseSymFrame(s, dir)
         .filter(col("node") < col("peer"))
         .select(col("node").as("u"), col("peer").as("v")),
-        Some(degreeTable(s, dir).select(col("node"), col("deg").as("d"))))),
+        degreeTable(s, dir).select(col("node"), col("deg").as("d")))),
 
     // L153: product-quantization ADC top-k — the store-compression leg
     // of the ANN triad (IVF q34 prunes the search space, int8 q65
@@ -1787,7 +1786,7 @@ object SparkEntry {
 
     // L161: k-step absorption probability — "will a user in state s
     // convert within 8 transitions?", the forward-looking companion to
-    // q92's one-step matrix; scaled-integer rounds (the pageRank
+    // q92's one-step matrix; scaled-integer rounds (the PageRank
     // discipline), oracle-unrolled.
     "q178_absorption" -> ((s, dir) =>
       An.absorptionProbability(t(s, dir, "events"), col("user_id"),
@@ -2830,7 +2829,7 @@ object SparkEntry {
     // into basket-cohesive clusters). Three deterministic synchronous
     // rounds (max-weight label, tie → min id) off the SAME bucketed
     // artifact the rest of the graph family serves from; reported as
-    // the top-20 community census. [[GraphOps.labelPropagationSym]].
+    // the top-20 community census. [[GraphOps.labelPropagationPrepared]].
     "q217_label_propagation" -> ((s, dir) =>
       // The TABLE, not the checkpoint frame: LPA's per-round tally is
       // an EDGE-SCALE (node, lbl) aggregate that rides the bucket
@@ -8340,8 +8339,15 @@ object SparkEntry {
     * corpus/shingle/threshold build, so one checkpointed pair set per
     * (session, corpus dir) feeds all of them — a production curation
     * session computes candidates once, not once per downstream step.
-    * Bench clears it at round boundaries so repeat rounds start cold. */
-  private val nearDupSweep = new D.NearDupSweep
+    * The build runs inside [[DedupOps.withNearDupPairs]]' loan and
+    * materializes the verified pairs via `localCheckpoint(eager)`, so
+    * the heavyweight intermediates are unpersisted before it returns and
+    * what survives is not a CacheManager entry (`clearCache()` between
+    * unrelated jobs cannot drop it). The key must identify the build —
+    * corpus, shingle config, threshold and session; a hit ignores the
+    * rest. Bench clears it at round boundaries so repeat rounds start
+    * cold. */
+  private val nearDupSweep = new CheckpointMemo
 
   /** Session sweep for the near-dup component labels shared by q61, q66,
     * q102, q106 — see [[nearDupComponents]]. */
@@ -8352,7 +8358,7 @@ object SparkEntry {
     * the WHOLE graph family (q109/q153/q166/q170/q184/q185): the
     * `bucketBy(node)` write pays the one exchange, and every consumer
     * reads the table back pre-distributed on the node id — per-node
-    * degree aggregates and the per-iteration pageRank/k-core joins ride
+    * degree aggregates and the per-iteration PageRank/k-core joins ride
     * the bucket layout with zero re-shuffle, and the canonical (u < v)
     * pair list falls out of a MAP-SIDE filter instead of each query
     * re-paying least/greatest + distinct over the edge list.
@@ -8416,7 +8422,7 @@ object SparkEntry {
           .union(e.select(col("id_b").as("node"), col("id_a").as("peer"),
             col("w")))
         // 32 buckets = the local core count: bucket-riding stages (q166's
-        // wedge expansion, the per-iteration pageRank joins) inherit the
+        // wedge expansion, the per-iteration PageRank joins) inherit the
         // bucket count as their parallelism, and 8 buckets left 3/4 of
         // the cores idle on the heaviest query (q166 9.7s → with 32
         // buckets the family's exchange-free reads keep full width). On
@@ -8464,7 +8470,7 @@ object SparkEntry {
     * localCheckpoint does NOT carry the bucketed scan's hash
     * distribution (`UnknownPartitioning` — AQE-era Dataset.checkpoint
     * drops outputPartitioning), so the frame serves only consumers that
-    * attach node-cardinality state by BROADCAST (pageRank/kCore/BFS/PPR
+    * attach node-cardinality state by BROADCAST (PageRank/k-core/BFS/PPR
     * iterations, canonical-half filters, anti-join probes) — their
     * plans never ask for the edge side's distribution. Consumers whose
     * edge-scale aggregates NEED the node distribution (the LPA tally,
@@ -8556,7 +8562,7 @@ object SparkEntry {
           .filter(col("node") < col("peer"))
           .select(col("node").as("u"), col("peer").as("v")),
         degreeTable(s, dir).select(col("node"), col("deg")),
-        Some(coPurchaseNodeCount(s, dir)))
+        coPurchaseNodeCount(s, dir))
         .localCheckpoint(true)
     }
 
@@ -9223,11 +9229,11 @@ object SparkEntry {
     * reusable after GC and could serve a checkpoint of a STOPPED
     * context to a colliding later session. */
   private def wordCandidatePairs(s: SparkSession, dir: String): DataFrame =
-    nearDupSweep.pairs(
-      s"worddup3:0.0:$dir:${s.sparkContext.applicationId}",
-      spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
-      "doc_id", T.wordShinglesMulti(T.tokens(col("text")), 3), 0.0,
-      Some(D.wordKernels(col("text"), 3)))
+    nearDupSweep(s"worddup3:0.0:$dir:${s.sparkContext.applicationId}")(
+      D.withNearDupPairs(
+        spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
+        "doc_id", T.wordShinglesMulti(T.tokens(col("text")), 3), 0.0,
+        Some(D.wordKernels(col("text"), 3)))(_.localCheckpoint(true)))
 
   /** The 0.8-threshold near-dup pairs — a filter over
     * [[wordCandidatePairs]], so the q25 family and the q168 yield curve

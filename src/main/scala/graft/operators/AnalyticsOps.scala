@@ -586,7 +586,7 @@ object AnalyticsOps {
     * one-step probabilities feed. The absorbing state's probability is
     * pinned at 1; everything else iterates
     * pₖ(s) = (Σₜ c(s,t)·pₖ₋₁(t)) div out(s) in SCALED INTEGERS
-    * (probabilities in 1/scale units, floor division — the pageRank
+    * (probabilities in 1/scale units, floor division — the PageRank
     * discipline, so k rounds are exact, order-independent, and the
     * oracle unrolls them CTE-for-CTE; each round loses < 1 scale unit to
     * the floor).
@@ -674,7 +674,7 @@ object AnalyticsOps {
           .join(pk.select(col("state").as("to_state"), col("p")), "to_state")
           .groupBy(col("from_state"))
           // decimal product: Σ n·p reaches transitions×scale, past int64
-          // on a large corpus (the pageRank overflow-guard class)
+          // on a large corpus (the PageRank overflow-guard class)
           .agg(sum(col("n").cast("decimal(38,0)") *
             col("p").cast("decimal(38,0)")).as("__m"))
           .join(outDeg, "from_state")

@@ -63,12 +63,6 @@ object CleanseOps {
   def jsonLong(c: Column, path: String): Column =
     get_json_object(c, path).try_cast("bigint")
 
-  def jsonDouble(c: Column, path: String): Column =
-    get_json_object(c, path).try_cast("double")
-
-  def jsonString(c: Column, path: String): Column =
-    get_json_object(c, path)
-
   /** Exact money arithmetic: cast a 2-decimal double to decimal so sums are
     * order-independent and bit-stable across engines (oracle-hash safety —
     * SURVEY.md §7 "float formatting drift"). */

@@ -227,42 +227,6 @@ object DedupOps {
     (pairs, Seq(bands, candidates, candDocs))
   }
 
-  /** Session-sweep handle: ONE near-dup pair build shared by every
-    * consumer of the same corpus within a session (VERDICT r5 #3 — the
-    * pair-loser removal, cluster rollup, and cluster curation consumers
-    * each paid the full candidate build over the identical corpus).
-    *
-    * Lifecycle: the first `pairs(key, ...)` call runs the full build
-    * inside [[withNearDupPairs]]' loan and MATERIALIZES the verified
-    * pairs via `localCheckpoint(eager)` — one row per pair, tiny next to
-    * the corpus — so the heavyweight intermediates (band keys, candidate
-    * set, candidate docs) are unpersisted before the call returns, and
-    * what survives is NOT a CacheManager entry: `spark.catalog
-    * .clearCache()` between unrelated jobs cannot silently drop it.
-    * Later calls with the same key return the checkpointed plan with
-    * zero jobs. `clear()` releases the executor blocks and empties the
-    * memo (a cleared key rebuilds on next use).
-    *
-    * Key discipline: the key must IDENTIFY the build — corpus + shingle
-    * config + threshold (callers typically embed the data dir and the
-    * session identity; a checkpoint is only valid inside the session
-    * that created it). A memo hit ignores the other arguments. */
-  final class NearDupSweep {
-    private val memo =
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    def pairs(key: String, docs: => DataFrame, id: String,
-              shingles: => Column, threshold: Double,
-              kernels: => Option[NearDupKernels] = None): DataFrame =
-      memo.computeIfAbsent(key, _ =>
-        withNearDupPairs(docs, id, shingles, threshold, kernels)(
-          _.localCheckpoint(true)))
-    def clear(): Unit = {
-      memo.values.forEach(GraphOps.releaseCheckpoint)
-      memo.clear()
-    }
-    def size: Int = memo.size
-  }
-
   /** L49 exact substring-level dedup: cross-document REPEATED SPANS — the
     * dedup flavor document-level hashing (exact or near) cannot see: two
     * otherwise-different documents sharing a boilerplate paragraph, a

@@ -4,9 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Graph operators for the dedup pipeline: connected components over the
-  * near-dup pair graph. Pairs ([[DedupOps.nearDupPairs]]) are only half the
-  * dedup story — a transitive family of near-dups (A~B, B~C) must collapse
+/** Graph operators: connected components over the near-dup pair graph,
+  * and the co-purchase graph family served from the session graph
+  * artifacts (degree table, symmetric adjacency, degree-ordered oriented
+  * layout). Pairs ([[DedupOps.nearDupPairs]]) are only half the dedup
+  * story — a transitive family of near-dups (A~B, B~C) must collapse
   * into ONE cluster with one survivor, or the "deduplicated" corpus still
   * carries C. Components turn the pair list into cluster ids.
   *
@@ -15,12 +17,7 @@ import org.apache.spark.storage.StorageLevel
   * shuffle — both hash-partitioned on the node id, no driver-side graph.
   * Rounds needed = graph DIAMETER, and near-dup clusters are dense balls
   * of mutually-similar docs (diameter 1-3 in practice), so the loop runs
-  * 2-4 rounds regardless of corpus size. For adversarial long-chain
-  * graphs the alternating large-star/small-star contraction (Kiveris et
-  * al., "Connected Components in MapReduce and Beyond", SoCC 2014)
-  * converges in O(log n) rounds with the same per-round shuffle shape —
-  * the propagation loop is kept here because its per-round cost is lower
-  * and its fixpoint is detected exactly.
+  * 2-4 rounds regardless of corpus size.
   *
   * The driver loop is orchestration only (each iteration is a distributed
   * job; the driver sees one changed-row COUNT per round — never row data).
@@ -28,10 +25,10 @@ import org.apache.spark.storage.StorageLevel
 object GraphOps {
 
   /** Edge-count ceiling for broadcasting the adjacency-array table in
-    * [[localClusteringCensusCanon]] (Σ array cells = |E| longs, so ~20M
-    * edges ≈ a few hundred MB of hashed relation — comfortable on the
-    * 128 GiB local driver and a typical cluster executor). Past it the
-    * two attach joins fall back to AQE-sized shuffles; the intersect
+    * [[localClusteringCensusPrepared]] (Σ array cells = |E| longs, so
+    * ~20M edges ≈ a few hundred MB of hashed relation — comfortable on
+    * the 128 GiB local driver and a typical cluster executor). Past it
+    * the two attach joins fall back to AQE-sized shuffles; the intersect
     * kernel is unchanged either way. */
   private val ClosureBroadcastMaxEdges = 20000000L
 
@@ -48,8 +45,8 @@ object GraphOps {
     * blocks belong to the checkpointed RDD itself), so the fixpoint
     * loops free each round's blocks by unpersisting that RDD directly;
     * otherwise dead rounds linger until driver GC + ContextCleaner get
-    * around to them. (Shared with [[DedupOps.NearDupSweep]]'s clear() —
-    * same LogicalRDD-backed lifecycle.) */
+    * around to them. (Shared with [[CheckpointMemo]]'s clear() — same
+    * LogicalRDD-backed lifecycle.) */
   private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
@@ -81,9 +78,9 @@ object GraphOps {
   def connectedComponents(edges: DataFrame, src: String, dst: String,
                           maxIter: Int = 25): DataFrame = {
     // Symmetrize once: propagation needs both directions of each edge.
-    // Pre-hashed on the per-round join key (the pageRank posture): the
-    // cached layout satisfies every round's sym ⋈ labels distribution,
-    // so only the node-cardinality label side shuffles per iteration.
+    // Pre-hashed on the per-round join key: the cached layout satisfies
+    // every round's sym ⋈ labels distribution, so only the
+    // node-cardinality label side shuffles per iteration.
     val sym = edges
       .select(col(src).cast("long").as("node"), col(dst).cast("long").as("peer"))
       .union(edges
@@ -115,97 +112,18 @@ object GraphOps {
       releaseCheckpoint(labels)
       throw new IllegalStateException(
         s"connectedComponents: no fixpoint after $maxIter rounds — " +
-          "raise maxIter (diameter-bound) or switch to star contraction")
+          "raise maxIter (diameter-bound)")
     }
     labels
   }
 
-  /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-    * the adversarial-diameter alternative to [[connectedComponents]]:
-    * converges in O(log n) rounds on ANY graph (a 200-node chain
-    * contracts in ~10 rounds where propagation needs 200), at the cost
-    * of slightly heavier rounds (two half-steps, each one aggregate +
-    * one join). Same output contract: (node, label = component min).
-    *
-    *  - large-star: every node connects its STRICTLY LARGER neighbors to
-    *    the minimum of its closed neighborhood — long tails fold onto
-    *    small ids without ever disconnecting a component;
-    *  - small-star: every node connects its not-larger neighbors (and
-    *    itself) to that minimum — stars flatten.
-    *
-    * The fixpoint (edge set unchanged) is exactly the star graph: each
-    * component reduced to (min, member) edges. Both half-steps are
-    * hash-partitioned on the grouping node; per-round localCheckpoint
-    * truncates plan growth as in the propagation loop.
-    *
-    * Self-loop-only nodes: canon() drops self-loops from the working edge
-    * set (they never merge anything), so the node set is unioned back at
-    * the end — a node whose only edge is (n, n) labels itself, exactly as
-    * [[connectedComponents]] labels it (ADVICE r5 flagged the two
-    * variants diverging on this input). */
-  def connectedComponentsStar(edges: DataFrame, src: String, dst: String,
-                              maxIter: Int = 50): DataFrame = {
-    // Canonical undirected form: (a < b), dedup, self-loops dropped.
-    def canon(df: DataFrame, x: Column, y: Column): DataFrame =
-      df.select(least(x, y).as("a"), greatest(x, y).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    // Every node mentioned by ANY edge (self-loops included) must appear
-    // in the output; contraction below only sees non-loop edges.
-    val allNodes = edges.select(col(src).cast("long").as("node"))
-      .union(edges.select(col(dst).cast("long").as("node"))).distinct()
-    var e = canon(edges,
-      col(src).cast("long"), col(dst).cast("long")).localCheckpoint(true)
-    var iter = 0
-    var stable = false
-    while (!stable && iter < maxIter) {
-      // Large-star: group both orientations on u; m = min(N(u) ∪ {u});
-      // emit (m, v) for strictly larger neighbors v.
-      val nbrs = e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-      val lsMin = nbrs.groupBy(col("u")).agg(min(col("v")).as("__mv"))
-        .select(col("u"), least(col("__mv"), col("u")).as("m"))
-      val ls = canon(nbrs.join(lsMin, "u").filter(col("v") > col("u")),
-        col("v"), col("m")).localCheckpoint(true)
-      // Small-star on the canonical edges: for each node u its smaller
-      // neighbors are exactly the a-side rows of (a, u); m = min of them
-      // (all < u); emit (m, a_i) for every smaller neighbor plus (m, u).
-      val ssMin = ls.groupBy(col("b").as("u")).agg(min(col("a")).as("m"))
-      val viaNbrs = ls.join(ssMin, col("b") === col("u"))
-        .select(col("a").as("x"), col("m").as("y"))
-      val next = canon(viaNbrs.union(
-          ssMin.select(col("m").as("x"), col("u").as("y"))),
-        col("x"), col("y")).localCheckpoint(true)
-      // Fixpoint: the edge multiset is unchanged (both are distinct sets,
-      // so two anti-joins detect any difference).
-      stable = next.exceptAll(e).isEmpty && e.exceptAll(next).isEmpty
-      releaseCheckpoint(e)
-      releaseCheckpoint(ls)
-      e = next
-      iter += 1
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar: no fixpoint after $maxIter rounds")
-    // The fixpoint is a star forest: every edge is (componentMin, member).
-    // Isolated (self-loop-only) nodes re-enter as their own label; for
-    // star members the self row loses to the component min under min().
-    e.select(col("b").as("node"), col("a").as("label"))
-      .union(e.select(col("a").as("node"), col("a").as("label")))
-      .union(allNodes.select(col("node"), col("node").as("label")))
-      .groupBy(col("node")).agg(min(col("label")).as("label"))
-  }
-
-  /** Cluster summary over an edge list: one row per multi-member cluster
-    * with its size and a deterministic comma-joined member list (members
-    * sorted NUMERICALLY — the oracle's `ORDER BY node` twin). */
-  def dupClusters(edges: DataFrame, src: String, dst: String): DataFrame =
-    dupClustersFromLabels(connectedComponents(edges, src, dst))
-
-  /** The cluster rollup half of [[dupClusters]], over an ALREADY-COMPUTED
-    * (node, label) assignment — so a session that shares one
-    * [[connectedComponents]] run across consumers ([[CheckpointMemo]])
-    * pays the fixpoint loop once and each consumer only its own rollup. */
+  /** Cluster summary over a (node, label) assignment — the output of
+    * [[connectedComponents]]: one row per cluster with its size and a
+    * deterministic comma-joined member list (members sorted NUMERICALLY
+    * — the oracle's `ORDER BY node` twin). Taking the labels rather than
+    * the edges lets a session share one components run across consumers
+    * ([[CheckpointMemo]]): the fixpoint loop is paid once and each
+    * consumer pays only its own rollup. */
   def dupClustersFromLabels(labels: DataFrame): DataFrame =
     labels
       .groupBy(col("label"))
@@ -214,22 +132,15 @@ object GraphOps {
           _.cast("string"))).as("members"))
       .select(col("label").as("cluster_id"), col("n_members"), col("members"))
 
-  /** PageRank over an undirected edge list, in SCALED-INTEGER arithmetic
-    * so the result is exact, order-independent, and engine-reproducible:
-    * every rank is a non-negative long in units of `scale⁻¹`, each
-    * iteration's mass transfer is `rank div outdeg` (integer floor
-    * division — identical in Spark `div` and DuckDB `//` for
-    * non-negative operands), and the damping step is
+  /** PageRank over the session SYMMETRIC ADJACENCY artifact, in
+    * SCALED-INTEGER arithmetic so the result is exact, order-independent,
+    * and engine-reproducible: every rank is a non-negative long in units
+    * of `scale⁻¹`, each iteration's mass transfer is `rank div outdeg`
+    * (integer floor division — identical in Spark `div` and DuckDB `//`
+    * for non-negative operands), and the damping step is
     * `(15·scale) div 100 + (85·mass) div 100`. A float PageRank cannot
     * hash-verify: partial-aggregation order perturbs the low bits of
     * every double sum, and k iterations compound the perturbation.
-    *
-    * Per iteration: one equi-join (edges ⋈ ranks on the source node) and
-    * one combinable sum shuffle — the standard distributed PageRank
-    * shape, hash-partitioned on node id, nothing on the driver. Plan
-    * depth grows linearly with `iters`; for the fixed small k this runs
-    * at (3-5, the analytics norm) no checkpoint is needed — beyond ~10,
-    * localCheckpoint per round as in [[connectedComponents]].
     *
     * Overflow bound (checked): the damping multiply needs
     * `85 · nNodes · scale < 2⁶³`, because total mass is conserved at
@@ -239,144 +150,32 @@ object GraphOps {
     * scale 10⁶. Symmetrized edges mean every node has outdeg ≥ 1, so
     * there is no dangling-mass term.
     *
-    * Returns (node, rank, outdeg) — ranks sum to ≈ nNodes·scale (floor
-    * losses only), i.e. the "ranks average to 1" convention scaled. */
-  def pageRank(edges: DataFrame, src: String, dst: String,
-               iters: Int = 3, scale: Long = 1000000000L): DataFrame = {
-    val e = edges
-      .select(least(col(src), col(dst)).cast("long").as("a"),
-        greatest(col(src), col(dst)).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    // Persist the edge list PRE-HASHED on the join key: every iteration
-    // joins sym.u = ranks.node, and an unpartitioned cache would pay an
-    // Exchange of the (large) edge list per iteration — partitioned, the
-    // cached layout satisfies the join's distribution and only the
-    // node-cardinality ranks side shuffles each round. deg's groupBy(u)
-    // rides the same layout for free.
-    val sym = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = deg.count() // one scalar; also materializes sym + deg
-    pageRankCore(sym, deg, nNodes, iters, scale, Seq(sym, deg))
-  }
-
-  /** [[pageRank]] over an ALREADY-SYMMETRIZED distinct edge list (both
-    * directions present, self-loops absent) — the variant a bucketed
-    * graph table ([[graft.sources.CatalogOps.writeBucketed]] on the node
-    * column) feeds: the scan arrives pre-hash-distributed on `src`, so
-    * the normalize + symmetrize + `repartition` prefix — two full
-    * edge-list shuffles — is skipped entirely and every iteration's
-    * join and the degree aggregate ride the bucket layout. */
-  def pageRankSym(symEdges: DataFrame, src: String, dst: String,
-                  iters: Int = 3,
-                  scale: Long = 1000000000L): DataFrame = {
-    val sym = symEdges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = deg.count() // one scalar; also materializes sym + deg
-    pageRankCore(sym, deg, nNodes, iters, scale, Seq(sym, deg))
-  }
-
-  /** [[pageRankSym]] for callers holding the SESSION GRAPH ARTIFACTS
-    * (a materialized symmetric edge frame, its exact (node, outdeg)
-    * degree table, and the node count) — skips the per-query persist +
-    * degree aggregate + count job every `*Sym` entrypoint re-pays
-    * (VERDICT r13 #3: those prep actions, repeated across the graph
-    * family, were most of its per-query overhead). `symEdges` must be
-    * already symmetrized, distinct, self-loop-free, and materialized
-    * (checkpoint/cache — each iteration re-reads it); `deg` must be its
-    * exact symmetric degree table and `nNodes` its exact node count, or
-    * the rank arithmetic silently diverges from the from-scratch
-    * variants.
+    * Inputs: `adj` is one row per node carrying its out-neighbor cells
+    * as `nbrs: array<struct<p, w, pdeg>>` (the node-keyed rollup of the
+    * symmetric edge table, each cell carrying its destination's degree
+    * — same cells, |V| rows instead of 2|E|); `deg` is the exact (node,
+    * outdeg) symmetric degree table and `nNodes` its row count. Each
+    * iteration's mass pass probes the broadcast contribution table |V|
+    * times instead of 2|E| times, computes `rank div outdeg` ONCE per
+    * node instead of once per edge, and streams the cells out of a
+    * codegen explode — the per-edge work is emit + combinable-sum.
+    * Hub-row bound: max cells per row = max degree (the same bound the
+    * broadcast adjacency attach in the clustering census carries).
     *
-    * RETURN CONTRACT (r17, ADVICE r17): prepared callers get the LAZY
-    * iteration chain, not checkpointed rows — consume it with ONE
-    * downstream action, BEFORE any sweep/artifact clear (a second
-    * action re-runs all iterations; a clear in between fails the job
-    * with missing checkpoint blocks). Same contract on
-    * [[kCorePeelPrepared]] and [[personalizedPageRankPrepared]]. */
-  def pageRankPrepared(symEdges: DataFrame, src: String, dst: String,
-                       deg: DataFrame, nNodes: Long, iters: Int = 3,
-                       scale: Long = 1000000000L): DataFrame =
-    pageRankCore(
-      symEdges.select(col(src).cast("long").as("u"),
-        col(dst).cast("long").as("v")),
-      deg.select(col("node"), col("outdeg")), nNodes, iters, scale, Nil)
-
-  /** The iteration core shared by the pageRank entrypoints: `owned`
-    * frames (the from-scratch variants' persisted sym/deg) are
-    * unpersisted before return; prepared callers pass Nil and keep
-    * their session artifacts. */
-  private def pageRankCore(sym: DataFrame, deg: DataFrame, nNodes: Long,
-                           iters: Int, scale: Long,
-                           owned: Seq[DataFrame]): DataFrame = {
-    require(nNodes == 0 || scale <= Long.MaxValue / 85L / math.max(nNodes, 1L),
-      s"pageRank: 85 * $nNodes nodes * scale $scale overflows long — lower scale")
-    val teleport = (15L * scale) / 100L
-    // Rank tables are NODE-cardinality; the edge list is corpus-scale.
-    // Broadcasting ranks each iteration keeps the persisted edge list
-    // where it sits (no per-iteration |E| shuffle — only the combinable
-    // mass partials move); past the node budget the joins fall back to
-    // AQE-sized shuffles.
-    val bcast: DataFrame => DataFrame =
-      if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
-    var ranks = deg.select(col("node"), lit(scale).as("rank"), col("outdeg"))
-    for (_ <- 1 to iters) {
-      val mass = sym.join(bcast(ranks), sym("u") === ranks("node"))
-        .select(col("v").as("node"),
-          expr("rank div outdeg").as("contrib"))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("mass"))
-      // Inner join is total: symmetrization gives every node both an
-      // out-edge (it's in deg) and an in-edge (its peers contribute).
-      ranks = deg.join(bcast(mass), "node")
-        .select(col("node"),
-          (lit(teleport) + expr("(85 * mass) div 100")).as("rank"),
-          col("outdeg"))
-    }
-    // Materialize before dropping the cached edge/degree frames the lazy
-    // plan still references (the connectedComponents return discipline —
-    // the caller gets checkpointed rows, blocks freed by ContextCleaner).
-    // PREPARED callers (owned Nil, session-artifact frames that outlive
-    // this call) get the LAZY chain instead (r17): their single
-    // downstream action drives the iterations directly, skipping one
-    // full materialize + block write + re-scan of the result.
-    val res = ranks.select(col("node"), col("rank"), col("outdeg"))
-    if (owned.isEmpty) res
-    else {
-      val out = res.localCheckpoint(true)
-      owned.foreach(_.unpersist(blocking = false))
-      out
-    }
-  }
-
-  /** [[pageRankPrepared]] over the session SYMMETRIC ADJACENCY artifact
-    * (r18, guide §8 "shuffle keys and metadata instead of payloads"
-    * applied to the probe side): `adj` is one row per node carrying its
-    * out-neighbor cells as `nbrs: array<struct<p, w>>` (the node-keyed
-    * rollup of the symmetric edge table — same cells, |V| rows instead
-    * of 2|E|). Each iteration's mass pass then probes the broadcast
-    * rank table |V| times instead of 2|E| times, computes `rank div
-    * outdeg` ONCE per node instead of once per edge, and streams the
-    * cells out of a codegen explode — the per-edge work drops to emit +
-    * combinable-sum. The mass multiset is identical (the cells ARE the
-    * sym rows), so k iterations are value-identical to the edge-list
-    * cores (spec-pinned in GraphSpec). Hub-row bound: max cells per row
-    * = max degree (the same bound the broadcast adjacency attach in the
-    * clustering census already carries). Same lazy single-action return
-    * contract as [[pageRankPrepared]]. */
+    * Returns (node, rank, outdeg) — ranks sum to ≈ nNodes·scale (floor
+    * losses only), i.e. the "ranks average to 1" convention scaled.
+    *
+    * RETURN CONTRACT: the result is the LAZY iteration chain over the
+    * session artifacts, not checkpointed rows — consume it with ONE
+    * downstream action, BEFORE any sweep/artifact clear (a second action
+    * re-runs all iterations; a clear in between fails the job with
+    * missing checkpoint blocks). */
   def pageRankAdjPrepared(adj: DataFrame, deg: DataFrame, nNodes: Long,
                           iters: Int = 3,
                           scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(nNodes == 0 || scale <= Long.MaxValue / 85L / math.max(nNodes, 1L),
-      s"pageRank: 85 * $nNodes nodes * scale $scale overflows long — lower scale")
+      s"PageRank: 85 * $nNodes nodes * scale $scale overflows long — lower scale")
     val teleport = (15L * scale) / 100L
     val bcast: DataFrame => DataFrame =
       if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
@@ -384,8 +183,7 @@ object GraphOps {
     // out-edges) is THE loop state: because every cell carries its
     // destination's outdegree (`pdeg`), the next round's contribution
     // derives from the mass aggregate alone — one broadcast build and
-    // one join per iteration, where the edge-list core paid two of
-    // each (mass attach + deg re-join). Arithmetic is unchanged:
+    // one join per iteration, with no degree re-join:
     // contribₖ₊₁(s) = (teleport + (85·massₖ(s)) div 100) div outdeg(s).
     var contribs = deg.select(col("node"),
       expr(s"${scale}L div outdeg").as("__c"))
@@ -406,10 +204,22 @@ object GraphOps {
       col("__pd").as("outdeg"))
   }
 
-  /** [[personalizedPageRankPrepared]] over the symmetric adjacency
-    * artifact — [[pageRankAdjPrepared]]'s probe-side move with the
-    * seed-restricted teleport. Value-identical to the edge-list core
-    * (same mass multiset; spec-pinned). */
+  /** PERSONALIZED PageRank over the symmetric adjacency artifact —
+    * [[pageRankAdjPrepared]]'s scaled-integer discipline and inputs with
+    * the teleport mass restricted to a SEED set (the "random surfer who
+    * always returns to their interests" ranking a recommender serves per
+    * user/topic segment): rank₀ = scale on seeds, 0 elsewhere; each
+    * iteration rank′ = (seed ? (15·scale) div 100 : 0) +
+    * (85·mass) div 100. Every rank is an exact long, so k iterations
+    * hash-verify against an unrolled SQL twin. Overflow bound (checked):
+    * total mass stays ≤ nSeeds·scale ≤ nNodes·scale, so
+    * `85 · nNodes · scale < 2⁶³` suffices. An empty seed set is
+    * rejected (every rank would be 0).
+    *
+    * RETURN CONTRACT: the LAZY iteration chain — consume it with ONE
+    * downstream action, BEFORE any sweep/artifact clear (a second action
+    * re-runs all iterations; a clear in between fails the job with
+    * missing checkpoint blocks). */
   def personalizedPageRankAdjPrepared(adj: DataFrame, deg: DataFrame,
                                       nNodes: Long,
                                       isSeed: Column => Column,
@@ -456,16 +266,25 @@ object GraphOps {
       col("__pd").as("outdeg"))
   }
 
-  /** [[bfsLayersPrepared]] over the symmetric adjacency artifact: each
-    * round's frontier expansion reads the |V|-row adjacency frame
-    * (broadcast-semi-joined to the frontier, then one explode of ONLY
-    * the frontier rows' cells) instead of re-scanning the 2|E|-row edge
-    * list — the per-round scan drops from edge-scale to node-scale and
-    * the explode fans out only the frontier's neighborhoods.
-    * Layer-identical to [[bfsLayersSym]] (the cells are the sym rows;
-    * spec-pinned). Per-round checkpoints stay (the frontier is
-    * referenced twice per round — semi-join + visited anti-join — so a
-    * lazy chain would double the plan per round). */
+  /** BFS distance-layer census from a deterministic seed (the MINIMUM
+    * node id — engine-independent, so a SQL recursive-CTE oracle lands
+    * on the same seed) over the symmetric adjacency artifact (`adj` as
+    * in [[pageRankAdjPrepared]]; `nodes` the exact (node) vertex set,
+    * `nNodes` its count). Runs a FIXED `rounds` of frontier expansion;
+    * the oracle unrolls the same horizon, and nodes beyond it census as
+    * dist −1 ("unreached") — a bounded-round reachability probe, not an
+    * unbounded traversal. Returns (dist, n_nodes): one row per non-empty
+    * layer 0..rounds plus the −1 row when unreached nodes remain.
+    *
+    * Each round broadcast-semi-joins the |V|-row adjacency frame to the
+    * frontier, explodes ONLY the frontier rows' cells, and anti-joins
+    * the visited set — node-scale scans, and the explode fans out only
+    * the frontier's neighborhoods. Only each round's FRONTIER is
+    * checkpointed (it is referenced twice per round — semi-join +
+    * visited anti-join — so a lazy chain would double the plan per
+    * round); the visited set stays a lazy union of the ≤ rounds+1
+    * checkpointed layers. The result is materialized and the layers'
+    * blocks released before return. */
   def bfsLayersAdjPrepared(adj: DataFrame, nodes: DataFrame, nNodes: Long,
                            rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds in [1,8], got $rounds")
@@ -565,77 +384,37 @@ object GraphOps {
     * unrolls the identical rounds; convergence on a given corpus is a
     * spec assertion (rounds vs rounds+1 equal), not an unbounded loop.
     *
-    * Shape: symmetric edge list persisted PRE-HASHED on `u` (the
-    * [[pageRank]] discipline) — each round is one degree aggregate on
-    * the cached layout plus two semi-joins against the
-    * node-cardinality keep-list; each round's survivor edges are
-    * eagerly checkpointed so lineage stays flat. Returns survivors as
-    * (node, degree-after-peel, k). */
-  def kCorePeel(edges: DataFrame, src: String, dst: String,
-                rounds: Int, q: Double): DataFrame = {
-    val e0 = edges
-      .select(least(col(src), col(dst)).cast("long").as("a"),
-        greatest(col(src), col(dst)).cast("long").as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val sym0 = e0.select(col("a").as("u"), col("b").as("v"))
-      .union(e0.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg0 = sym0.groupBy(col("u")).agg(count(lit(1)).as("__n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kCoreCore(sym0, deg0, deg0.count(), rounds, q, Seq(sym0, deg0))
-  }
-
-  /** [[kCorePeel]] over an ALREADY-SYMMETRIZED distinct edge list — the
-    * bucketed-table variant ([[pageRankSym]]'s contract): the scan's
-    * hash distribution on `src` serves the initial degree aggregate and
-    * the per-round semi-joins, skipping the normalize + symmetrize +
-    * repartition prefix. */
-  def kCorePeelSym(symEdges: DataFrame, src: String, dst: String,
-                   rounds: Int, q: Double): DataFrame = {
-    val sym0 = symEdges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg0 = sym0.groupBy(col("u")).agg(count(lit(1)).as("__n"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    kCoreCore(sym0, deg0, deg0.count(), rounds, q, Seq(sym0, deg0))
-  }
-
-  /** [[kCorePeelSym]] over the session graph artifacts
-    * ([[pageRankPrepared]]'s contract): `deg` is the exact (node, deg)
-    * symmetric degree table, `nNodes` its row count — the initial-degree
-    * quantile pin and round-1 keep set read the artifact instead of
-    * re-aggregating the edge list, and no per-query persist is paid.
-    * Single-action, consume-before-clear return contract — see
-    * [[pageRankPrepared]]. */
+    * Inputs are the session graph artifacts: `symEdges` the
+    * materialized symmetric (both directions, distinct, self-loop-free)
+    * edge frame, `deg` its exact (node, deg) degree table and `nNodes`
+    * its row count — the initial-degree quantile pin and round-1 keep
+    * set read the artifact instead of re-aggregating the edge list.
+    * Each later round is one degree aggregate plus two broadcast
+    * semi-joins against the node-cardinality keep-list; each round's
+    * survivor edges are eagerly checkpointed so lineage stays flat.
+    * Returns survivors as (node, degree-after-peel, k).
+    *
+    * RETURN CONTRACT: the result is a LAZY head over the last round's
+    * checkpoint — consume it with ONE downstream action, BEFORE any
+    * sweep/artifact clear. */
   def kCorePeelPrepared(symEdges: DataFrame, src: String, dst: String,
                         deg: DataFrame, nNodes: Long, rounds: Int,
-                        q: Double): DataFrame =
-    kCoreCore(
-      symEdges.select(col(src).cast("long").as("u"),
-        col(dst).cast("long").as("v")),
-      deg.select(col("node").as("u"), col("deg").as("__n")), nNodes,
-      rounds, q, Nil)
-
-  /** The peel core shared by the kCore entrypoints: `deg0` is the
-    * (u, __n) symmetric degree frame of `sym0`; `owned` frames are
-    * unpersisted before return (prepared callers pass Nil). */
-  private def kCoreCore(sym0: DataFrame, deg0: DataFrame, nNodes: Long,
-                        rounds: Int, q: Double,
-                        owned: Seq[DataFrame]): DataFrame = {
+                        q: Double): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds in [1,8], got $rounds")
     require(q > 0.0 && q < 1.0, s"quantile in (0,1), got $q")
+    val deg0 = deg.select(col("node").as("u"), col("deg").as("__n"))
     val kTab = deg0
       .agg(ceil(percentile(col("__n"), lit(q))).cast("long").as("k"))
       .localCheckpoint(true)
     // Survivor sets are node-cardinality; broadcasting them makes both
     // semi-joins map-side, so each round's edge frame keeps the
-    // partitioning it arrived with (bucketed on u) — no per-round
-    // repartition, no |E| shuffle. Past the node budget the semi-joins
-    // fall back to AQE shuffles.
+    // partitioning it arrived with — no per-round repartition, no |E|
+    // shuffle. Past the node budget the semi-joins fall back to AQE
+    // shuffles.
     val bcast: DataFrame => DataFrame =
       if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
-    var sym = sym0
+    var sym = symEdges.select(col(src).cast("long").as("u"),
+      col(dst).cast("long").as("v"))
     for (r <- 1 to rounds) {
       val keep = (if (r == 1) deg0
         else sym.groupBy(col("u")).agg(count(lit(1)).as("__n")))
@@ -647,89 +426,10 @@ object GraphOps {
         .join(bcast(keep.select(col("u").as("v"))), Seq("v"), "left_semi")
         .localCheckpoint(true)
     }
-    val res = sym.groupBy(col("u").as("node"))
+    sym.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("degree"))
       .crossJoin(broadcast(kTab))
       .select(col("node"), col("degree"), col("k"))
-    // Prepared callers get the lazy head over the last round's
-    // checkpoint ([[pageRankCore]]'s r17 rule).
-    if (owned.isEmpty) res
-    else {
-      val out = res.localCheckpoint(true)
-      owned.foreach(_.unpersist(blocking = false))
-      out
-    }
-  }
-
-  /** Local clustering-coefficient census — the per-node shape
-    * complement to [[triangleStats]]'s one global coefficient: how many
-    * nodes live in closed neighborhoods (cliquish dup families, tight
-    * co-purchase pockets) vs open hubs. Each node's coefficient
-    * 2·T_v/(deg_v·(deg_v−1)) buckets by INTEGER division into 11 cells
-    * (bucket 10 = fully closed; degree-1 nodes, whose coefficient is
-    * undefined, census as bucket −1), so no per-node float ever crosses
-    * the engine boundary.
-    *
-    * Enumeration is [[triangleStats]]'s degree-ordered wedge expansion
-    * (max out-degree O(√edges) — no hub wedge explosion) with the
-    * closing join kept INNER instead of semi so each triangle emits its
-    * three corners once; a single explode + count yields exact per-node
-    * triangle counts, joined to the degree table on node id and folded
-    * to the ≤12-row census. */
-  def localClusteringCensus(pairs: DataFrame, a: String,
-                            b: String): DataFrame =
-    localClusteringCensusCanon(pairs
-      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-
-  /** [[localClusteringCensus]] over an ALREADY-CANONICAL (u < v,
-    * distinct) edge list — e.g. the map-side `node < peer` filter of a
-    * bucketed symmetric graph table, which skips the least/greatest +
-    * distinct full-edge-list shuffle the public form pays. Input columns
-    * must be named (u, v). */
-  def localClusteringCensusCanon(canonEdges: DataFrame): DataFrame =
-    localClusteringCensusCanon(canonEdges, None)
-
-  /** [[localClusteringCensusCanon]] with an optional PRECOMPUTED degree
-    * frame `(node, deg)` (the session degree artifact): each canonical
-    * edge contributes one endpoint row per side, so the derived census
-    * degree equals the symmetric-table degree exactly — callers holding
-    * the artifact skip the |2E| union-aggregate (VERDICT r11 #5). */
-  def localClusteringCensusCanon(canonEdges: DataFrame,
-                                 precomputedDeg: Option[DataFrame])
-  : DataFrame =
-    localClusteringCensusCanon(canonEdges, precomputedDeg, None, None)
-
-  /** [[localClusteringCensusCanon]] with the session artifact COUNTS
-    * supplied (`knownNodes` = degree-table rows, `knownEdges` =
-    * canonical edge count): the broadcast guards read the known scalars
-    * instead of running two count jobs, and with a precomputed degree
-    * artifact the edge frame is single-consumer here so its per-query
-    * persist is skipped (VERDICT r13 #3). */
-  def localClusteringCensusCanon(canonEdges: DataFrame,
-                                 precomputedDeg: Option[DataFrame],
-                                 knownNodes: Option[Long],
-                                 knownEdges: Option[Long]): DataFrame = {
-    // The edge frame has two consumers (degree build + rank attach) only
-    // when the degree frame is derived here; with the artifact supplied
-    // it is read once and a persist would only add a cache write.
-    val e =
-      if (precomputedDeg.isEmpty)
-        canonEdges.persist(StorageLevel.MEMORY_AND_DISK)
-      else canonEdges
-    val deg = precomputedDeg.getOrElse(e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val o = orientByDegree(e, deg, knownNodes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val census = censusFromOriented(o, None, deg, knownNodes, knownEdges)
-    if (precomputedDeg.isEmpty) {
-      e.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-    }
-    o.unpersist(blocking = false)
-    census
   }
 
   /** Degree-ordered orientation of a canonical (u < v, distinct) edge
@@ -737,21 +437,18 @@ object GraphOps {
     * the larger `d`, so max out-degree is O(√E) on ANY graph — the
     * bound that makes compact-forward triangle work (adjacency arrays,
     * per-edge intersections) hub-proof. `deg` is the (node, deg)
-    * symmetric degree table. Degrees BROADCAST onto the edge list: the
-    * degree table is node-cardinality (~|V|, the catalog) while the
-    * edge list is corpus-scale (~|E|) — shuffling |E| twice to attach
-    * two ints is the wrong side of both joins. Count-guarded like the
-    * PageRank family: past the node budget both joins fall back to
-    * AQE-sized shuffles. Exposed (r15) so the co-purchase serving
-    * layer can materialize the oriented layout ONCE per session — the
-    * same layout a production triangle/clustering service keeps beside
-    * its symmetric edges (VERDICT r14 #2). */
+    * symmetric degree table and `knownNodes` its row count. Degrees
+    * BROADCAST onto the edge list: the degree table is node-cardinality
+    * (~|V|, the catalog) while the edge list is corpus-scale (~|E|) —
+    * shuffling |E| twice to attach two ints is the wrong side of both
+    * joins. Past the node budget both joins fall back to AQE-sized
+    * shuffles. The co-purchase serving layer materializes the oriented
+    * layout ONCE per session — the same layout a production
+    * triangle/clustering service keeps beside its symmetric edges. */
   def orientByDegree(canonEdges: DataFrame, deg: DataFrame,
-                     knownNodes: Option[Long] = None): DataFrame = {
+                     knownNodes: Long): DataFrame = {
     val degSide: DataFrame => DataFrame =
-      if (knownNodes.getOrElse(deg.count()) <= RankBroadcastMaxNodes)
-        broadcast(_)
-      else identity
+      if (knownNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
     val ranked = canonEdges
       .join(degSide(deg.select(col("node").as("u"), col("deg").as("du"))),
         "u")
@@ -765,54 +462,50 @@ object GraphOps {
 
   /** Per-node out-neighbor arrays of a degree-ordered oriented edge
     * list — the adjacency side of the compact-forward intersect. Array
-    * length is O(√E) by the orientation bound. Arrays are SORTED (r18):
-    * the census intersects them with the linear-merge
-    * `sorted_intersect` kernel instead of `array_intersect`'s per-row
-    * hash set — one sort at build time buys allocation-free merges at
-    * query time. (Intersections are sets; every consumer aggregates
+    * length is O(√E) by the orientation bound. Arrays are SORTED: the
+    * census intersects them with the linear-merge `sorted_intersect`
+    * kernel instead of `array_intersect`'s per-row hash set — one sort
+    * at build time buys allocation-free merges at query time.
+    * (Intersections are sets; every consumer aggregates
     * order-independently, so the sort is value-invisible.) */
   def adjacencyFromOriented(oriented: DataFrame): DataFrame =
     oriented.groupBy(col("s").as("node"))
       .agg(sort_array(collect_list(col("d"))).as("nbrs"))
 
-  /** [[localClusteringCensusCanon]] over the session ORIENTED-layout
-    * artifacts ([[pageRankPrepared]]'s contract): `oriented` is the
+  /** Local clustering-coefficient census — the per-node shape
+    * complement to [[triangleStats]]'s one global coefficient: how many
+    * nodes live in closed neighborhoods (cliquish dup families, tight
+    * co-purchase pockets) vs open hubs. Each node's coefficient
+    * 2·T_v/(deg_v·(deg_v−1)) buckets by INTEGER division into 11 cells
+    * (bucket 10 = fully closed; degree-1 nodes, whose coefficient is
+    * undefined, census as bucket −1), so no per-node float ever crosses
+    * the engine boundary. Returns (bucket, n_nodes, sum_deg, sum_tri),
+    * one row per non-empty bucket, materialized.
+    *
+    * Inputs are the session ORIENTED-layout artifacts: `oriented` the
     * materialized [[orientByDegree]] frame, `adj` its
     * [[adjacencyFromOriented]] arrays, `deg` the (node, deg) degree
-    * artifact, and the counts are the memoized session scalars — the
-    * census pays only the intersect kernel + the output-scale census
-    * folds, never the per-query orientation/adjacency prep (VERDICT
-    * r14 #2: q166's cost was exactly that prep plus the closing
-    * work). */
+    * table, and `knownEdges` the canonical edge count — the census pays
+    * only the intersect kernel + the output-scale census folds, never
+    * the orientation/adjacency prep.
+    *
+    * EDGE-ITERATOR triangle counting: one join attaches both endpoint
+    * arrays to each oriented edge, then a map-side sorted intersect —
+    * each triangle {a,b,c} (rank a<b<c) is found exactly once, at edge
+    * (a,b), as c ∈ N⁺(a)∩N⁺(b). The Σoutdeg² work runs inside one
+    * codegen'd intersect kernel and the only exploded rows are the
+    * triangle CREDITS (2 endpoint rows + |intersection| witness rows
+    * per closing edge — output-scale, not wedge-scale), so each
+    * triangle credits its three corners once. Arrays broadcast when |E|
+    * fits the budget (Σ array cells = |E| longs); past it the attach
+    * joins fall back to shuffles sized by AQE. */
   def localClusteringCensusPrepared(oriented: DataFrame, adj: DataFrame,
-                                    deg: DataFrame, knownNodes: Long,
-                                    knownEdges: Long): DataFrame =
-    censusFromOriented(oriented, Some(adj), deg, Some(knownNodes),
-      Some(knownEdges))
-
-  /** The compact-forward census core shared by the canon and prepared
-    * entrypoints: EDGE-ITERATOR triangle counting — per-node
-    * out-neighbor ARRAYS, one join to attach both endpoint arrays to
-    * each oriented edge, then a map-side array_intersect — each
-    * triangle {a,b,c} (rank a<b<c) is found exactly once, at edge
-    * (a,b), as c ∈ N⁺(a)∩N⁺(b). The earlier wedge-join formulation
-    * materialized the Σoutdeg² wedge stream as JOIN ROWS (41M at
-    * sf0.1; 8.3s of the query's 10s just moving them); here the same
-    * Σoutdeg² work runs inside one codegen'd hash-intersect kernel and
-    * the only exploded rows are the triangle CREDITS (2 endpoint rows
-    * + |intersection| witness rows per closing edge — output-scale,
-    * not wedge-scale). Arrays broadcast when |E| fits the budget
-    * (Σ array cells = |E| longs); past it the attach joins fall back
-    * to shuffles sized by AQE. */
-  private def censusFromOriented(o: DataFrame, adjOpt: Option[DataFrame],
-                                 deg: DataFrame, knownNodes: Option[Long],
-                                 knownEdges: Option[Long]): DataFrame = {
-    val adj = adjOpt.getOrElse(adjacencyFromOriented(o))
+                                    deg: DataFrame,
+                                    knownEdges: Long): DataFrame = {
     val adjSide: DataFrame => DataFrame =
-      if (knownEdges.getOrElse(o.count()) <= ClosureBroadcastMaxEdges)
-        broadcast(_)
+      if (knownEdges <= ClosureBroadcastMaxEdges) broadcast(_)
       else identity
-    val pairs = o
+    val pairs = oriented
       .join(adjSide(adj.select(col("node").as("s"), col("nbrs").as("nu"))),
         "s")
       .join(adjSide(adj.select(col("node").as("d"), col("nbrs").as("nv"))),
@@ -840,171 +533,6 @@ object GraphOps {
       .localCheckpoint(true)
   }
 
-  /** PERSONALIZED PageRank over an already-symmetrized distinct edge
-    * list — [[pageRank]]'s scaled-integer discipline with the teleport
-    * mass restricted to a SEED set (the "random surfer who always
-    * returns to their interests" ranking a recommender serves per
-    * user/topic segment): rank₀ = scale on seeds, 0 elsewhere; each
-    * iteration rank′ = (seed ? (15·scale) div 100 : 0) +
-    * (85·mass) div 100. Total mass stays ≤ nSeeds·scale ≤ nNodes·scale,
-    * so [[pageRank]]'s overflow bound applies unchanged; every rank is
-    * an exact long, so k iterations hash-verify against an unrolled SQL
-    * twin. Same per-iteration shape: one equi-join + one combinable
-    * sum, riding the input's hash distribution on `src`. */
-  def personalizedPageRankSym(symEdges: DataFrame, src: String,
-                              dst: String, isSeed: Column => Column,
-                              iters: Int = 3,
-                              scale: Long = 1000000000L): DataFrame = {
-    val sym = symEdges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .withColumn("is_seed", isSeed(col("node")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pprCore(sym, deg, deg.count(), iters, scale, Seq(sym, deg))
-  }
-
-  /** [[personalizedPageRankSym]] over the session graph artifacts
-    * ([[pageRankPrepared]]'s contract): `deg` is the exact (node,
-    * outdeg) symmetric degree table, `nNodes` its count — the seed flag
-    * is a map-side expression over the artifact, and no per-query
-    * persist / degree aggregate / count is paid. Single-action,
-    * consume-before-clear return contract — see [[pageRankPrepared]]. */
-  def personalizedPageRankPrepared(symEdges: DataFrame, src: String,
-                                   dst: String, deg: DataFrame,
-                                   nNodes: Long, isSeed: Column => Column,
-                                   iters: Int = 3,
-                                   scale: Long = 1000000000L): DataFrame =
-    pprCore(
-      symEdges.select(col(src).cast("long").as("u"),
-        col(dst).cast("long").as("v")),
-      deg.select(col("node"), col("outdeg"))
-        .withColumn("is_seed", isSeed(col("node"))),
-      nNodes, iters, scale, Nil)
-
-  /** The iteration core shared by the personalized-PageRank
-    * entrypoints: `deg` carries (node, outdeg, is_seed). */
-  private def pprCore(sym: DataFrame, deg: DataFrame, nNodes: Long,
-                      iters: Int, scale: Long,
-                      owned: Seq[DataFrame]): DataFrame = {
-    require(nNodes == 0 ||
-      scale <= Long.MaxValue / 85L / math.max(nNodes, 1L),
-      s"personalizedPageRank: 85 * $nNodes * scale $scale overflows long")
-    require(nNodes == 0 || deg.filter(col("is_seed")).limit(1).count() > 0,
-      "personalizedPageRank: empty seed set — every rank would be 0")
-    val teleport = (15L * scale) / 100L
-    // Same broadcast regime as [[pageRankCore]]: node-cardinality rank
-    // state attaches to the corpus-scale edge list map-side.
-    val bcast: DataFrame => DataFrame =
-      if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
-    var ranks = deg.select(col("node"),
-      when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"),
-      col("outdeg"))
-    for (_ <- 1 to iters) {
-      val mass = sym.join(bcast(ranks), sym("u") === ranks("node"))
-        .select(col("v").as("node"), expr("rank div outdeg").as("contrib"))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("mass"))
-      ranks = deg.join(bcast(mass), "node")
-        .select(col("node"),
-          (when(col("is_seed"), lit(teleport)).otherwise(lit(0L)) +
-            expr("(85 * mass) div 100")).as("rank"),
-          col("outdeg"))
-    }
-    // Prepared callers get the lazy chain ([[pageRankCore]]'s r17 rule).
-    if (owned.isEmpty) ranks
-    else {
-      val out = ranks.localCheckpoint(true)
-      owned.foreach(_.unpersist(blocking = false))
-      out
-    }
-  }
-
-  /** BFS distance-layer census from a deterministic seed (the MINIMUM
-    * node id — engine-independent, so a SQL recursive-CTE oracle lands
-    * on the same seed) over an ALREADY-SYMMETRIZED distinct edge list.
-    * Runs a FIXED `rounds` of frontier expansion — each round one
-    * left-semi equi-join (edges ⋈ frontier on the node id) + one
-    * anti-join against the visited set, both hash-partitioned, with a
-    * per-round localCheckpoint keeping lineage flat (the
-    * [[connectedComponents]] discipline); the oracle unrolls the same
-    * horizon, and nodes beyond it census as dist −1 ("unreached") —
-    * a bounded-round reachability probe, not an unbounded traversal.
-    * Returns (dist, n_nodes): one row per non-empty layer 0..rounds
-    * plus the −1 row when unreached nodes remain. */
-  def bfsLayersSym(symEdges: DataFrame, src: String, dst: String,
-                   rounds: Int): DataFrame = {
-    // Validate BEFORE the persists + count below (ADVICE r14): bfsCore
-    // re-checks, but by then this wrapper has materialized two frames
-    // that would leak their persisted blocks until ContextCleaner GC.
-    require(rounds >= 1 && rounds <= 8, s"rounds in [1,8], got $rounds")
-    val sym = symEdges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("u").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    bfsCore(sym, nodes, nodes.count(), rounds, Seq(sym, nodes))
-  }
-
-  /** [[bfsLayersSym]] over the session graph artifacts
-    * ([[pageRankPrepared]]'s contract): `nodes` is the exact (node)
-    * vertex set (e.g. the degree artifact's key column), `nNodes` its
-    * count — skips the per-query edge persist + distinct + count. */
-  def bfsLayersPrepared(symEdges: DataFrame, src: String, dst: String,
-                        nodes: DataFrame, nNodes: Long,
-                        rounds: Int): DataFrame =
-    bfsCore(
-      symEdges.select(col(src).cast("long").as("u"),
-        col(dst).cast("long").as("v")),
-      nodes.select(col("node")), nNodes, rounds, Nil)
-
-  /** The frontier-expansion core shared by the BFS entrypoints. Only
-    * each round's FRONTIER is checkpointed; the visited set stays a
-    * lazy union of the ≤ rounds+1 checkpointed layers (plan depth is
-    * linear in the bounded round count, and the union's inputs are
-    * already-materialized LogicalRDDs — the former per-round visited
-    * checkpoint re-materialized node-cardinality rows every round for
-    * no lineage benefit, one extra action per round, VERDICT r13 #3). */
-  private def bfsCore(sym: DataFrame, nodes: DataFrame, nNodes: Long,
-                      rounds: Int, owned: Seq[DataFrame]): DataFrame = {
-    require(rounds >= 1 && rounds <= 8, s"rounds in [1,8], got $rounds")
-    val seed = nodes.agg(min(col("node")).as("node"))
-    // Frontier and visited sets are node-cardinality; broadcast keeps
-    // the per-round semi/anti joins map-side against the edge list
-    // (same regime as the PageRank family; AQE shuffles past budget).
-    val bcast: DataFrame => DataFrame =
-      if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
-    val layers = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var frontier = seed.withColumn("dist", lit(0)).localCheckpoint(true)
-    layers += frontier
-    var visited = frontier
-    var d = 0
-    while (d < rounds) {
-      d += 1
-      val next = sym
-        .join(bcast(frontier.select(col("node").as("u"))), Seq("u"),
-          "left_semi")
-        .select(col("v").as("node")).distinct()
-        .join(bcast(visited), Seq("node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(true)
-      layers += next
-      visited = visited.union(next)
-      frontier = next
-    }
-    val unreached = nodes.join(visited, Seq("node"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1).as("dist"), col("n_nodes"))
-      .filter(col("n_nodes") > 0)
-    val out = visited.groupBy(col("dist"))
-      .agg(count(lit(1)).as("n_nodes"))
-      .union(unreached)
-      .localCheckpoint(true)
-    layers.foreach(releaseCheckpoint)
-    owned.foreach(_.unpersist(blocking = false))
-    out
-  }
-
   /** Weighted synchronous label propagation (Raghavan, Albert & Kumara,
     * "Near linear time algorithm to detect community structures in
     * large-scale networks", Phys. Rev. E 76, 2007) over a SYMMETRIC
@@ -1020,65 +548,42 @@ object GraphOps {
     * ties broken by the SMALLEST label — a pure function of the input,
     * unlike the randomized asynchronous original. The argmax is the
     * combinable max-of-struct (s, −lbl) aggregate, not a window sort.
+    * Fixed `iters`, not a fixpoint: LPA label-flip counts decay
+    * geometrically on clustered graphs and the synchronous update can
+    * 2-cycle on bipartite-ish subgraphs, so a bounded round count IS the
+    * termination rule.
     *
-    * Scale: per round one equi-join attaching the node-cardinality
-    * label table to the corpus-scale edge list (broadcast under the
-    * [[RankBroadcastMaxNodes]] budget — the edge list never re-shuffles)
-    * plus two partial-aggregable groupBys; labels localCheckpoint per
-    * round (bounded plan, dead rounds released). Fixed `iters`, not a
-    * fixpoint: LPA label-flip counts decay geometrically on clustered
-    * graphs and the synchronous update can 2-cycle on bipartite-ish
-    * subgraphs, so a bounded round count IS the termination rule. */
-  def labelPropagationSym(symEdges: DataFrame, src: String, dst: String,
-                          weight: String, iters: Int = 3): DataFrame = {
-    val sym = symEdges
-      .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"),
-        col(weight).cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("u").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    lpaCore(sym, nodes, nodes.count(), iters, Seq(sym, nodes))
-  }
-
-  /** [[labelPropagationSym]] with the vertex-set artifact supplied
-    * (`nodes` = the exact (node) set, `nNodes` its count) — skips the
-    * per-query node distinct + count. UNLIKE the other Prepared
-    * entrypoints, `symEdges` should be the BUCKETED TABLE (or any
-    * source whose scan reports the node-hash distribution) and IS
-    * persisted for the loop: LPA's per-round tally is an edge-scale
-    * (node, lbl) aggregate that needs that distribution to stay
-    * exchange-free — a checkpoint frame's UnknownPartitioning would
-    * re-shuffle 2|E| rows per round (measured ~30% slower), and the
-    * columnar persist preserves the scan's partitioning where a
-    * checkpoint does not. */
+    * Inputs: `nodes` is the exact (node) vertex set, `nNodes` its count.
+    * `symEdges` should be the BUCKETED TABLE (or any source whose scan
+    * reports the node-hash distribution): the per-round tally is an
+    * edge-scale (node, lbl) aggregate that needs that distribution to
+    * stay exchange-free — a checkpoint frame's UnknownPartitioning would
+    * re-shuffle 2|E| rows per round (measured ~30% slower). Per round
+    * the node-cardinality label table broadcast-attaches to the edge
+    * list (under the [[RankBroadcastMaxNodes]] budget).
+    *
+    * Up to 4 rounds the result is the LAZY chain: each round references
+    * the previous labels exactly ONCE (the tally join), so plan depth is
+    * linear in `iters`, every round's tally re-reads the table scan
+    * (still riding its distribution), and the single downstream action
+    * drives all rounds. RETURN CONTRACT for that branch: consume it with
+    * ONE downstream action, BEFORE any sweep/artifact clear (a second
+    * action re-runs all rounds). Past 4 rounds the edge list is
+    * persisted (the columnar persist keeps the scan's partitioning where
+    * a checkpoint does not) and each round's labels are checkpointed, so
+    * lineage stays flat; dead rounds are released and the final labels
+    * are materialized rows. */
   def labelPropagationPrepared(symEdges: DataFrame, src: String,
                                dst: String, weight: String,
                                nodes: DataFrame, nNodes: Long,
                                iters: Int = 3): DataFrame = {
-    val sym = symEdges
+    val checkpointRounds = iters > 4
+    val sym0 = symEdges
       .select(col(src).cast("long").as("u"), col(dst).cast("long").as("v"),
         col(weight).cast("long").as("w"))
-    // Bounded-round prepared calls get the LAZY chain (r18): each round
-    // references the previous labels exactly ONCE (the tally join), so
-    // plan depth is linear in `iters` and the single downstream action
-    // drives all rounds — no per-round checkpoint materialization and
-    // no per-query persist (each round's tally re-reads the bucketed
-    // table scan, still riding its distribution). Same single-action,
-    // consume-before-clear contract as [[pageRankPrepared]]. Past 4
-    // rounds the checkpointed core keeps lineage flat as before.
-    if (iters <= 4)
-      lpaCore(sym, nodes.select(col("node")), nNodes, iters, Nil,
-        checkpointRounds = false)
-    else {
-      val p = sym.persist(StorageLevel.MEMORY_AND_DISK)
-      lpaCore(p, nodes.select(col("node")), nNodes, iters, Seq(p))
-    }
-  }
-
-  /** The synchronous-round core shared by the LPA entrypoints. */
-  private def lpaCore(sym: DataFrame, nodes: DataFrame, nNodes: Long,
-                      iters: Int, owned: Seq[DataFrame],
-                      checkpointRounds: Boolean = true): DataFrame = {
+    val sym =
+      if (checkpointRounds) sym0.persist(StorageLevel.MEMORY_AND_DISK)
+      else sym0
     val bcast: DataFrame => DataFrame =
       if (nNodes <= RankBroadcastMaxNodes) broadcast(_) else identity
     var labels = nodes.select(col("node"), col("node").as("lbl"))
@@ -1092,18 +597,18 @@ object GraphOps {
       // max weight, tie → min label: lexicographic max of (s, −lbl).
       // Labels are node ids (≥ 0 by the graph builders' contract), so
       // the negation cannot overflow.
-      val next0 = tally.groupBy(col("node"))
+      val next = tally.groupBy(col("node"))
         .agg(max(struct(col("s"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("node"), (-col("m.nl")).as("lbl"))
       labels =
         if (checkpointRounds) {
-          val c = next0.localCheckpoint(true)
+          val c = next.localCheckpoint(true)
           stale += c
           c
-        } else next0
+        } else next
     }
     stale.dropRight(1).foreach(releaseCheckpoint)
-    owned.foreach(_.unpersist(blocking = false))
+    if (checkpointRounds) sym.unpersist(blocking = false)
     labels
   }
 
@@ -1119,39 +624,17 @@ object GraphOps {
     * sufficient statistics (the correlation/standardize discipline), ONE
     * double division. `mean_degree` is the EDGE-END mean (the
     * degree-biased Σd²/Σd marginal the correlation is taken over), not
-    * the node mean. Shape: dedup edges, one degree aggregate, two
-    * equi-joins to attach endpoint degrees, one global reduce. */
-  def degreeAssortativity(pairs: DataFrame, a: String,
-                          b: String): DataFrame =
-    degreeAssortativityCanon(pairs
-      .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-
-  /** [[degreeAssortativity]] over an ALREADY-CANONICAL (u < v, distinct)
-    * edge list — the bucketed-table variant
-    * ([[localClusteringCensusCanon]]'s contract). */
-  def degreeAssortativityCanon(canonEdges: DataFrame): DataFrame =
-    degreeAssortativityCanon(canonEdges, None)
-
-  /** [[degreeAssortativityCanon]] with an optional precomputed
-    * `(node, d)` degree frame — same contract as the
-    * [[localClusteringCensusCanon]] overload. */
+    * the node mean. A regular graph's coefficient reads null.
+    *
+    * Inputs: `canonEdges` an ALREADY-CANONICAL (u < v, distinct) edge
+    * list and `deg` its (node, d) degree table (the session degree
+    * artifact, already materialized) — the edge frame is read once (the
+    * two endpoint-degree attach joins) and no per-query persist is
+    * paid. Returns one materialized (n_nodes, n_edges, mean_degree,
+    * assortativity) row. */
   def degreeAssortativityCanon(canonEdges: DataFrame,
-                               precomputedDeg: Option[DataFrame])
-  : DataFrame = {
-    // Same persist discipline as [[localClusteringCensusCanon]]: with
-    // the degree artifact supplied, the edge frame is read once (the
-    // endpoint attach) and the artifact is already materialized — both
-    // per-query persists are skipped.
-    val e =
-      if (precomputedDeg.isEmpty)
-        canonEdges.persist(StorageLevel.MEMORY_AND_DISK)
-      else canonEdges
-    val deg = precomputedDeg.getOrElse(e.select(col("u").as("node"))
-        .union(e.select(col("v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val ends = e
+                               deg: DataFrame): DataFrame = {
+    val ends = canonEdges
       .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")
     val sym = ends.select(col("du").as("x"), col("dv").as("y"))
@@ -1166,7 +649,7 @@ object GraphOps {
     // exactly in the decimal integers — 0/0 is engine-divergent, so the
     // degenerate mixing coefficient reads null on both sides.
     val denom = col("__n") * col("__sxx") - col("__sx") * col("__sx")
-    val out = stats.crossJoin(nNodes)
+    stats.crossJoin(nNodes)
       .select(col("n_nodes"),
         expr("CAST(__n AS BIGINT) div 2").as("n_edges"),
         (col("__sx").cast("double") / col("__n").cast("double"))
@@ -1175,10 +658,5 @@ object GraphOps {
           (col("__n") * col("__sxy") - col("__sx") * col("__sx"))
             .cast("double") / denom.cast("double")).as("assortativity"))
       .localCheckpoint(true)
-    if (precomputedDeg.isEmpty) {
-      e.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-    }
-    out
   }
 }

@@ -217,8 +217,11 @@ class LlmOpsSpec extends AnyFunSuite {
     val docs = Seq((1L, base), (2L, base + " zz"), (3L, "a b c"))
       .toDF("doc_id", "text")
     def shingles = T.wordShingles(T.tokens(col("text")), 3)
-    val sweep = new D.NearDupSweep
-    val p1 = sweep.pairs("k1", docs, "doc_id", shingles, 0.8)
+    // the session form: a CheckpointMemo over a loaned, checkpointed build
+    val sweep = new graft.operators.CheckpointMemo
+    def build = D.withNearDupPairs(docs, "doc_id", shingles, 0.8)(
+      _.localCheckpoint(true))
+    val p1 = sweep("k1")(build)
     // the returned plan is the MATERIALIZED checkpoint — no corpus scan,
     // no shingle pipeline left in it
     assert(p1.queryExecution.analyzed.collect {
@@ -226,7 +229,7 @@ class LlmOpsSpec extends AnyFunSuite {
       "sweep pairs must be checkpoint-backed")
     // second consumer: memo hit hands back the SAME build (object
     // identity — computeIfAbsent ran the loan exactly once)
-    val p2 = sweep.pairs("k1", docs, "doc_id", shingles, 0.8)
+    val p2 = sweep("k1")(build)
     assert(p2 eq p1, "second consumer must reuse the first build")
     // both consumers read the one materialization, and it is correct:
     // losers view + cluster view of the same pair set
@@ -240,7 +243,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // clear() releases and empties: the next call is a fresh build
     sweep.clear()
     assert(sweep.size == 0)
-    val p3 = sweep.pairs("k1", docs, "doc_id", shingles, 0.8)
+    val p3 = sweep("k1")(build)
     assert(!(p3 eq p1) && p3.count() == 1L)
     sweep.clear()
   }

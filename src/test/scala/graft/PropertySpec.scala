@@ -200,29 +200,14 @@ class PropertySpec extends AnyFunSuite {
       } yield (a.toLong, b.toLong))
     } yield es
     forAll(gEdges, n = 5) { es =>
-      val out = GraphOps.localClusteringCensus(es.toDF("a", "b"), "a", "b")
+      val g = GraphFixture(es)
+      val out = GraphOps.localClusteringCensusPrepared(g.oriented,
+          g.orientedAdj, g.deg, g.nEdges)
         .collect()
         .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
         .toMap
-      val und = es.filter(e => e._1 != e._2)
-        .map { case (a, b) => (a min b, a max b) }.toSet
-      val nodes = und.flatMap(e => Seq(e._1, e._2))
-      val adj = nodes.map(v => v -> und.collect {
-        case (a, b) if a == v => b
-        case (a, b) if b == v => a
-      }).toMap
-      val expect = nodes.toSeq.map { v =>
-        val d = adj(v).size.toLong
-        val t = adj(v).toSeq.combinations(2).count {
-          case Seq(x, y) => und.contains((x min y, x max y))
-          case _ => false
-        }.toLong
-        val bucket = if (d < 2) -1 else ((t * 2 * 10) / (d * (d - 1))).toInt
-        (bucket, d, t)
-      }.groupBy(_._1).map { case (b, rs) =>
-        b -> (rs.size.toLong, rs.map(_._2).sum, rs.map(_._3).sum)
-      }
-      assert(out == expect, s"census mismatch on $und: $out vs $expect")
+      assert(out == g.censusReference,
+        s"census mismatch on ${g.canon}: $out vs ${g.censusReference}")
     }
   }
 
