@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, StandardOpenOption}
 
 /** Absolute-record pointer logic for the bench harness (VERDICT r15
   * #1). The 0.15 quiet gate stays the gold path, but by the end of r15

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType,
   TimestampNTZType, TimestampType}
 
+import graft.operators.SessionMemo
+
 /** Loaders for the driver's parquet corpus (TESTDATA.md).
   *
   * Scale posture: each table is a parquet directory/file scan; Spark
@@ -34,29 +36,20 @@ object Tables {
       case _                => df
     }
 
-  /** Per-(session, dir, table) memo of the ANALYZED DataFrame (r17):
-    * every `spark.read.parquet` call re-lists the path and re-reads
-    * parquet footers to infer the schema — driver-side metadata work
-    * repeated thousands of times across a 356-query bench sweep. The
-    * memo reuses the immutable logical plan; the DATA is still read
+  /** The ANALYZED DataFrame of one corpus table, memoized per (session,
+    * dir, table) in the [[graft.operators.SessionMemo]] Corpus tier
+    * (r17): every `spark.read.parquet` call re-lists the path and
+    * re-reads parquet footers to infer the schema — driver-side metadata
+    * work repeated thousands of times across a 356-query bench sweep.
+    * The memo reuses the immutable logical plan; the DATA is still read
     * from parquet at every execution (this is catalog-table metadata
-    * caching, not result caching). Keyed by applicationId like the
-    * session sweeps: plans hold a file index owned by their session. */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * caching, not result caching). The plan pins the table's parquet
+    * FileIndex snapshot, so corpus files must stay immutable for the
+    * life of a session — a harness that regenerates corpus files
+    * mid-session must clear the Corpus tier
+    * (`SparkEntry.clearSessionArtifacts`, ADVICE r17). */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$name",
-      _ => load(spark, dir, name))
-
-  /** Drop the plan memos (ADVICE r17): the memo pins each table's
-    * parquet FileIndex snapshot, so corpus files must stay immutable for
-    * the life of a session — a harness that regenerates corpus files
-    * mid-session must clear (SparkEntry.clearSessionArtifacts calls
-    * this), and clearing also stops stopped-session keys accumulating
-    * across the long-lived test JVM. */
-  def clear(): Unit = memo.clear()
+    SessionMemo(SessionMemo.Corpus, spark, dir, name)(load(spark, dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")

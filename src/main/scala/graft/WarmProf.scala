@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
 /** Throwaway diagnostic for the r18 warm-tier work: times each
   * `artifact:warm:*` builder (the rows Bench now grades) with the

@@ -30,8 +30,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   */
 case class MinHashSig(child: Expression) extends UnaryExpression {
 
-  import MinHashSig._
-
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -45,9 +45,9 @@ object GraphOps {
     * blocks belong to the checkpointed RDD itself), so the fixpoint
     * loops free each round's blocks by unpersisting that RDD directly;
     * otherwise dead rounds linger until driver GC + ContextCleaner get
-    * around to them. (Shared with [[CheckpointMemo]]'s clear() — same
+    * around to them. (Shared with [[SessionMemo]]'s clear() — same
     * LogicalRDD-backed lifecycle.) */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(blocking = false))
@@ -122,7 +122,7 @@ object GraphOps {
     * deterministic comma-joined member list (members sorted NUMERICALLY
     * — the oracle's `ORDER BY node` twin). Taking the labels rather than
     * the edges lets a session share one components run across consumers
-    * ([[CheckpointMemo]]): the fixpoint loop is paid once and each
+    * ([[SessionMemo]]): the fixpoint loop is paid once and each
     * consumer pays only its own rollup. */
   def dupClustersFromLabels(labels: DataFrame): DataFrame =
     labels

@@ -230,6 +230,7 @@ object TextOps {
         array_join(filter(split(col("w"), ""), x => length(x) > 0), sep),
         lit(sep)).as("s")).localCheckpoint(false)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+    var prev: DataFrame = null
     for (round <- 1 to rounds) {
       val syms = filter(split(col("s"), sep), x => length(x) > 0)
       val m = size(syms) - 1
@@ -242,6 +243,10 @@ object TextOps {
         .agg(sum(col("n")).as("cnt"))
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).collect()
+      // The argmax job materialized `cur`, so the table it was derived
+      // from is dead: free its blocks now rather than at driver GC.
+      if (prev != null) GraphOps.releaseCheckpoint(prev)
+      prev = cur
       require(best.nonEmpty,
         s"vocabulary exhausted after ${round - 1} merges; lower `rounds`")
       val (l, r, cnt) =
@@ -253,6 +258,7 @@ object TextOps {
           lit(sep + l + sep + r + sep), lit(sep + l + r + sep)))
           .localCheckpoint(false)
     }
+    GraphOps.releaseCheckpoint(cur)
     import spark.implicits._
     merges.result()
       .toDF("merge_rank", "left_sym", "right_sym", "merged", "pair_count")

@@ -414,20 +414,6 @@ object VectorOps {
     }
   }
 
-  /** Session-sweep memo for [[kmeansTrainLocal]] output — the
-    * [[CheckpointMemo]] contract for driver-held centroid sets. Plain
-    * objects: nothing to checkpoint or release, a memo hit costs zero
-    * jobs, and `spark.catalog.clearCache()` cannot touch it. Key
-    * discipline is the same: corpus + geometry + owning session. */
-  final class LocalCentroidSweep {
-    private val memo = new java.util.concurrent.ConcurrentHashMap[
-      String, LocalCentroids]()
-    def centroids(key: String, train: => LocalCentroids): LocalCentroids =
-      memo.computeIfAbsent(key, _ => train)
-    def clear(): Unit = memo.clear()
-    def size: Int = memo.size
-  }
-
   /** Symmetric int8 scalar quantization (native [[graft.functions.I8Quantize]]
     * kernel): per-vector scale = max|x|/127, codes truncated toward zero —
     * the 4× memory/bandwidth cut a 100 TB embedding store serves from

@@ -143,6 +143,18 @@ class CatalogSpec extends AnyFunSuite {
     // The filesystem twins of the warehouse-table sweep (VERDICT r11
     // #7): q186/q197/q337/q338 dumps are /tmp/<base>_<dirHash(dir)>.
     val live = "/root/testdata/sf0.001"
+    // A swept corpus's session entries go with its dumps: after a sweep
+    // that deletes sf0.001's ORC export, q337 on sf0.001 rebuilds the
+    // export and returns the same rows instead of reading a deleted
+    // path.
+    def q337 = scala.util.Try(SparkEntry.queries("q337_orc_roundtrip")(
+      spark, live).collect().map(_.toString).sorted.toSeq)
+    val q337Before = q337
+    assert(q337Before.isSuccess && q337Before.get.nonEmpty)
+    SparkEntry.dropStaleArtifacts(spark, Seq("/root/testdata/sf0.01"),
+      exportGraceMs = 0L)
+    assert(q337 == q337Before,
+      "a swept corpus must rebuild its export, not serve the deleted path")
     val liveHash = CatalogOps.dirHash(live)
     val deadHash = CatalogOps.dirHash("/tmp/corpus_gone")
     def mk(p: String): java.io.File = {
@@ -183,10 +195,6 @@ class CatalogSpec extends AnyFunSuite {
           d.delete()
         }
       }
-      // The sweeps above may have removed REAL export dumps other suites
-      // built for sf0.001 — drop the memos so any later consumer
-      // rebuilds instead of reading a dead path.
-      SparkEntry.clearSessionArtifacts()
     }
   }
 

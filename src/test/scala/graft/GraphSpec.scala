@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GraphOps => G}
+import graft.operators.{GraphOps => G, SessionMemo}
+import graft.operators.SessionMemo.Round
 
 /** Graph operators against driver-side references: connected components
   * vs union-find, the triangle and clustering censuses vs brute force,
@@ -262,11 +263,11 @@ class GraphSpec extends AnyFunSuite {
   test("CheckpointMemo: one components run per (key, session); " +
     "dupClustersFromLabels equals dupClusters on the shared labels") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    val sweep = new graft.operators.CheckpointMemo
+    val sweep = new SessionMemo
     var runs = 0
     def compute = { runs += 1; G.connectedComponents(edges, "a", "b") }
-    val l1 = sweep("k")(compute)
-    val l2 = sweep("k")(compute)
+    val l1 = sweep(Round, spark, "edges", "k")(compute)
+    val l2 = sweep(Round, spark, "edges", "k")(compute)
     assert((l2 eq l1) && runs == 1,
       "second consumer must reuse the first components run")
     def clusters(labels: org.apache.spark.sql.DataFrame) =
@@ -277,8 +278,8 @@ class GraphSpec extends AnyFunSuite {
     // a fresh, unshared components run rolls up identically
     assert(viaShared == clusters(G.connectedComponents(edges, "a", "b")))
     assert(viaShared == Map(1L -> ((3L, "1,2,3")), 10L -> ((2L, "10,11"))))
-    sweep.clear()
-    assert(sweep.size == 0)
+    sweep.clear(Round)
+    assert(sweep.entries(Round).size == 0)
   }
 
   test("kCorePeel: pendant peels, the clique core survives with its " +

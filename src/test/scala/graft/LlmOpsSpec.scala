@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DedupOps => D, RelationalOps => R,
-  SampleOps => Sam, TextOps => T, VectorOps => Vec}
+  SampleOps => Sam, SessionMemo, TextOps => T, VectorOps => Vec}
+import graft.operators.SessionMemo.Round
 
 /** Unit tests for the LLM-training-data-pipeline operators: text analysis,
   * exact/near dedup (MinHash-LSH, SimHash), embedding similarity. */
@@ -217,19 +218,21 @@ class LlmOpsSpec extends AnyFunSuite {
     val docs = Seq((1L, base), (2L, base + " zz"), (3L, "a b c"))
       .toDF("doc_id", "text")
     def shingles = T.wordShingles(T.tokens(col("text")), 3)
-    // the session form: a CheckpointMemo over a loaned, checkpointed build
-    val sweep = new graft.operators.CheckpointMemo
+    // the session form: a Round-tier store entry over a loaned,
+    // checkpointed build (a private store: clearing it touches no other
+    // suite's artifacts)
+    val sweep = new SessionMemo
     def build = D.withNearDupPairs(docs, "doc_id", shingles, 0.8)(
       _.localCheckpoint(true))
-    val p1 = sweep("k1")(build)
+    val p1 = sweep(Round, spark, "docs", "k1")(build)
     // the returned plan is the MATERIALIZED checkpoint — no corpus scan,
     // no shingle pipeline left in it
     assert(p1.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r }.nonEmpty,
       "sweep pairs must be checkpoint-backed")
     // second consumer: memo hit hands back the SAME build (object
-    // identity — computeIfAbsent ran the loan exactly once)
-    val p2 = sweep("k1")(build)
+    // identity — the store ran the loan exactly once)
+    val p2 = sweep(Round, spark, "docs", "k1")(build)
     assert(p2 eq p1, "second consumer must reuse the first build")
     // both consumers read the one materialization, and it is correct:
     // losers view + cluster view of the same pair set
@@ -241,11 +244,11 @@ class LlmOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert(p1.count() == 1L, "sweep must survive catalog.clearCache()")
     // clear() releases and empties: the next call is a fresh build
-    sweep.clear()
-    assert(sweep.size == 0)
-    val p3 = sweep("k1")(build)
+    sweep.clear(Round)
+    assert(sweep.entries(Round).size == 0)
+    val p3 = sweep(Round, spark, "docs", "k1")(build)
     assert(!(p3 eq p1) && p3.count() == 1L)
-    sweep.clear()
+    sweep.clear(Round)
   }
 
   test("identical docs share a simhash; unrelated docs differ") {
@@ -538,19 +541,20 @@ class LlmOpsSpec extends AnyFunSuite {
       (2L, Seq(10f, 10f)), (3L, Seq(11f, 10f))).toDF("vec_id", "embedding")
     val initLocal: Vec.LocalCentroids =
       Seq((0L, Array(2f, 2f)), (1L, Array(8f, 8f)))
-    val sweep = new Vec.LocalCentroidSweep
+    // driver-held centroid sets share the store with the frames
+    val sweep = new SessionMemo
     var trainings = 0
     def train = {
       trainings += 1
       Vec.kmeansTrainLocal(vecs, "embedding", initLocal, 2, 2)
     }
-    val c1 = sweep.centroids("k1", train)
-    val c2 = sweep.centroids("k1", train)
+    val c1 = sweep(Round, spark, "vecs", "k1")(train)
+    val c2 = sweep(Round, spark, "vecs", "k1")(train)
     assert((c2 eq c1) && trainings == 1,
       "second consumer must reuse the first training run")
-    sweep.clear()
-    assert(sweep.size == 0)
-    val c3 = sweep.centroids("k1", train)
+    sweep.clear(Round)
+    assert(sweep.entries(Round).size == 0)
+    val c3 = sweep(Round, spark, "vecs", "k1")(train)
     assert(trainings == 2 && c3.map { case (c, v) => c -> v.toSeq } ==
       c1.map { case (c, v) => c -> v.toSeq })
   }
@@ -562,20 +566,20 @@ class LlmOpsSpec extends AnyFunSuite {
       (3L, Seq(10f, 10f)), (4L, Seq(11f, 10f)), (5L, Seq(10f, 11f)))
       .toDF("vec_id", "embedding")
     val init = Seq((0L, Seq(2f, 2f)), (1L, Seq(8f, 8f))).toDF("cid", "cv")
-    val sweep = new graft.operators.CheckpointMemo
+    val sweep = new SessionMemo
     var trainings = 0
     def train = {
       trainings += 1
       Vec.kmeansTrain(vecs, "vec_id", "embedding", init, "cid", "cv", 2)
     }
-    val c1 = sweep("k1")(train)
+    val c1 = sweep(Round, spark, "vecs", "k1")(train)
     // the returned plan is the MATERIALIZED checkpoint kmeansTrain took —
     // a memo hit replays zero Lloyd passes
     assert(c1.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r }.nonEmpty,
       "sweep centroids must be checkpoint-backed")
     // second consumer (q49's ivf row after q34): same build, no retrain
-    val c2 = sweep("k1")(train)
+    val c2 = sweep(Round, spark, "vecs", "k1")(train)
     assert((c2 eq c1) && trainings == 1,
       "second consumer must reuse the first training run")
     assert(c1.as[(Long, Seq[Float])].collect().toMap ==
@@ -584,11 +588,11 @@ class LlmOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert(c1.count() == 2L, "sweep must survive catalog.clearCache()")
     // clear() releases and empties: next call retrains
-    sweep.clear()
-    assert(sweep.size == 0)
-    val c3 = sweep("k1")(train)
+    sweep.clear(Round)
+    assert(sweep.entries(Round).size == 0)
+    val c3 = sweep(Round, spark, "vecs", "k1")(train)
     assert(!(c3 eq c1) && trainings == 2 && c3.count() == 2L)
-    sweep.clear()
+    sweep.clear(Round)
   }
 
   test("saltedJoin produces exactly the plain join's rows under skew") {
