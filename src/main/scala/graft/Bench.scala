@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -10,7 +12,10 @@ import java.nio.file.{Files, Paths}
   *    `.count()` — count lets Catalyst prune the very projections being
   *    timed (r1's q13 "ran" in 0.2s because the window was elided);
   *  - one untimed warmup pass absorbs JVM/codegen warmup (r1 charged ~4s
-  *    of it to whichever query ran first);
+  *    of it to whichever query ran first): its generated classes stay in
+  *    the session's heap-sized codegen cache (`Session.builder`), so a
+  *    timed round compiles only code that differs from run to run —
+  *    stderr reports each round's compiles and the rows that paid them;
   *  - the JSON line goes to BENCH_OUT (or stdout marker-prefixed) so the
   *    driver can parse it out of sbt log noise.
   */
@@ -23,6 +28,24 @@ object Bench {
     val cols = df.columns.map(c => col(c).cast("string"))
     df.select(xxhash64(cols: _*).as("h")).agg(bit_xor(col("h"))).collect()
   }
+
+  /** Times one row; a row that throws is logged and contributes no time. */
+  private def timeRow(nm: String)(body: => Unit): (String, Option[Double]) = {
+    val t0 = System.nanoTime()
+    try {
+      body
+      nm -> Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $nm failed: ${e.getMessage}")
+      nm -> None
+    }
+  }
+
+  /** Generated classes compiled so far in this JVM (each a codegen-cache
+    * miss through Janino) and their total compile time in ms. */
+  private def codegenSoFar(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1000000)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -109,14 +132,7 @@ object Bench {
         try materialize(Tables(spark, sfDir, "region"))
         catch { case _: Throwable => () }
         SparkEntry.warmArtifactBuilders(sfDir).map { case (nm, build) =>
-          val t0 = System.nanoTime()
-          try {
-            build(spark)
-            nm -> Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $nm failed: ${e.getMessage}")
-            nm -> None
-          }
+          timeRow(nm)(build(spark))
         }
       } else {
         try SparkEntry.warmSessionArtifacts(spark, sfDir)
@@ -124,7 +140,8 @@ object Bench {
           System.err.println(s"[bench] artifact warm failed: ${e.getMessage}") }
         Seq.empty
       }
-    // Warmup: run everything once untimed (codegen + classloading + IO cache).
+    // Warmup: run everything once untimed (codegen + classloading + IO
+    // cache). The classes it compiles stay cached for the timed rounds.
     names.foreach { n =>
       try materialize(SparkEntry.queries(n)(spark, sfDir))
       catch { case e: Throwable =>
@@ -157,7 +174,7 @@ object Bench {
     // targeted timing.
     val artBuilders =
       if (only.isEmpty) SparkEntry.roundSweepBuilders(sfDir) else Seq.empty
-    val timed: Seq[(String, Option[Double])] = (1 to repeats).flatMap { _ =>
+    val timed = (1 to repeats).flatMap { round =>
       // Cache lifecycle (ADVICE/VERDICT r3): drop persisted intermediates
       // (LSH candidate sets) AND the session pair sweep BETWEEN rounds.
       // Within a round, queries that share machinery (q25/q35/q61/q66
@@ -168,27 +185,27 @@ object Bench {
       // survives the run.
       spark.catalog.clearCache()
       SparkEntry.clearSessionSweeps()
-      val art: Seq[(String, Option[Double])] = artBuilders.map {
-        case (nm, build) =>
-          val t0 = System.nanoTime()
-          try {
-            build(spark)
-            nm -> Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] $nm failed: ${e.getMessage}")
-            nm -> None
-          }
+      // Codegen accounting: a steady round compiles (almost) nothing, so
+      // every compile is named with the row that paid it.
+      val (k0, ms0) = codegenSoFar()
+      val compiled = Seq.newBuilder[String]
+      def row(nm: String)(body: => Unit): (String, Option[Double]) = {
+        val before = codegenSoFar()._1
+        val r = timeRow(nm)(body)
+        val k = codegenSoFar()._1 - before
+        if (k > 0) compiled += s"$nm($k)"
+        r
       }
-      art ++ names.map { n =>
-        val t0 = System.nanoTime()
-        try {
-          materialize(SparkEntry.queries(n)(spark, sfDir))
-          n -> Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $n failed: ${e.getMessage}")
-          n -> None
-        }
-      }
+      val rows =
+        artBuilders.map { case (nm, build) => row(nm)(build(spark)) } ++
+          names.map(n =>
+            row(n)(materialize(SparkEntry.queries(n)(spark, sfDir))))
+      val (k1, ms1) = codegenSoFar()
+      val who = compiled.result()
+      System.err.println(s"[bench] round $round codegen: ${k1 - k0} " +
+        s"compiles, ${ms1 - ms0} ms" +
+        (if (who.isEmpty) "" else who.mkString("; in ", " ", "")))
+      rows
     }
     spark.catalog.clearCache()
     SparkEntry.clearSessionSweeps()

@@ -69,6 +69,21 @@ object Session {
       // events.ts is TIMESTAMP(NANOS); Spark can only read it as bigint.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Generated-code cache sized to the session's working set: one
+      // entry per MB of max heap (~3,000 in a 3 GB JVM, 7-8k in an 8 GB
+      // one). Spark's default of 100 is below one round's distinct
+      // generated classes, so every re-run of a plan recompiled through
+      // Janino and re-JITted: Bench's warm-up pass alone holds 4,601
+      // units, and at sf0.01 a timed round compiled ~7,000 at the
+      // default against 107-169 uncapped (rounds 177-216 s -> 85-97 s);
+      // a perfbench pass 2 recompiled ~350 of its first pass's units.
+      // A resident entry costs ~105 KB of heap (post-GC heap 413 ->
+      // 927 MB for ~4.9k units), so the worst case stays near 10% of the
+      // heap. Guava splits maximumSize across 4 segments, hence the
+      // headroom over the working set. A static conf: CodeGenerator reads
+      // it once, when the first session initializes the class.
+      .config("spark.sql.codegen.cache.maxEntries",
+        (Runtime.getRuntime.maxMemory >> 20).toString)
 
   /** The parsed-Int form (ADVICE r15): callers that validate
     * SPARK_GRAFT_CPUS themselves (Bench's graded-run guard) thread the

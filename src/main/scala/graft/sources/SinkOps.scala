@@ -96,10 +96,6 @@ object SinkOps {
     } finally pinned.unpersist(blocking = false)
   }
 
-  /** Recover an interrupted prior swap so readers below always see the
-    * true table state: a parked `path__old` with NO live table is the
-    * sole surviving copy and is restored; alongside a live table it is
-    * the stale leftover of a COMPLETED swap and is deleted. */
   /** Small-file compaction — the table-maintenance half of an
     * append-heavy sink: incremental loads and streaming micro-batches
     * leave a table as thousands of KB-sized parquet files, and at scale
@@ -133,6 +129,10 @@ object SinkOps {
     }
   }
 
+  /** Recover an interrupted prior swap so readers below always see the
+    * true table state: a parked `path__old` with NO live table is the
+    * sole surviving copy and is restored; alongside a live table it is
+    * the stale leftover of a COMPLETED swap and is deleted. */
   private def recoverInterruptedSwap(fs: org.apache.hadoop.fs.FileSystem,
                                      path: String): Unit = {
     val target = new Path(path)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
@@ -31,15 +32,33 @@ object Sources {
 
   /** S3: CSV whose header sits below `skip` junk preamble lines — the
     * `pandas.read_excel(header=2)` equivalent (ref :141). Reads lines,
-    * drops the preamble by file position, parses the remainder as CSV.
-    * Per-file by construction (zipWithIndex pins line order). */
+    * drops the preamble by line position (zipWithIndex pins line order),
+    * parses the remainder as CSV. Line positions number a whole dataset,
+    * so a directory or glob of several files is read file by file —
+    * each drops its own preamble and header — and the files' frames are
+    * unioned by column name. Hidden files (`_`/`.` prefixed) are skipped
+    * as Spark's file sources skip them; a subdirectory is refused. */
   def csvWithHeaderOffset(spark: SparkSession, path: String,
                           skip: Int): DataFrame = {
     import spark.implicits._
-    val lines: Dataset[String] = spark.read.textFile(path)
-    val body = lines.rdd.zipWithIndex()
-      .filter { case (_, i) => i >= skip }.map(_._1)
-    spark.read.option("header", "true").csv(spark.createDataset(body))
+    def oneFile(file: String): DataFrame = {
+      val lines: Dataset[String] = spark.read.textFile(file)
+      val body = lines.rdd.zipWithIndex()
+        .filter { case (_, i) => i >= skip }.map(_._1)
+      spark.read.option("header", "true").csv(spark.createDataset(body))
+    }
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq
+                     else Seq(st))
+      .filterNot(st => st.getPath.getName.matches("[_.].*"))
+    require(files.forall(_.isFile),
+      s"csvWithHeaderOffset: $path holds a subdirectory; pass files or " +
+        "one flat directory")
+    if (files.size <= 1) oneFile(path)
+    else files.map(_.getPath.toString).sorted.map(oneFile)
+      .reduce(_ unionByName _)
   }
 
   /** S1/S2: World-Bank-style JSON envelope `[ {meta}, [ {row}, ... ] ]`

@@ -70,6 +70,25 @@ class EtlGoldenSpec extends AnyFunSuite {
       (80.5, "ESP", 2019), (95.0, "FRA", 2018)))
   }
 
+  test("S3: header offset drops every file's preamble in a directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_offset")
+    def write(name: String, lines: String*): Unit =
+      java.nio.file.Files.writeString(dir.resolve(name),
+        lines.map(_ + "\n").mkString)
+    write("a.csv", "Title line A", "Source: x", "country,year",
+      "DEU,2018", "FRA,2019")
+    // Columns in another order: the files' frames union by name.
+    write("b.csv", "Title line B", "Source: y", "year,country", "2018,ESP")
+    write("_SUCCESS")
+    def read(p: String): Seq[(String, String)] =
+      Sources.csvWithHeaderOffset(spark, p, 2)
+        .select("country", "year").as[(String, String)].collect()
+        .sorted.toSeq
+    assert(read(dir.toString) ==
+      Seq(("DEU", "2018"), ("ESP", "2018"), ("FRA", "2019")))
+    assert(read(dir.resolve("b.csv").toString) == Seq(("ESP", "2018")))
+  }
+
   test("immigration facts: ':' marker, ISO2->ISO3, join, per-100k rate") {
     val raw = Sources.csvAllString(spark, fixture("immigration.csv"))
     val rows = EtlFlow.immigration(raw, iso2to3, populationFacts)
