@@ -186,14 +186,14 @@ object Bench {
       spark.catalog.clearCache()
       SparkEntry.clearSessionSweeps()
       // Codegen accounting: a steady round compiles (almost) nothing, so
-      // every compile is named with the row that paid it.
+      // every compile is named with the row that paid it, costliest first.
       val (k0, ms0) = codegenSoFar()
-      val compiled = Seq.newBuilder[String]
+      val compiled = Seq.newBuilder[(String, Long, Long)]
       def row(nm: String)(body: => Unit): (String, Option[Double]) = {
-        val before = codegenSoFar()._1
+        val (kb, msb) = codegenSoFar()
         val r = timeRow(nm)(body)
-        val k = codegenSoFar()._1 - before
-        if (k > 0) compiled += s"$nm($k)"
+        val (ka, msa) = codegenSoFar()
+        if (ka > kb) compiled += ((nm, ka - kb, msa - msb))
         r
       }
       val rows =
@@ -201,7 +201,8 @@ object Bench {
           names.map(n =>
             row(n)(materialize(SparkEntry.queries(n)(spark, sfDir))))
       val (k1, ms1) = codegenSoFar()
-      val who = compiled.result()
+      val who = compiled.result().sortBy { case (nm, k, ms) => (-ms, -k, nm) }
+        .map { case (nm, k, ms) => s"$nm($k, $ms ms)" }
       System.err.println(s"[bench] round $round codegen: ${k1 - k0} " +
         s"compiles, ${ms1 - ms0} ms" +
         (if (who.isEmpty) "" else who.mkString("; in ", " ", "")))

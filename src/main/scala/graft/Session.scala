@@ -84,6 +84,16 @@ object Session {
       // it once, when the first session initializes the class.
       .config("spark.sql.codegen.cache.maxEntries",
         (Runtime.getRuntime.maxMemory >> 20).toString)
+      // The cache above hits only on byte-identical source, and by default
+      // whole-stage codegen names each class after its stage id, which
+      // under AQE differs between runs of one plan, so one pipeline planned
+      // at another id compiled again: perfbench's etl_load first pass
+      // compiled 345-347 classes with ids in the name and 228 without
+      // (Janino time -34%), llm_session's 288 and 252, and etl_load's
+      // retained heap fell ~3 MB. Engine probes keep the other per-run
+      // name out of the source: they never plan a codegen'd limit
+      // (BaseLimitExec numbers its counter from a JVM-global id).
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** The parsed-Int form (ADVICE r15): callers that validate
     * SPARK_GRAFT_CPUS themselves (Bench's graded-run guard) thread the

@@ -232,8 +232,10 @@ object GraphOps {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val seeded = deg.select(col("node"), col("outdeg"))
       .withColumn("is_seed", isSeed(col("node")))
-    require(nNodes == 0 ||
-      seeded.filter(col("is_seed")).limit(1).count() > 0,
+    // isEmpty plans its limit at the root (CollectLimitExec), outside
+    // whole-stage codegen: a limit inside a codegen stage names its
+    // counter from a JVM-global id, so its code would differ every run.
+    require(nNodes == 0 || !seeded.filter(col("is_seed")).isEmpty,
       "personalizedPageRank: empty seed set — every rank would be 0")
     val teleport = (15L * scale) / 100L
     val bcast: DataFrame => DataFrame =

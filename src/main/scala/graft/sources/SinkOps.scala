@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
 
 import graft.operators.RelationalOps
 
@@ -58,18 +59,21 @@ object SinkOps {
     * rewrite identical rows, deletes find nothing), so a crashed-and-
     * retried apply converges. Same SINGLE-WRITER caveat as the load.
     *
-    * Precondition: `changes` carries at most ONE row per key — true of
-    * any snapshot diff (q58's shape) by construction. Two upserts of the
-    * same key would BOTH land in the table; compact multi-version change
-    * feeds with [[graft.operators.RelationalOps.dedupFirst]] (latest
-    * version first) before applying. */
+    * Precondition, checked: `changes` carries at most ONE row per key —
+    * true of any snapshot diff (q58's shape) by construction. Two upserts
+    * of one key would both land in the table and break its key; compact
+    * multi-version change feeds with
+    * [[graft.operators.RelationalOps.dedupFirst]] (latest version first)
+    * before applying. A key with a NULL component is refused too: it
+    * equals no stored key, so its delete would remove nothing and its
+    * upsert would append a fresh copy on every apply. */
   def applyCdc(spark: SparkSession, changes: DataFrame, path: String,
                keys: Seq[String], opCol: String): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverInterruptedSwap(fs, path)
     require(fs.exists(new Path(path)), s"applyCdc: no snapshot at $path")
-    // Pin the change feed before validating it (ADVICE r5): the bad-op
-    // check below is a separate action, and without materialization a
+    // Pin the change feed before validating it (ADVICE r5): the check
+    // below is a separate action, and without materialization a
     // non-deterministic feed (freshly sampled, or re-read from a mutating
     // source) could pass validation yet hand DIFFERENT rows to the write.
     // persist() makes both actions read one materialization (and saves
@@ -80,14 +84,27 @@ object SinkOps {
       // Fail FAST on ops outside {upsert, delete} (incl. NULL): without the
       // check a misspelled/differently-cased op would drop its key from the
       // snapshot (every touched key is anti-joined out) while re-inserting
-      // nothing — silent data loss instead of an error.
-      val badOp = pinned.filter(org.apache.spark.sql.functions.not(
-          org.apache.spark.sql.functions.coalesce(
-            pinned(opCol).isin("upsert", "delete"),
-            org.apache.spark.sql.functions.lit(false))))
-        .limit(1).count()
-      require(badOp == 0,
-        s"applyCdc: $opCol contains values outside {upsert, delete}")
+      // nothing — silent data loss instead of an error. One aggregate per
+      // key; the first offending key found names the error. head(1) plans
+      // its limit at the root, outside whole-stage codegen: a codegen'd
+      // limit names its counter from a JVM-global id, so every apply
+      // would compile new code.
+      val okOp = coalesce(pinned(opCol).isin("upsert", "delete"), lit(false))
+      val nullKey = keys.map(col(_).isNull).reduce(_ || _)
+      pinned.groupBy(keys.map(pinned(_)): _*)
+        .agg(count(lit(1)).as("__rows"), count(when(!okOp, 1)).as("__bad"))
+        .filter(col("__bad") > 0 || nullKey || col("__rows") > 1)
+        .head(1).foreach { r =>
+          val key = keys.map(k => s"$k=${r.getAs[Any](k)}").mkString(", ")
+          require(r.getAs[Long]("__bad") == 0,
+            s"applyCdc: $opCol contains values outside {upsert, delete} " +
+              s"(key $key)")
+          require(!keys.exists(k => r.isNullAt(r.fieldIndex(k))),
+            s"applyCdc: key ($key) has a NULL component")
+          throw new IllegalArgumentException(
+            s"applyCdc: key ($key) appears ${r.getAs[Long]("__rows")} " +
+              "times; compact the feed to one row per key")
+        }
       val existing = spark.read.parquet(path)
       val touched = pinned.select(keys.map(pinned(_)): _*).distinct()
       val survivors = existing.join(touched, keys, "left_anti")

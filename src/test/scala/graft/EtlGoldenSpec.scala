@@ -197,6 +197,32 @@ class EtlGoldenSpec extends AnyFunSuite {
     }
   }
 
+  test("applyCdc refuses a feed with two rows for one key, or a NULL key," +
+    " and leaves the snapshot untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_keys").toString
+    val path = s"$dir/snap"
+    val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
+    v1.write.parquet(path)
+    def snap(): Seq[(Long, String)] =
+      spark.read.parquet(path).as[(Long, String)].collect().sortBy(_._1).toSeq
+    // Applied, both upserts would land: id 2 twice in the table.
+    val twice = Seq((2L, "x", "upsert"), (2L, "y", "upsert"),
+      (3L, "c", "upsert")).toDF("id", "payload", "op")
+    val dup = intercept[IllegalArgumentException] {
+      SinkOps.applyCdc(spark, twice, path, Seq("id"), "op")
+    }
+    assert(dup.getMessage.contains("key (id=2) appears 2 times"),
+      dup.getMessage)
+    val nullKey = Seq((null.asInstanceOf[java.lang.Long], "z", "upsert"))
+      .toDF("id", "payload", "op")
+    val nul = intercept[IllegalArgumentException] {
+      SinkOps.applyCdc(spark, nullKey, path, Seq("id"), "op")
+    }
+    assert(nul.getMessage.contains("key (id=null) has a NULL component"),
+      nul.getMessage)
+    assert(snap() == Seq((1L, "a"), (2L, "b")))
+  }
+
   test("compact: many small files -> few, content read-invisible, rerun no-op") {
     val dir = java.nio.file.Files.createTempDirectory("compact").toString
     val path = s"$dir/t"
