@@ -24,7 +24,7 @@ object Bench {
     * folded with bit_xor (overflow-free under ANSI, unlike sum). Nothing
     * upstream can be pruned because every column feeds the hash; the result
     * is one Long on the driver. */
-  private def materialize(df: DataFrame): Unit = {
+  private[graft] def materialize(df: DataFrame): Unit = {
     val cols = df.columns.map(c => col(c).cast("string"))
     df.select(xxhash64(cols: _*).as("h")).agg(bit_xor(col("h"))).collect()
   }
@@ -90,6 +90,18 @@ object Bench {
             "at the local[4] default; numbers are not comparable to the " +
             "graded local[32] history")
         4
+    }
+    // BENCH_REPEATS must parse too, before the session starts: the rounds
+    // it counts run only after the warm tier and the untimed warm-up
+    // pass, so a malformed value fails here instead of after that work.
+    val repeats: Int = sys.env.get("BENCH_REPEATS").map(_.trim) match {
+      case Some(v) => v.toIntOption.map(_ max 1).getOrElse {
+        System.err.println(
+          s"[bench] BENCH_REPEATS='$v' is not an integer — refusing to " +
+            "run with an ambiguous round count")
+        sys.exit(2)
+      }
+      case None => 3
     }
     // Mutual exclusion with Verify and the sweep-running test suites
     // (VERDICT r14 #6): a concurrent JVM sweeping /tmp exports or the
@@ -160,8 +172,7 @@ object Bench {
     // regression from measurement noise (VERDICT r11 #1). A run that
     // throws contributes NO time — a query with zero successful runs is
     // reported only under "failures" so the driver can tell a broken
-    // query from a fast one.
-    val repeats = sys.env.getOrElse("BENCH_REPEATS", "3").toInt max 1
+    // query from a fast one. The round count is `repeats`, parsed above.
     // Artifact attribution (VERDICT r16 #2): on full-surface runs each
     // round PRE-BUILDS the per-round session sweeps, timed as their own
     // "artifact:*" rows in the queries map — the per-round rebuild is

@@ -47,62 +47,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 1, "minhash_sig takes exactly 1 argument")
         MinHashSig(args.head)
       }))
-    // fused shingle+minhash kernels: (text, n-literal)
-    def nGram(name: String, word: Boolean)(args: Seq[Expression]) = {
+    // fused n-gram kernels: (text, n-literal)
+    def nGram(name: String, mk: (Expression, Int) => Expression)
+             (args: Seq[Expression]): Expression = {
       require(args.length == 2, s"$name takes exactly 2 arguments")
       val n = args(1) match {
         case Literal(v: Int, IntegerType) if v > 0 => v
         case other => throw new IllegalArgumentException(
           s"$name: n must be a positive int literal, got $other")
       }
-      NGramMinHashSig(args.head, n, word)
+      mk(args.head, n)
     }
     ext.injectFunction((
       new FunctionIdentifier("char_minhash_sig"),
       new ExpressionInfo(classOf[NGramMinHashSig].getName, "char_minhash_sig"),
-      (args: Seq[Expression]) => nGram("char_minhash_sig", word = false)(args)))
+      nGram("char_minhash_sig", NGramMinHashSig(_, _, word = false))))
     ext.injectFunction((
       new FunctionIdentifier("word_minhash_sig"),
       new ExpressionInfo(classOf[NGramMinHashSig].getName, "word_minhash_sig"),
-      (args: Seq[Expression]) => nGram("word_minhash_sig", word = true)(args)))
-    def nGramSet(name: String, word: Boolean)(args: Seq[Expression]) = {
-      require(args.length == 2, s"$name takes exactly 2 arguments")
-      val n = args(1) match {
-        case Literal(v: Int, IntegerType) if v > 0 => v
-        case other => throw new IllegalArgumentException(
-          s"$name: n must be a positive int literal, got $other")
-      }
-      NGramHashSet(args.head, n, word)
-    }
+      nGram("word_minhash_sig", NGramMinHashSig(_, _, word = true))))
     ext.injectFunction((
       new FunctionIdentifier("char_shingle_hashset"),
       new ExpressionInfo(classOf[NGramHashSet].getName,
         "char_shingle_hashset"),
-      (args: Seq[Expression]) =>
-        nGramSet("char_shingle_hashset", word = false)(args)))
+      nGram("char_shingle_hashset", NGramHashSet(_, _, word = false))))
     ext.injectFunction((
       new FunctionIdentifier("word_shingle_hashset"),
       new ExpressionInfo(classOf[NGramHashSet].getName,
         "word_shingle_hashset"),
-      (args: Seq[Expression]) =>
-        nGramSet("word_shingle_hashset", word = true)(args)))
-    def minH(name: String, word: Boolean)(args: Seq[Expression]) = {
-      require(args.length == 2, s"$name takes exactly 2 arguments")
-      val n = args(1) match {
-        case Literal(v: Int, IntegerType) if v > 0 => v
-        case other => throw new IllegalArgumentException(
-          s"$name: n must be a positive int literal, got $other")
-      }
-      WindowMinHash32(args.head, n, word)
-    }
+      nGram("word_shingle_hashset", NGramHashSet(_, _, word = true))))
     ext.injectFunction((
       new FunctionIdentifier("char_min_hash32"),
       new ExpressionInfo(classOf[WindowMinHash32].getName, "char_min_hash32"),
-      (args: Seq[Expression]) => minH("char_min_hash32", word = false)(args)))
+      nGram("char_min_hash32", WindowMinHash32(_, _, word = false))))
     ext.injectFunction((
       new FunctionIdentifier("word_min_hash32"),
       new ExpressionInfo(classOf[WindowMinHash32].getName, "word_min_hash32"),
-      (args: Seq[Expression]) => minH("word_min_hash32", word = true)(args)))
+      nGram("word_min_hash32", WindowMinHash32(_, _, word = true))))
     ext.injectFunction((
       new FunctionIdentifier("sorted_intersect_count"),
       new ExpressionInfo(classOf[SortedIntersectCount].getName,

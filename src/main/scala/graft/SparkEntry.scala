@@ -8283,8 +8283,8 @@ object SparkEntry {
   )
 
   /** ANN hyperplane count (16 buckets over the 500-vector corpus) — the
-    * default geometry; see [[graft.operators.VectorOps.planesForCorpus]]
-    * for the corpus-size-driven bucket-count math at real scale. */
+    * default geometry; see [[graft.operators.VectorOps.sizedPlanes]]
+    * for the corpus-size-driven plane count at real scale. */
   private val AnnPlanes = 4
 
   /** q139's phrase workload — ONE list shared by the Spark query and its
@@ -8299,8 +8299,9 @@ object SparkEntry {
     (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d))
 
   /** IVF geometry for q34 — cell count, Lloyd training iterations, and
-    * probe depth for the test corpus; [[graft.operators.VectorOps
-    * .cellsForCorpus]] documents the scale math.
+    * probe depth for the test corpus. At real scale K = N / targetCell
+    * cells keeps the per-cell scan bounded; 64-dim float centroids are
+    * 256 B each, so even 1M cells stay broadcastable.
     *
     * Probe depth is 5 of 8 cells because the SYNTHETIC CORPUS CAPS IVF
     * RECALL (measured r6, SCALE.md ANN table): the embeddings are
@@ -9364,10 +9365,9 @@ object SparkEntry {
     * probe path reads it. Driver-held
     * ([[graft.operators.VectorOps.LocalCentroids]]): K×dims floats, the
     * FAISS/MLlib regime, making assignment a map-side expression.
-    * Training runs [[graft.operators.VectorOps.kmeansTrainLocal]] — one
-    * combinable aggregate + K-row collect per Lloyd pass (spec-pinned
-    * equal to the distributed [[graft.operators.VectorOps.kmeansTrain]]
-    * loop). */
+    * Training runs [[graft.operators.VectorOps.kmeansTrainArrays]] over
+    * one bounded collect (spec-pinned equal to the distributed
+    * [[graft.operators.VectorOps.kmeansTrain]] loop). */
   private def trainedCentroids(s: SparkSession, dir: String,
                                cells: Int, iters: Int): Vec.LocalCentroids =
     SessionMemo(Round, s, dir, s"ivf:$cells:$iters") {

@@ -621,7 +621,7 @@ object AnalyticsOps {
     // DRIVER-SIDE on BigInt in the exact same pₖ(s) = (Σₜ c(s,t) ·
     // pₖ₋₁(t)) div out(s) arithmetic (floor division on nonnegative
     // integers — BigInt / replicates `div`; Σ n·p fits trivially). The
-    // bounded collect is the kmeansTrainLocal class: states² rows,
+    // bounded collect is the IVF centroid-training class: states² rows,
     // guarded, with the distributed loop kept as the fallback for a
     // state space past the guard.
     val outDeg = pairs.groupBy(col("from_state"))
@@ -1104,50 +1104,23 @@ object AnalyticsOps {
 
   /** Association rules over unordered baskets (Agrawal & Srikant's
     * support/confidence/lift frame, pair rules only — the market-basket
-    * "customers who bought X also bought Y"): for every co-occurring
-    * item pair above `minCount` baskets, both directed rules a→b and
-    * b→a with support = c_ab/N, confidence = c_ab/c_a, and
-    * lift = c_ab·N/(c_a·c_b). [[graft.operators.TextOps]]'
-    * collocationLift ranks ORDERED bigrams inside a sequence; this
-    * ranks UNORDERED co-membership of a set — the two halves of
-    * co-occurrence mining.
+    * "customers who bought X also bought Y"): every co-occurring item
+    * pair expands to both directed rules a→b and b→a with support =
+    * c_ab/N, confidence = c_ab/c_a, and lift = c_ab·N/(c_a·c_b).
+    * [[graft.operators.TextOps]]' collocationLift ranks ORDERED bigrams
+    * inside a sequence; this ranks UNORDERED co-membership of a set —
+    * the two halves of co-occurrence mining.
     *
-    * Scale: membership is deduped to distinct (basket, item) first, so
-    * pair fan-out is per-basket items², bounded by basket width — the
-    * [[audienceOverlap]] posture, never corpus². Pair counts and item
-    * counts are combinable; N travels as a 1-row broadcast; every ratio
-    * is ONE exact-int double division, so rule metrics hash-verify.
-    * Output: (antecedent, consequent, n_pair, n_ante, support,
-    * confidence, lift), minCount-pruned BEFORE the rule expansion so
-    * the long tail of singleton pairs never doubles. */
-  def associationRules(df: DataFrame, basket: Column, item: Column,
-                       minCount: Long): DataFrame = {
-    // Persisted: four plan branches read the deduped membership (the
-    // basket count, the item marginals, and BOTH self-join aliases —
-    // whose canonicalized subtrees differ, so ReusedExchange cannot
-    // share them); uncached, each branch replays the scan + distinct
-    // shuffle. Session-cache lifecycle (plan-keyed; the harness clears
-    // between rounds), the q109 pair-scan posture.
-    val m = df.select(basket.as("__b"), item.as("__i"))
-      .filter(col("__b").isNotNull && col("__i").isNotNull).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = m.select(col("__b")).distinct().agg(count(lit(1)).as("__n"))
-    val ic = m.groupBy(col("__i")).agg(count(lit(1)).as("__ci"))
-    val pairs = m.as("x").join(m.as("y"),
-        col("x.__b") === col("y.__b") && col("x.__i") < col("y.__i"))
-      .groupBy(col("x.__i").as("__a"), col("y.__i").as("__c"))
-      .agg(count(lit(1)).as("__cab"))
-      .filter(col("__cab") >= minCount)
-    rulesFromCooccurrence(pairs, n, ic)
-  }
-
-  /** [[associationRules]]' scoring tail over an ALREADY-COUNTED
-    * canonical pair table (`__a < __c`, `__cab` = co-basket count,
-    * min-count already applied) — the entry point for callers whose
-    * co-occurrence counts live in a maintained artifact (the bucketed
-    * co-purchase table) instead of being re-derived by a per-query
-    * self-join. `n` is the 1-row basket count; `ic` the per-item
-    * basket-membership marginals. */
+    * Input is an ALREADY-COUNTED canonical pair table (`__a < __c`,
+    * `__cab` = co-basket count, min-count already applied — so the long
+    * tail of singleton pairs never doubles), the form a maintained
+    * co-occurrence artifact (the bucketed co-purchase table) serves
+    * without a per-query self-join. `n` is the 1-row basket count
+    * (`__n`); `ic` the per-item basket-membership marginals (`__i`,
+    * `__ci`). N travels as a 1-row broadcast; every ratio is ONE
+    * exact-int double division, so rule metrics hash-verify. Output:
+    * (antecedent, consequent, n_pair, n_ante, support, confidence,
+    * lift). */
   def rulesFromCooccurrence(pairs: DataFrame, n: DataFrame,
                             ic: DataFrame): DataFrame = {
     val rules = pairs.select(col("__a"), col("__c"), col("__cab"))

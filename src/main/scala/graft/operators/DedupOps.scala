@@ -68,24 +68,6 @@ object DedupOps {
       stack(Seq(lit(Bands)) ++ bandCols: _*).as(Seq("band", "band_hash")))
   }
 
-  /** Near-dup pairs: LSH candidates (same band hash in any band), verified
-    * with exact Jaccard over the shingle sets, thresholded. `shingles` is
-    * the shingle EXPRESSION over `docs`' columns — passed as an
-    * expression (not a precomputed column) so the verify stage can apply
-    * it after its candidate semi-join instead of paying two more
-    * whole-corpus evaluations. Multiplicity is fine (prefer the cheaper
-    * `*ShinglesMulti` forms): the signature stage is duplicate-invariant
-    * (min over duplicates == min over distinct) and the verify stage
-    * dedupes after hashing, so distinct-form and multi-form inputs give
-    * identical pairs — the multi form just skips a per-row hash-set
-    * build on the full-corpus scan.
-    *
-    * Cache lifecycle: the returned plan holds a persisted candidate set
-    * (see [[nearDupPairsTracked]]) that lives until the session ends or
-    * the caller releases it. One-shot consumers should prefer
-    * [[withNearDupPairs]], which unpersists deterministically; long-lived
-    * sessions sweeping many corpora with THIS entry point should
-    * `spark.catalog.clearCache()` between sweeps (ADVICE r3). */
   /** Fused-kernel pair for [[nearDupPairsTracked]]: `sig` replaces the
     * composable shingle→minhash pipeline on the full-corpus scan, and
     * `hashedSet` replaces the shingle→hash32→distinct build on candidate
@@ -105,6 +87,24 @@ object DedupOps {
     call_function("word_minhash_sig", text, lit(n)),
     call_function("word_shingle_hashset", text, lit(n)))
 
+  /** Near-dup pairs: LSH candidates (same band hash in any band), verified
+    * with exact Jaccard over the shingle sets, thresholded. `shingles` is
+    * the shingle EXPRESSION over `docs`' columns — passed as an
+    * expression (not a precomputed column) so the verify stage can apply
+    * it after its candidate semi-join instead of paying two more
+    * whole-corpus evaluations. Multiplicity is fine (prefer the cheaper
+    * `*ShinglesMulti` forms): the signature stage is duplicate-invariant
+    * (min over duplicates == min over distinct) and the verify stage
+    * dedupes after hashing, so distinct-form and multi-form inputs give
+    * identical pairs — the multi form just skips a per-row hash-set
+    * build on the full-corpus scan.
+    *
+    * Cache lifecycle: the returned plan holds a persisted candidate set
+    * (see [[nearDupPairsTracked]]) that lives until the session ends or
+    * the caller releases it. One-shot consumers should prefer
+    * [[withNearDupPairs]], which unpersists deterministically; long-lived
+    * sessions sweeping many corpora with THIS entry point should
+    * `spark.catalog.clearCache()` between sweeps (ADVICE r3). */
   def nearDupPairs(docs: DataFrame, id: String, shingles: Column,
                    threshold: Double,
                    kernels: Option[NearDupKernels] = None): DataFrame =
@@ -284,11 +284,6 @@ object DedupOps {
         call_function("simhash60", transform(words, w => TextOps.hash60(w)))
           .as("simhash"))
 
-  /** [[simhash]] over single-space-tokenized text via the fused
-    * [[graft.functions.TokenHash60Array]] kernel — no interpreted
-    * per-token lambda on the corpus scan; spec-pinned equal to the
-    * composable form. (split always yields ≥1 token, so the empty-array
-    * filter of the generic path is vacuous here.) */
   /** Incremental near-dup verdict: admit or reject an INCOMING batch
     * against an EXISTING corpus without ever enumerating
     * existing×existing candidates — the production corpus-refresh shape
@@ -314,33 +309,12 @@ object DedupOps {
     *
     * Cache lifecycle (same contract as [[nearDupPairs]]): the returned
     * plan holds three persisted intermediates (delta bands, candidates,
-    * candidate-doc hash sets). One-shot consumers should prefer
-    * [[withIncrementalVerdict]], which unpersists in a finally; sessions
-    * holding the plain form release via the [[incrementalVerdictTracked]]
-    * handles or `spark.catalog.clearCache()`. */
+    * candidate-doc hash sets), released by `spark.catalog.clearCache()`
+    * (the CacheManager keys them by canonicalized plan, so
+    * re-invocations reuse rather than pile up). */
   def incrementalVerdict(existing: DataFrame, incoming: DataFrame,
                          id: String, kernels: NearDupKernels,
-                         threshold: Double): DataFrame =
-    incrementalVerdictTracked(existing, incoming, id, kernels, threshold)._1
-
-  /** Loan-pattern wrapper owning the cache lifecycle ([[withNearDupPairs]]
-    * twin): `use` must fully consume the plan; nothing stays persisted. */
-  def withIncrementalVerdict[T](existing: DataFrame, incoming: DataFrame,
-                                id: String, kernels: NearDupKernels,
-                                threshold: Double)
-                               (use: DataFrame => T): T = {
-    val (verdict, cached) =
-      incrementalVerdictTracked(existing, incoming, id, kernels, threshold)
-    try use(verdict)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[incrementalVerdict]] plus the persisted handles for lifecycle
-    * control: (verdict, cached plans to unpersist when done). */
-  def incrementalVerdictTracked(existing: DataFrame, incoming: DataFrame,
-                                id: String, kernels: NearDupKernels,
-                                threshold: Double)
-  : (DataFrame, Seq[DataFrame]) = {
+                         threshold: Double): DataFrame = {
     def sigsOf(d: DataFrame): DataFrame =
       d.select(col(id), kernels.sig.as("__sig"))
         .filter(col("__sig").isNotNull)
@@ -386,13 +360,12 @@ object DedupOps {
           .cast("double"))
       .filter(col("__j") >= threshold)
       .select(col("in_id"), col("other_id"))
-    val verdict = incoming.select(col(id))
+    incoming.select(col(id))
       .join(rejectors, col(id) === col("in_id"), "left")
       .groupBy(col(id))
       .agg(max(when(col("in_id").isNull, 1).otherwise(0)).as("keep"),
         count(col("other_id")).as("n_dups"),
         min(col("other_id")).as("blame_id"))
-    (verdict, Seq(bIn, cand, candDocs))
   }
 
   /** Blocked fuzzy candidate generation for entity resolution: join
@@ -495,38 +468,13 @@ object DedupOps {
     * merge per candidate pair); output is ORIENTED: (contained_id,
     * container_id) by set size, ties by id — deterministic under any
     * partitioning. Same cache lifecycle notes as [[nearDupPairs]]:
-    * this plain entry point leaves its three persisted intermediates to
-    * the CacheManager (keyed by canonicalized plan, so re-invocations
-    * reuse rather than pile up); use [[withContainmentPairs]] or
-    * [[containmentPairsTracked]] for a deterministic unpersist. */
+    * the three persisted intermediates (bands, candidates, candidate
+    * docs) stay with the CacheManager (keyed by canonicalized plan, so
+    * re-invocations reuse rather than pile up) until
+    * `spark.catalog.clearCache()`. */
   def containmentPairs(docs: DataFrame, id: String,
                        kernels: NearDupKernels, threshold: Double,
-                       rowsPerBand: Int = 2): DataFrame =
-    containmentPairsTracked(docs, id, kernels, threshold, rowsPerBand)._1
-
-  /** Loan-pattern twin of [[withNearDupPairs]] for the containment pass:
-    * hands the oriented-pairs plan to `use`, then unpersists the band /
-    * candidate / candidate-doc caches in a finally — no CacheManager
-    * entry survives the call. `use` must fully consume the plan; a
-    * DataFrame leaked out and executed later recomputes uncached
-    * (correct, just slower). */
-  def withContainmentPairs[T](docs: DataFrame, id: String,
-                              kernels: NearDupKernels, threshold: Double,
-                              rowsPerBand: Int = 2)
-                             (use: DataFrame => T): T = {
-    val (pairs, cached) =
-      containmentPairsTracked(docs, id, kernels, threshold, rowsPerBand)
-    try use(pairs)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[containmentPairs]] plus the persisted intermediate handles
-    * (bands, candidates, candidate docs) for lifecycle control, mirroring
-    * [[nearDupPairsTracked]]. */
-  def containmentPairsTracked(docs: DataFrame, id: String,
-                              kernels: NearDupKernels, threshold: Double,
-                              rowsPerBand: Int = 2)
-  : (DataFrame, Seq[DataFrame]) = {
+                       rowsPerBand: Int = 2): DataFrame = {
     require(K % rowsPerBand == 0 && rowsPerBand >= 1,
       s"rowsPerBand $rowsPerBand must divide K=$K")
     val nb = K / rowsPerBand
@@ -572,7 +520,7 @@ object DedupOps {
     // Orientation: the smaller set is the contained side; exact size
     // ties keep the candidate order (id_a < id_b) — a total order.
     val aContained = col("__la") < col("__lb") || (col("__la") === col("__lb"))
-    val oriented = verified.select(
+    verified.select(
       when(aContained, col("id_a")).otherwise(col("id_b"))
         .as("contained_id"),
       when(aContained, col("id_b")).otherwise(col("id_a"))
@@ -580,7 +528,6 @@ object DedupOps {
       col("containment"),
       least(col("__la"), col("__lb")).as("size_contained"),
       greatest(col("__la"), col("__lb")).as("size_container"))
-    (oriented, Seq(bands, candidates, candDocs))
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo, "The merge/purge
@@ -630,6 +577,11 @@ object DedupOps {
         col("__p.b").as("id_b"), col("__p.gap").as("gap"))
   }
 
+  /** [[simhash]] over single-space-tokenized text via the fused
+    * [[graft.functions.TokenHash60Array]] kernel — no interpreted
+    * per-token lambda on the corpus scan; spec-pinned equal to the
+    * composable form. (split always yields ≥1 token, so the empty-array
+    * filter of the generic path is vacuous here.) */
   def simhashText(df: DataFrame, id: String, text: Column): DataFrame =
     df.select(col(id),
       call_function("simhash60", call_function("token_hash60_array", text))
@@ -817,30 +769,12 @@ object DedupOps {
     * reused by the explode and both verify sides); explode + df join
     * (combinable shuffle on hash); per-doc rank window (one doc
     * exchange); prefix self-join on hash (persisted posting prefix);
-    * candidate-distinct; O(n+m) merge-verify per candidate. Returned
-    * through the tracked/loan lifecycle like [[nearDupPairsTracked]]. */
+    * candidate-distinct; O(n+m) merge-verify per candidate. The three
+    * persisted intermediates (sets, prefix, candidates) stay with the
+    * CacheManager until `spark.catalog.clearCache()`. */
   def prefixFilterPairs(docs: DataFrame, id: String,
                         kernels: NearDupKernels,
-                        tNum: Int, tDen: Int): DataFrame =
-    prefixFilterPairsTracked(docs, id, kernels, tNum, tDen)._1
-
-  /** Loan-pattern twin of [[withNearDupPairs]] for the prefix-filter
-    * join: unpersists the set / prefix / candidate caches in a finally. */
-  def withPrefixFilterPairs[T](docs: DataFrame, id: String,
-                               kernels: NearDupKernels,
-                               tNum: Int, tDen: Int)
-                              (use: DataFrame => T): T = {
-    val (pairs, cached) =
-      prefixFilterPairsTracked(docs, id, kernels, tNum, tDen)
-    try use(pairs)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[prefixFilterPairs]] plus the persisted intermediate handles. */
-  def prefixFilterPairsTracked(docs: DataFrame, id: String,
-                               kernels: NearDupKernels,
-                               tNum: Int, tDen: Int)
-  : (DataFrame, Seq[DataFrame]) = {
+                        tNum: Int, tDen: Int): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen,
       s"threshold $tNum/$tDen must be a fraction in (0, 1]")
     val sets = docs
@@ -876,7 +810,7 @@ object DedupOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     def side(name: String): DataFrame =
       sets.select(col("__pf_id").as(name), col("__pf_set").as(s"__s_$name"))
-    val pairs = candidates
+    candidates
       .join(side("id_a"), "id_a")
       .join(side("id_b"), "id_b")
       .withColumn("__inter", call_function("sorted_intersect_count",
@@ -887,6 +821,5 @@ object DedupOps {
         (size(col("__s_id_a")) + size(col("__s_id_b")) - col("__inter"))
           .cast("double"))
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (pairs, Seq(sets, prefix, candidates))
   }
 }

@@ -1,40 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for the training-data pipeline: image/audio/
-  * video payloads as opaque `binary` columns with typed metadata, chunking /
-  * frame-sampling as native binary expressions, and a partition-batched
-  * decode seam.
-  *
-  * The DECODE ITSELF IS A STUB — this container ships no image/audio codecs
-  * (task constraint), so [[stubDecoder]] derives deterministic pseudo
-  * features; a real deployment swaps in a codec inside [[decodePartitions]]
-  * (the Scala analog of a `mapInPandas` batch UDF: one JVM call per
-  * partition iterator, vectorizable batch shape). Everything AROUND the
-  * stub — schema, binary expressions, chunk arithmetic, partition batching
-  * — is real and oracle-/spec-tested.
+  * video payloads as opaque `binary` columns, payload chunking as a native
+  * binary expression, and decode-free perceptual-hash dedup over the raw
+  * bytes. This container ships no image/audio codecs, so nothing here
+  * decodes: every operator works on the payload bytes themselves.
   *
   * Scale posture: chunking and hashing are per-row map-side expressions;
-  * decodePartitions streams partition iterators (no collect, no per-row JVM
-  * boundary); payload columns stay opaque so parquet scans prune them
-  * unless a query actually touches `content`.
+  * payload columns stay opaque so parquet scans prune them unless a query
+  * actually touches `content`.
   */
 object MultimodalOps {
-
-  /** Canonical asset schema: opaque payload + modality-typed metadata. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("duration_ms", LongType))))))
 
   /** Corpus adapter: fabricate asset rows from a text table (the corpus
     * ships no real media) — payload = UTF-8 bytes, modality round-robin.
@@ -59,258 +38,19 @@ object MultimodalOps {
         i => content.substr((i - lit(1)) * lit(size) + lit(1), lit(size))))
       .otherwise(array().cast("array<binary>"))
 
-  /** Frame sampling: every `everyNth` chunk, with its frame index —
-    * posexplode over the chunk array, filtered by position. */
-  def frameSample(df: DataFrame, content: Column, size: Int,
-                  everyNth: Int): DataFrame =
-    df.select(col("*"), posexplode(chunks(content, size))
-        .as(Seq("frame_idx", "frame")))
-      .filter(pmod(col("frame_idx"), lit(everyNth)) === 0)
-
-  /** Raw/decoded batch shapes for the partition-wise decode seam. */
-  final case class RawAsset(asset_id: Long, modality: String,
-                            content: Array[Byte])
-  final case class DecodedAsset(asset_id: Long, modality: String,
-                                n_bytes: Int, checksum: Long,
-                                features: Array[Float])
-
-  /** STUB decoder — deterministic pseudo-decode standing in for a codec:
-    * checksum = byte sum, features = 8 byte-histogram buckets normalized.
-    * Replace with a real image/audio decode in production. */
-  val stubDecoder: RawAsset => DecodedAsset = { a =>
-    val bytes = Option(a.content).getOrElse(Array.emptyByteArray)
-    val hist = new Array[Float](8)
-    var sum = 0L
-    bytes.foreach { b => val u = b & 0xff; sum += u; hist(u % 8) += 1f }
-    val n = math.max(bytes.length, 1)
-    DecodedAsset(a.asset_id, a.modality, bytes.length, sum,
-      hist.map(_ / n))
-  }
-
-  /** The mapInPandas-shaped seam: decode a whole partition per JVM call.
-    * `mapPartitions` is justified here (SURVEY §2.10 "last resort") — a
-    * codec is genuinely imperative per-buffer work no Column expression
-    * can express. */
-  def decodePartitions(ds: Dataset[RawAsset],
-                       decoder: RawAsset => DecodedAsset
-                       = stubDecoder): Dataset[DecodedAsset] =
-    ds.mapPartitions(_.map(decoder))(Encoders.product[DecodedAsset])
-
-  // ------------------------------------------------- real pure-JVM decode
-
-  /** Real decoder for the formats a bare JVM can parse end-to-end —
-    * binary PPM (P6) by hand, PNG/BMP/GIF through the JDK's own
-    * `javax.imageio` (no third-party codec: ImageIO's PNG/BMP/GIF
-    * readers ship in every JRE), and 16-bit PCM WAV audio by RIFF walk —
-    * dispatched on magic bytes, anything else falling back to `fallback`
-    * (the stub by default, which genuinely codec-less formats — JPEG on
-    * a stripped headless JRE, video containers, proprietary audio — keep
-    * until a codec library is wired into the seam).
-    *
-    * Decoded shapes (documented so downstream features are interpretable):
-    *  - PPM / PNG / BMP / GIF: checksum = sum of all RGB sample bytes
-    *    (for animated GIFs: of the FIRST frame only — ImageIO.read
-    *    decodes frame 0; see [[decodeImageIo]]); features = [width,
-    *    height, maxval(255 for ImageIO), mean_r, mean_g, mean_b,
-    *    mean_luma, 0] (means in [0, maxval], luma = (r+g+b)/3) — one
-    *    feature contract across all image paths.
-    *  - WAV:  checksum = sum of |sample| over all int16 PCM samples;
-    *    features = [sample_rate, channels, n_samples, mean_abs, rms,
-    *    peak, 0, 0].
-    * Malformed payloads (bad magic is dispatched away; truncated bodies,
-    * zero dimensions, ImageIO parse failures) fall back rather than
-    * throw — at scale one corrupt asset must not kill a 10^9-row decode
-    * stage. */
-  def pureJvmDecoder(fallback: RawAsset => DecodedAsset = stubDecoder)
-  : RawAsset => DecodedAsset = { a =>
-    val c = Option(a.content).getOrElse(Array.emptyByteArray)
-    (if (isPpm(c)) decodePpm(a, c) else if (isWav(c)) decodeWav(a, c)
-     else if (isPng(c) || isBmp(c) || isGif(c)) decodeImageIo(a, c)
-     else None).getOrElse(fallback(a))
-  }
-
-  private def isPpm(c: Array[Byte]): Boolean =
-    c.length > 2 && c(0) == 'P' && c(1) == '6' &&
-      Character.isWhitespace(c(2))
-
-  private def isWav(c: Array[Byte]): Boolean =
-    c.length >= 12 && new String(c, 0, 4, "US-ASCII") == "RIFF" &&
-      new String(c, 8, 4, "US-ASCII") == "WAVE"
-
-  private def isPng(c: Array[Byte]): Boolean =
-    c.length >= 8 && (c(0) & 0xff) == 0x89 && c(1) == 'P' &&
-      c(2) == 'N' && c(3) == 'G'
-
-  private def isBmp(c: Array[Byte]): Boolean =
-    c.length >= 2 && c(0) == 'B' && c(1) == 'M'
-
-  private def isGif(c: Array[Byte]): Boolean =
-    c.length >= 6 && new String(c, 0, 4, "US-ASCII") == "GIF8"
-
-  /** PNG/BMP/GIF via the JDK's bundled ImageIO readers: decode to ARGB,
-    * accumulate exact integer channel sums, emit the PPM feature contract
-    * (maxval reported as 255 — ImageIO normalizes to 8-bit channels).
-    * Any parse failure (truncated stream, exotic subformat) returns None
-    * → fallback; alpha is ignored (RGB features only).
-    *
-    * The stream is wrapped in a MemoryCacheImageInputStream explicitly:
-    * `ImageIO.read(InputStream)` defaults to a DISK-backed cache, which
-    * creates and deletes a temp file per asset — pure overhead inside a
-    * decode stage sized at 1e9 rows, and an outright failure on executors
-    * whose `java.io.tmpdir` is unwritable. The bytes are already in
-    * memory; no spill tier makes sense.
-    *
-    * Animated GIFs: only the FIRST frame is decoded (ImageIO.read's
-    * contract) — the checksum/feature sums cover frame 0, not all
-    * frames; multi-frame sampling is the [[stubDecoder]] codec seam's
-    * job. */
-  private def decodeImageIo(a: RawAsset,
-                            c: Array[Byte]): Option[DecodedAsset] =
-    try {
-      Option(javax.imageio.ImageIO.read(
-        new javax.imageio.stream.MemoryCacheImageInputStream(
-          new java.io.ByteArrayInputStream(c)))).flatMap { img =>
-        val w = img.getWidth
-        val h = img.getHeight
-        if (w <= 0 || h <= 0) None
-        else {
-          var (sr, sg, sb, sum) = (0L, 0L, 0L, 0L)
-          // Row-buffered bulk getRGB: one int[] per row, never w*h at once
-          // (a 1e4×1e4 scan would otherwise allocate 400 MB per asset).
-          val row = new Array[Int](w)
-          var y = 0
-          while (y < h) {
-            img.getRGB(0, y, w, 1, row, 0, w)
-            var x = 0
-            while (x < w) {
-              val p = row(x)
-              val r = (p >> 16) & 0xff; val g = (p >> 8) & 0xff
-              val b = p & 0xff
-              sr += r; sg += g; sb += b; sum += r + g + b
-              x += 1
-            }
-            y += 1
-          }
-          val n = (w.toLong * h).toFloat
-          Some(DecodedAsset(a.asset_id, a.modality, c.length, sum,
-            Array(w.toFloat, h.toFloat, 255f, sr / n, sg / n, sb / n,
-              sum / (3f * n), 0f)))
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** P6 header: "P6" <ws> width <ws> height <ws> maxval <single ws>, with
-    * '#'-to-EOL comments allowed between tokens; then width*height*3
-    * binary samples (maxval <= 255 assumed — the 2-byte variant is rare
-    * and falls back via the length check). */
-  private def decodePpm(a: RawAsset, c: Array[Byte]): Option[DecodedAsset] = {
-    var i = 2
-    def skipWs(): Unit = {
-      var go = true
-      while (go && i < c.length) {
-        if (Character.isWhitespace(c(i))) i += 1
-        else if (c(i) == '#') { while (i < c.length && c(i) != '\n') i += 1 }
-        else go = false
-      }
-    }
-    def int(): Option[Int] = {
-      skipWs()
-      val start = i
-      while (i < c.length && c(i) >= '0' && c(i) <= '9') i += 1
-      // A digit run over 9 chars can't be a sane dimension and would
-      // overflow Int.parseInt into an uncaught NumberFormatException
-      // (ADVICE r4) — malformed headers fall back, never throw.
-      if (i == start || i - start > 9) None
-      else Some(new String(c, start, i - start).toInt)
-    }
-    for {
-      w <- int(); h <- int(); maxval <- int()
-      // Payload bound in LONG math: w*h*3 in Int silently overflows for
-      // large declared dimensions and slips past the length guard,
-      // yielding garbage features instead of a fallback (ADVICE r4).
-      if w > 0 && h > 0 && maxval > 0 && maxval <= 255 &&
-        i + 1L + w.toLong * h * 3L <= c.length
-    } yield {
-      i += 1 // the single whitespace byte after maxval
-      var (sr, sg, sb, sum) = (0L, 0L, 0L, 0L)
-      var p = i
-      val end = i + w * h * 3
-      while (p < end) {
-        val r = c(p) & 0xff; val g = c(p + 1) & 0xff; val b = c(p + 2) & 0xff
-        sr += r; sg += g; sb += b; sum += r + g + b
-        p += 3
-      }
-      val n = (w * h).toFloat
-      DecodedAsset(a.asset_id, a.modality, c.length, sum,
-        Array(w.toFloat, h.toFloat, maxval.toFloat, sr / n, sg / n, sb / n,
-          sum / (3f * n), 0f))
-    }
-  }
-
-  /** RIFF/WAVE chunk walk: read "fmt " (must be PCM, 16-bit) then "data";
-    * samples are little-endian int16. */
-  private def decodeWav(a: RawAsset, c: Array[Byte]): Option[DecodedAsset] = {
-    def le16(o: Int): Int = (c(o) & 0xff) | ((c(o + 1) & 0xff) << 8)
-    def le32(o: Int): Long = (le16(o) | (le16(o + 2).toLong << 16)) & 0xffffffffL
-    // Chunk walk in LONG math (ADVICE r4): a declared chunk length is an
-    // unsigned 32-bit value, so truncating it to Int can go negative
-    // (infinite loop) or a large positive len can overflow the cursor
-    // (StringIndexOutOfBounds). Keeping len/cursor as Long and bounding
-    // the step guarantees forward progress; a malformed walk simply runs
-    // the cursor past c.length and falls back to None — never throws,
-    // never spins, per the decode-seam contract.
-    var i = 12L
-    var fmt: Option[(Int, Int, Long)] = None // (channels, bits, rate)
-    var data: Option[(Int, Int)] = None      // (offset, length)
-    while (i + 8 <= c.length && (fmt.isEmpty || data.isEmpty)) {
-      val o = i.toInt // safe: i + 8 <= c.length <= Int.MaxValue
-      val id = new String(c, o, 4, "US-ASCII")
-      val len = le32(o + 4) // unsigned: 0 <= len <= 0xffffffff
-      if (id == "fmt " && i + 8 + 16 <= c.length) {
-        val audioFormat = le16(o + 8)
-        if (audioFormat == 1)
-          fmt = Some((le16(o + 10), le16(o + 22), le32(o + 12)))
-      } else if (id == "data" && i + 8 + len <= c.length)
-        data = Some((o + 8, len.toInt)) // fits: bounded by c.length
-      val step = 8L + len + (len & 1L) // chunks are word-aligned
-      if (step <= 0) return None // unreachable given the mask; belt+braces
-      i += step
-    }
-    for {
-      (channels, bits, rate) <- fmt
-      (off, len) <- data
-      if bits == 16 && channels > 0 && len >= 2
-    } yield {
-      val nSamples = len / 2
-      var (sumAbs, sumSq, peak) = (0L, 0.0, 0L)
-      var p = 0
-      while (p < nSamples) {
-        val s = le16(off + p * 2).toShort.toInt
-        val abs = math.abs(s).toLong
-        sumAbs += abs; sumSq += s.toDouble * s; if (abs > peak) peak = abs
-        p += 1
-      }
-      DecodedAsset(a.asset_id, a.modality, c.length, sumAbs,
-        Array(rate.toFloat, channels.toFloat, nSamples.toFloat,
-          (sumAbs.toDouble / nSamples).toFloat,
-          math.sqrt(sumSq / nSamples).toFloat, peak.toFloat, 0f, 0f))
-    }
-  }
-
   // -------------------------------------- binary perceptual-hash dedup
 
   /** 60-bit locality-sensitive content hash of an opaque binary payload —
     * the pHash shape for media dedup, computed WITHOUT decoding: every
     * sliding 4-byte window votes ±1 on each bit of its 60-bit md5-prefix
-    * hash (the [[graft.functions.SimHash60]] kernel TextOps.simhash uses
+    * hash (the [[graft.functions.SimHash60]] kernel [[DedupOps.simhash]] uses
     * for tokens, fed byte windows instead). Two payloads differing in a
     * few bytes perturb only the windows crossing the edit, so their
     * hashes stay Hamming-close — the property exact content hashing
     * (q24) lacks. Real pHash decodes and DCTs the image first; over
-    * opaque bytes the byte-window SimHash is the decode-free analogue
-    * (and the decode seam, [[decodePartitions]], is where a real
-    * perceptual feature would slot in). Map-side per row; payloads
-    * shorter than 4 bytes are dropped (no windows). */
+    * opaque bytes the byte-window SimHash is the decode-free analogue.
+    * Map-side per row; payloads shorter than 4 bytes are dropped (no
+    * windows). */
   def binarySimhash(df: DataFrame, id: String, content: Column): DataFrame =
     df.filter(length(content) >= 4)
       .select(col(id),

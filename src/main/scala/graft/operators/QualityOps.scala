@@ -92,21 +92,6 @@ object QualityOps {
   def pseudonymize(id: Column, salt: String, width: Int = 16): Column =
     substring(md5(concat(lit(salt), id.cast("string"))), 1, width)
 
-  /** One-row k-anonymity census over the same classes: the dataset's
-    * achieved k (the SMALLEST class size — the number that holds for
-    * every row), class counts, and rows at re-identification risk under
-    * the caller's k. Rides one combinable aggregate over the class
-    * table. */
-  def kAnonymityReport(df: DataFrame, quasi: Seq[Column],
-                       k: Int): DataFrame =
-    df.groupBy(quasi: _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(min(col("__n")).as("k_achieved"),
-        count(lit(1)).as("n_classes"),
-        sum(when(col("__n") < k, 1L).otherwise(0L)).as("n_violating"),
-        sum(when(col("__n") < k, col("__n")).otherwise(0L))
-          .as("rows_at_risk"))
-
   /** l-diversity census over the same equivalence-class frame as
     * [[kAnonymityViolations]]: per quasi-identifier block, l = the
     * number of DISTINCT sensitive values its members carry — k-anonymity

@@ -52,38 +52,6 @@ object SketchOps {
       .agg(min(coalesce(col("c"), lit(0L))).as("cms_estimate"))
   }
 
-  // ----------------------------------------------- HLL distinct rollup
-
-  /** Distinct-count ROLLUP: one Datasketches HLL sketch per key, stored
-    * as a binary column — the materialized-view answer to "distinct users
-    * by any dimension subset". A plain COUNT(DISTINCT) rollup is NOT
-    * re-aggregable (distinct counts don't add across groups), so without
-    * sketches every coarser grouping re-scans the 100 TB fact table;
-    * sketch columns make distinct counts DECOMPOSABLE the way
-    * CatalogOps.createRollup's sum/count partials are: [[hllServe]]
-    * merges fine-grained sketches into any coarser grouping without
-    * touching the corpus, and disjoint shards/incremental loads merge by
-    * the same union (spec-pinned identical to the from-scratch sketch).
-    *
-    * `lgK` sizes the sketch register array (2^lgK buckets ≈ 1.04/√2^lgK
-    * rsd — 12 gives ~1.6%); sketches are KB-sized regardless of
-    * cardinality. One combinable shuffle (hll_sketch_agg partial-merges
-    * map-side). */
-  def hllRollup(df: DataFrame, keys: Seq[String], item: Column,
-                lgK: Int = 12): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(hll_sketch_agg(item, lgK).as("hll"),
-        count(lit(1)).as("n_rows"))
-
-  /** Serve a coarser distinct-count grouping from a [[hllRollup]] table:
-    * union the covered sketches, estimate at the end. Cost is
-    * rollup-cardinality, independent of fact-table size. */
-  def hllServe(rollup: DataFrame, keys: Seq[String]): DataFrame =
-    rollup.groupBy(keys.map(col): _*)
-      .agg(hll_sketch_estimate(hll_union_agg(col("hll")))
-        .as("n_distinct_est"),
-        sum(col("n_rows")).as("n_rows"))
-
   // ------------------------------------ histogram quantile calibration
 
   /** Fixed-grid histogram quantile estimates NEXT TO the exact quantiles

@@ -468,12 +468,21 @@ object TextOps {
       .limit(k)
   }
 
-  /** BM25 ranked retrieval: top-k documents per query over an on-the-fly
-    * index — the classic lexical search scorer (Robertson/Spärck Jones
-    * term saturation × length normalization). `queries` is a (query_id,
-    * term) table; scoring uses the rational idf (N−df+0.5)/(df+0.5) — no
-    * libm `ln` (the q41/q87 monotone-surrogate discipline: log is the
-    * one op Spark's and the oracle's math libraries may round apart).
+  /** BM25 ranked retrieval: top-k documents per query — the classic
+    * lexical search scorer (Robertson/Spärck Jones term saturation ×
+    * length normalization), served from a PRECOMPUTED (id, term, tf, dl)
+    * relation — the form the session's bucketed term-frequency artifact
+    * feeds: `dl` (the doc's total token count, identical to
+    * `size(tokens)`) rides every posting row and document frequencies
+    * come from the distinct-(id, term) row contract, so the corpus
+    * tokenize+count shuffle is paid once per session instead of per
+    * query. `queries` is a (query_id, term) table. `nDocs` is a 1-row
+    * frame with `__n` = TOTAL corpus document count (including docs
+    * absent from `tfRel` because their text is null — the tf relation
+    * cannot see those). Scoring uses the rational idf
+    * (N−df+0.5)/(df+0.5) — no libm `ln` (the q41/q87 monotone-surrogate
+    * discipline: log is the one op Spark's and the oracle's math
+    * libraries may round apart).
     *
     * Cross-engine exactness: each (doc, term) contribution is ONE fixed
     * IEEE op sequence over integer inputs (tf, dl, df, N — every +,−,×,÷
@@ -481,66 +490,15 @@ object TextOps {
     * FLOORED to a BIGINT, and the per-doc score is the INTEGER sum of
     * those — float summation order never arises.
     *
-    * Scale: the exploded token stream is pruned by a broadcast join
-    * against the query terms BEFORE any aggregation — the tf shuffle
-    * carries only matching postings, never the corpus's token stream.
-    * dl rides each exploded row (max-carried through the tf groupBy), so
-    * no doc-side join; df and the (N, Σdl) globals are query-term- and
-    * 1-row-sized broadcasts off the pruned table. Final top-k is a
-    * per-query window over candidate docs only. */
-  def bm25TopK(docs: DataFrame, id: String, text: Column,
-               queries: DataFrame, k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               scale: Double = 1e6): DataFrame = {
-    val toks = docs.select(col(id), tokens(text).as("__toks"))
-      .select(col(id), col("__toks"),
-        size(col("__toks")).cast("long").as("__dl"))
-    val g = toks.agg(count(lit(1)).as("__n"), sum(col("__dl")).as("__sumdl"))
-    val tf = toks
-      .select(col(id), col("__dl"), explode(col("__toks")).as("term"))
-      .join(broadcast(queries.select(col("query_id"), col("term"))),
-        Seq("term"))
-      .groupBy(col("query_id"), col("term"), col(id))
-      .agg(count(lit(1)).as("__tf"), max(col("__dl")).as("__dl"))
-    val dfreq = tf.select(col("term"), col(id)).distinct()
-      .groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    val avgdl = col("__sumdl").cast("double") / col("__n").cast("double")
-    val idf = ((col("__n") - col("__df")).cast("double") + lit(0.5)) /
-      (col("__df").cast("double") + lit(0.5))
-    val satu = (col("__tf").cast("double") * lit(k1 + 1.0)) /
-      (col("__tf").cast("double") + lit(k1) *
-        (lit(1.0 - b) + lit(b) * (col("__dl").cast("double") / avgdl)))
-    val perDoc = tf.join(broadcast(dfreq), Seq("term"))
-      .crossJoin(broadcast(g))
-      .select(col("query_id"), col(id),
-        floor((idf * satu) * lit(scale)).as("__fp"))
-      .groupBy(col("query_id"), col(id))
-      .agg(sum(col("__fp")).as("score_fp"), count(lit(1)).as("n_terms"))
-    RelationalOps.topKPerGroup(perDoc, Seq("query_id"),
-        Seq(col("score_fp").desc, col(id)), k, "rank")
-      .select(col("query_id"), col(id), col("rank"), col("score_fp"),
-        col("n_terms"))
-  }
-
-  /** [[bm25TopK]] served from a PRECOMPUTED (id, term, tf, dl) relation —
-    * the form the session's bucketed term-frequency artifact feeds: `dl`
-    * (the doc's total token count, identical to `size(tokens)`) rides
-    * every posting row, document frequencies come from the
-    * distinct-(id, term) row contract, so scores are bit-identical to
-    * the from-text path while the corpus tokenize+count shuffle is paid
-    * once per session instead of per query. `nDocs` is a 1-row frame
-    * with `__n` = TOTAL corpus document count (including docs absent
-    * from `tfRel` because their text is null — the tf relation cannot
-    * see those).
-    *
-    * Shape (VERDICT r11 #2): the carried `dl` removes BOTH per-doc
-    * passes the first conversion paid — the corpus-wide
-    * `groupBy(id).sum(tf)` (a doc-keyed shuffle the term-bucketed
-    * layout cannot serve) and the doc-keyed join planting `dl` back on
-    * the pruned postings. What remains is one map-side artifact scan
-    * for Σdl = Σtf (combinable partial aggregate, no exchange — every
-    * token counted once either way) and the broadcast-pruned posting
-    * path. */
+    * Shape (VERDICT r11 #2): the carried `dl` removes both per-doc
+    * passes — a corpus-wide `groupBy(id).sum(tf)` (a doc-keyed shuffle
+    * the term-bucketed layout cannot serve) and a doc-keyed join
+    * planting `dl` back on the pruned postings. What remains is one
+    * map-side artifact scan for Σdl = Σtf (combinable partial aggregate,
+    * no exchange — every token counted once either way), the
+    * broadcast join against the query terms that prunes postings before
+    * any aggregation, df as a query-term-sized broadcast, and a
+    * per-query top-k window over candidate docs only. */
   def bm25TopKFromTf(tfRel: DataFrame, id: String, nDocs: DataFrame,
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75,
@@ -572,7 +530,7 @@ object TextOps {
   }
 
   /** Positional phrase search over an inverted index with positions —
-    * the retrieval primitive BM25 ([[bm25TopK]]) can't express: "these
+    * the retrieval primitive BM25 ([[bm25TopKFromTf]]) can't express: "these
     * terms, ADJACENT, in order". A phrase of terms t_0..t_{m-1} matches
     * at start s iff token(s+i) = t_i for every i, i.e. every matching
     * posting votes for the same (doc, pos − i) start and a start wins
@@ -662,19 +620,14 @@ object TextOps {
     * slope/intercept are each ONE final double expression — the q77
     * trend discipline with the transcendental quantized away.
     *
-    * Shape: one (group, token) count shuffle, one group-partitioned
-    * rank window (vocabulary-bounded groups), one combinable stats
+    * Shape: one group-partitioned rank window over the (group, token)
+    * counts (vocabulary-bounded groups), one combinable stats
     * aggregate. Degenerate groups (all ranks in one log2 bucket) return
-    * null slope rather than dividing by zero. */
-  def zipfSlope(docs: DataFrame, group: Column, text: Column): DataFrame =
-    zipfSlopeFromCounts(docs
-      .select(group.as("grp"), explode(tokens(text)).as("__tok"))
-      .groupBy(col("grp"), col("__tok"))
-      .agg(count(lit(1)).as("__n")))
-
-  /** [[zipfSlope]] served from a precomputed (grp, __tok, __n) term-count
-    * relation (the bucketed tf artifact, re-grouped per source) — same
-    * exact-integer OLS, corpus tokenization paid once per session. */
+    * null slope rather than dividing by zero.
+    *
+    * Input: a precomputed (grp, __tok, __n) term-count relation (the
+    * bucketed tf artifact, re-grouped per source), so corpus
+    * tokenization is paid once per session. */
   def zipfSlopeFromCounts(tc: DataFrame): DataFrame = {
     val wr = org.apache.spark.sql.expressions.Window.partitionBy(col("grp"))
       .orderBy(col("__n").desc, col("__tok"))
@@ -701,24 +654,13 @@ object TextOps {
     * curation dashboards run per source/shard: token count, vocabulary
     * size (types), type-token ratio, hapax-legomenon share (types seen
     * once — high = noisy/OCR text, low = boilerplate), and the top
-    * token's frequency share (high = template spam). ONE (group, token)
-    * count shuffle feeds every statistic — types, tokens, hapax and max
-    * all fold from the same table; doc counts ride a second cheap
-    * group-sized aggregate. Counts are exact longs; each ratio is one
-    * final int/int double division (hash-stable). Group cardinality is
-    * bounded by vocabulary per group, combinable map-side — the 100 TB
-    * shape. */
-  def lexicalDiversity(docs: DataFrame, group: Column,
-                       text: Column): DataFrame =
-    lexicalDiversityFromCounts(
-      docs.select(group.as("grp"), explode(tokens(text)).as("__tok"))
-        .groupBy(col("grp"), col("__tok"))
-        .agg(count(lit(1)).as("__n")),
-      docs.groupBy(group.as("grp")).agg(count(lit(1)).as("n_docs")))
-
-  /** [[lexicalDiversity]] from a precomputed (grp, __tok, __n) term-count
-    * relation plus a (grp, n_docs) census — the tf-artifact route: every
-    * statistic folds from the same counts, bit-identical to from-text. */
+    * token's frequency share (high = template spam). Input: a
+    * precomputed (grp, __tok, __n) term-count relation (the tf-artifact
+    * route) plus a (grp, n_docs) census. Every statistic — types,
+    * tokens, hapax and max — folds from the same counts. Counts are
+    * exact longs; each ratio is one final int/int double division
+    * (hash-stable). Group cardinality is bounded by vocabulary per
+    * group, combinable map-side — the 100 TB shape. */
   def lexicalDiversityFromCounts(tc: DataFrame, nd: DataFrame): DataFrame = {
     val perGrp = tc.groupBy(col("grp"))
       .agg(count(lit(1)).as("n_types"),
@@ -751,29 +693,30 @@ object TextOps {
     * totals ratio). `isTarget` marks the in-domain exemplar docs; the
     * raw distribution is the whole input.
     *
-    * Shape: ONE token expansion → (doc, feature) counts (combinable);
-    * the feature table folds to at most `buckets` rows → both count
-    * tables and the totals BROADCAST; the per-doc score is one
-    * combinable sum. At 100 TB: two bounded broadcasts + two shuffles,
-    * both on pre-aggregated rows. */
-  def dsirScore(docs: DataFrame, id: Column, text: Column,
-                isTarget: Column, buckets: Int): DataFrame =
+    * Input: a precomputed (doc_id, term, tf) relation carrying the
+    * target marker column — the tf-artifact route: the (doc, feature)
+    * counts fold as `sum(tf)` over hashed terms (a feature's count is
+    * the same whether tokens are counted one at a time or per term), so
+    * the corpus tokenize shuffle is paid once per session.
+    *
+    * Shape: one (doc, feature) count aggregate (combinable); the feature
+    * table folds to at most `buckets` rows → both count tables and the
+    * totals BROADCAST; the per-doc score is one combinable sum. At
+    * 100 TB: two bounded broadcasts + two shuffles, both on
+    * pre-aggregated rows. */
+  def dsirScoreFromTf(tfRel: DataFrame, id: Column, isTarget: Column,
+                      buckets: Int): DataFrame = {
     // Eagerly checkpoint the (doc, feature) count table: raw counts,
     // target counts, totals and the final per-doc fold all branch from
-    // it — without the checkpoint each branch would replay the corpus
-    // tokenize+count shuffle (the q119 lesson). The table is bounded by
-    // docs × min(doc_tokens, buckets) rows — far below token scale.
-    dsirFromFeat(docs.select(id.as("doc_id"), isTarget.as("is_target"),
-        explode(tokens(text)).as("__tok"))
-      .select(col("doc_id"), col("is_target"),
-        pmod(hash60(col("__tok")), lit(buckets.toLong)).as("__f"))
+    // it — without the checkpoint each branch would replay the artifact
+    // scan and count shuffle (the q119 lesson). The table is bounded by
+    // docs × min(doc_terms, buckets) rows — far below token scale.
+    val feat = tfRel.select(id.as("doc_id"), isTarget.as("is_target"),
+        pmod(hash60(col("term")), lit(buckets.toLong)).as("__f"),
+        col("tf"))
       .groupBy(col("doc_id"), col("is_target"), col("__f"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(), buckets)
-
-  /** Shared DSIR tail: feature log-ratios + per-doc fold over the
-    * checkpointed (doc_id, is_target, __f, __c) feature-count table. */
-  private def dsirFromFeat(feat: DataFrame, buckets: Int): DataFrame = {
+      .agg(sum(col("tf")).as("__c"))
+      .localCheckpoint()
     val raw = feat.groupBy(col("__f")).agg(sum(col("__c")).as("__nr"))
     val tgt = feat.filter(col("is_target"))
       .groupBy(col("__f")).agg(sum(col("__c")).as("__nt"))
@@ -795,24 +738,6 @@ object TextOps {
         (col("__s") + col("n_tokens") * col("__norm")).as("dsir_score"))
   }
 
-  /** [[dsirScore]] served from a precomputed (doc_id, term, tf) relation
-    * carrying the target marker column — the tf-artifact route: the
-    * (doc, feature) counts fold as `sum(tf)` over hashed terms instead
-    * of re-exploding the corpus (identical integers — a feature's count
-    * is the same whether tokens are counted one at a time or per-term),
-    * so scores are bit-identical while the tokenize shuffle is paid once
-    * per session. The rest of the pipeline (checkpointed feature table,
-    * broadcast log-ratios, one combinable per-doc fold) is [[dsirScore]]
-    * verbatim. */
-  def dsirScoreFromTf(tfRel: DataFrame, id: Column, isTarget: Column,
-                      buckets: Int): DataFrame =
-    dsirFromFeat(tfRel.select(id.as("doc_id"), isTarget.as("is_target"),
-        pmod(hash60(col("term")), lit(buckets.toLong)).as("__f"),
-        col("tf"))
-      .groupBy(col("doc_id"), col("is_target"), col("__f"))
-      .agg(sum(col("tf")).as("__c"))
-      .localCheckpoint(), buckets)
-
   /** Cross-document boilerplate census — the C4-style screen for
     * templated spans (headers, navigation, legal footers) that repeat
     * ACROSS documents rather than within one (q59/q70/q138 measure
@@ -824,44 +749,13 @@ object TextOps {
     * boilerplate, bucketed into 11 integer deciles (⌊10·b/s⌋, exact —
     * bucket 10 = fully templated) and censused.
     *
-    * Shape: one shingle explode → distinct (doc, gram) pairs (the
-    * combinable distinct-aggregate shuffle a df count needs anyway) →
-    * gram document-frequencies (combinable) joined back on gram — an
-    * equi-join on the exploded table, NOT a second corpus scan
-    * (localCheckpoint pins the pair table so both the df aggregate and
-    * the join read one materialization) → per-doc boolean counts →
-    * bounded census. Output is ≤ 11 rows regardless of corpus size. */
-  def boilerplateCensus(docs: DataFrame, id: Column, words: Column,
-                        n: Int, minDocPct: Int): DataFrame = {
-    require(n >= 1 && minDocPct >= 1 && minDocPct <= 100,
-      s"bad n=$n minDocPct=$minDocPct")
-    val pairs = docs
-      .select(id.as("doc_id"), explode(wordShingles(words, n)).as("__g"))
-      .distinct()
-      .localCheckpoint()
-    val nDocs = pairs.agg(countDistinct(col("doc_id")).as("__nd"))
-    val dfreq = pairs.groupBy(col("__g"))
-      .agg(count(lit(1)).as("__df"))
-    pairs.join(dfreq, "__g")
-      .crossJoin(broadcast(nDocs))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("__s"),
-        sum(when(col("__df") * 100 >= lit(minDocPct) * col("__nd"), 1L)
-          .otherwise(0L)).as("__b"))
-      .groupBy(expr("CAST((__b * 10) div __s AS INT)").as("decile"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("__s")).as("n_grams"),
-        sum(col("__b")).as("n_boiler_grams"))
-  }
-
-  /** [[boilerplateCensus]] served from a PRECOMPUTED distinct
-    * `(doc_id, term)` gram relation — the session's bucketed n-gram
-    * artifact: its rows ARE the distinct (doc, shingle) pairs
-    * (`wordShingles` = `array_distinct(wordShinglesMulti)`, and the
-    * artifact groups the multiset), so the census is value-identical
-    * while the corpus shingle explode + distinct shuffle + checkpoint
-    * disappear — the document-frequency aggregate AND the df join both
-    * ride the term-bucketed layout exchange-free, leaving one compact
-    * (doc, ints) shuffle for the per-doc rollup. */
+    * Input: a PRECOMPUTED distinct `(doc_id, term)` gram relation — the
+    * session's bucketed n-gram artifact, whose rows ARE the distinct
+    * (doc, shingle) pairs (the artifact groups the `wordShinglesMulti`
+    * multiset). Shape: the gram document-frequency aggregate AND the df
+    * join both ride the term-bucketed layout exchange-free, leaving one
+    * compact (doc, ints) shuffle for the per-doc rollup and a bounded
+    * census. Output is ≤ 11 rows regardless of corpus size. */
   def boilerplateCensusFromTf(pairsRel: DataFrame,
                               minDocPct: Int): DataFrame = {
     require(minDocPct >= 1 && minDocPct <= 100, s"bad minDocPct=$minDocPct")

@@ -130,25 +130,12 @@ object VectorOps {
   def lshBucketHof(v: Column, planes: Int): Column =
     (0 until planes).map(p => planeBit(v, p)).reduce(_ + _)
 
-  /** Bucket-count math for the LSH path at real scale: p hyperplanes give
-    * 2^p buckets, so the expected candidate set per query is N/2^p.
-    * Choosing p = ceil(log2(N / targetBucket)) keeps the per-bucket
-    * brute-force cost constant as the corpus grows — at N = 10^10 with
-    * targetBucket = 4096 that is p = 21 (2M buckets), and the candidate
-    * join stays a hash join on `bucket`. Recall falls as p grows (each
-    * plane splits some true neighbors); recall@k should be measured
-    * against the exact path on a sample (q49) whenever p changes. */
-  def planesForCorpus(n: Long, targetBucket: Long = 4096): Int =
-    math.max(1, math.ceil(
-      math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)
-    ).toInt)
-
   /** INTEGER-EXACT corpus-sized plane count for the near-dup queries
     * (q29/q133): the smallest p in [4, 21] with targetCell·2^p ≥ n, so
     * expected cell density stays ≤ targetCell and Σ|cell|² pair work
     * stays ~n·targetCell (linear) instead of n²/2^p (quadratic under a
     * FIXED grid — the r12 sf1 probe measured 20-26× wall on 10× data).
-    * Deliberately not [[planesForCorpus]]'s float log: the oracle twin
+    * Deliberately not a float ceil(log2(n / targetCell)): the oracle twin
     * replays this as a generate_series min over the same inequality,
     * and integer compare can never round differently across engines.
     * Floor 4 keeps the verified small-SF geometry (500 vectors → p=4 =
@@ -156,16 +143,6 @@ object VectorOps {
     * point under the same rule). */
   def sizedPlanes(n: Long, targetCell: Long = 32L): Int =
     (4 to 21).find(p => targetCell * (1L << p) >= n).getOrElse(21)
-
-  /** Cell-count math for the IVF path: K = N / targetCell cells keeps the
-    * per-cell scan bounded; the classic sqrt(N) heuristic is the
-    * targetCell = sqrt(N) special case. Assignment cost is O(N·K) per
-    * build (broadcast centroids), so K is also bounded by what one
-    * executor can hold: 64-dim float centroids are 256 B each — 1M cells
-    * is 256 MB, still broadcastable. Probe depth trades recall for work
-    * linearly; measure recall@k (q49) when changing either. */
-  def cellsForCorpus(n: Long, targetCell: Long = 4096): Int =
-    math.max(1, math.min(1 << 20, (n / math.max(1L, targetCell)).toInt))
 
   /** Squared euclidean distance via dots, in a FIXED operation order the
     * oracle mirrors literally: (a·a - 2*a·b) + b·b. */
@@ -343,28 +320,6 @@ object VectorOps {
       s => s.getField("cid"))
   }
 
-  /** Lloyd training with driver-held centroids — the Spark-MLlib shape:
-    * per iteration ONE combinable aggregate (nearest cell via
-    * [[nearestCellExpr]], per-cell count + `dims` element sums) and a
-    * K-row collect; the driver finishes mean = sum/n and rounds to
-    * float. Bit-compatible with [[kmeansTrain]] and the SQL oracle: the
-    * per-element mean is the same double sum / count division (partial
-    * aggregation order differs, but the FLOAT cast absorbs sub-24-bit
-    * summation noise exactly as the oracle's replay relies on — spec
-    * pins local == DataFrame training on the shared geometry), cells
-    * that empty disappear, and the result is cid-sorted for
-    * deterministic downstream literal order. */
-  def kmeansTrainLocal(vectors: DataFrame, vec: String,
-                       seed: LocalCentroids, iters: Int,
-                       dims: Int): LocalCentroids = {
-    require(iters >= 0, "iters must be >= 0")
-    require(dims > 0, "dims must be > 0")
-    if (iters == 0) return seed
-    kmeansTrainArrays(
-      vectors.select(col(vec)).collect().map(_.getSeq[Float](0).toArray),
-      seed, iters)
-  }
-
   /** The in-process Lloyd core: `iters` passes over an already-collected
     * training sample. This is NOT a driver loop over corpus data — the
     * sample is driver-bounded BY CONSTRUCTION (FAISS trains its coarse
@@ -526,9 +481,9 @@ object VectorOps {
     * than the paper's trained k-means cells, so the cell assignment is a
     * pure expression the oracle replays exactly; the trained-cell variant
     * is [[ivfAssign]] composed the same way. Scale: pair work is
-    * Σ_cells |cell|² — bounded by sizing buckets via [[planesForCorpus]]
-    * (~4k vectors/cell at any corpus size), the paper's own recipe; the
-    * corpus never pairs across cells. Returns ONLY pruned vectors:
+    * Σ_cells |cell|² — bounded by sizing buckets via [[sizedPlanes]]
+    * (a bounded expected cell size at any corpus size), the paper's own
+    * recipe; the corpus never pairs across cells. Returns ONLY pruned vectors:
     * (id, bucket, witness_id = smallest qualifying senior, n_dups =
     * qualifying seniors, max_cosine). Counts are exact longs; cosines are
     * compare/max only (no float summation). */

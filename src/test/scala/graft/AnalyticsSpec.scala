@@ -419,16 +419,15 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(out("up")._2.get == 12.0 / (math.sqrt(6.0) * math.sqrt(24.0)))
   }
 
-  test("associationRules: hand-checked support/confidence/lift, both " +
-    "directions, minCount prunes, duplicate memberships collapse") {
-    // baskets: 1:{a,b,c} 2:{a,b} 3:{a,c} 4:{b} — c(a,b)=2 c(a,c)=2 c(b,c)=1
-    val m = Seq((1L, "a"), (1L, "b"), (1L, "c"), (2L, "a"), (2L, "b"),
-        (2L, "a"), // duplicate membership must not double-count
-        (3L, "a"), (3L, "c"), (4L, "b"))
-      .toDF("bk", "it")
-    val out = AnalyticsOps.associationRules(m, col("bk"), col("it"), 2L)
+  test("rulesFromCooccurrence: hand-checked support/confidence/lift, " +
+    "both directions of each counted pair") {
+    // baskets: 1:{a,b,c} 2:{a,b} 3:{a,c} 4:{b} — c(a,b)=2 c(a,c)=2
+    // c(b,c)=1, which a minCount of 2 left out of the pair table
+    val pairs = Seq(("a", "b", 2L), ("a", "c", 2L)).toDF("__a", "__c", "__cab")
+    val n = Seq(4L).toDF("__n")
+    val ic = Seq(("a", 3L), ("b", 3L), ("c", 2L)).toDF("__i", "__ci")
+    val out = AnalyticsOps.rulesFromCooccurrence(pairs, n, ic)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    // minCount=2 keeps {a,b} and {a,c}; {b,c}=1 pruned BEFORE expansion
     assert(out.keySet == Set(("a", "b"), ("b", "a"), ("a", "c"),
       ("c", "a")))
     val ab = out(("a", "b"))
@@ -440,6 +439,10 @@ class AnalyticsSpec extends AnyFunSuite {
     val ba = out(("b", "a"))
     assert(ba.getAs[Double]("confidence") == 2.0 / 3.0 &&
       ba.getAs[Double]("lift") == ab.getAs[Double]("lift"))
+    val ca = out(("c", "a"))
+    assert(ca.getAs[Long]("n_ante") == 2L &&
+      ca.getAs[Double]("confidence") == 1.0 &&
+      ca.getAs[Double]("lift") == (2.0 * 4.0) / (2.0 * 3.0))
   }
 
   test("ksTest: exact integer D numerator, identical samples give D=0, " +

@@ -67,34 +67,6 @@ class ApproxSpec extends AnyFunSuite {
     }
   }
 
-  test("hllRollup/hllServe: coarser groupings served from the sketch " +
-    "table stay within rsd of exact; disjoint shards merge exactly") {
-    import graft.operators.SketchOps
-    val ev = Tables(spark, sf, "events")
-    val rollup = SketchOps.hllRollup(ev,
-      Seq("event_type"), col("user_id"), lgK = 12)
-    // serve the ALL-types rollup (coarser than the sketch grain) and
-    // compare against exact global distinct
-    val served = SketchOps.hllServe(rollup, Seq.empty).head
-    val exact = ev.agg(countDistinct(col("user_id"))).head.getLong(0)
-    val est = served.getLong(0)
-    assert(math.abs(est.toDouble - exact) / exact <= 0.05,
-      s"exact=$exact est=$est")
-    assert(served.getLong(1) == ev.count(), "n_rows partials must add")
-    // mergeability: sketches of two disjoint halves union to the SAME
-    // estimate as one whole-corpus sketch — the shard/incremental-load
-    // contract (identical registers, not merely close)
-    val whole = SketchOps.hllServe(
-      SketchOps.hllRollup(ev, Seq.empty, col("user_id")), Seq.empty)
-      .head.getLong(0)
-    val halves = SketchOps.hllRollup(
-      ev.withColumn("__half", pmod(col("event_id"), lit(2))),
-      Seq("__half"), col("user_id"))
-    val merged = SketchOps.hllServe(halves, Seq.empty).head.getLong(0)
-    assert(merged == whole,
-      s"shard-merged estimate $merged != whole-corpus $whole")
-  }
-
   test("PQ recall gate: the shortlist+exact-rerank pipeline (q172) " +
     "recovers what raw ADC (q171) loses to 1-bit/dim quantization on " +
     "the isotropic corpus — both floors measured, like the IVF gate") {

@@ -156,35 +156,20 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(D.nearDupPairs(docs, "doc_id",
       T.wordShingles(T.tokens(col("text")), 3), 0.0).count() == 0L,
       "symmetric banding must miss the sub-document at ANY threshold")
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = D.containmentPairs(docs, "doc_id",
       D.wordKernels(col("text"), 3), 0.6).collect()
     assert(out.length == 1)
+    // bands, candidates and candidate docs stay persisted until the
+    // session's clearCache
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size == 3, s"containmentPairs persisted $held")
     val r = out.head
     assert(r.getLong(0) == 9L && r.getLong(1) == 2L,
       s"orientation must be (contained=9, container=2), got $r")
     assert(r.getDouble(2) == 1.0, "full containment")
     assert(r.getInt(3) < r.getInt(4))
-    spark.catalog.clearCache()
-  }
-
-  test("withContainmentPairs releases all three caches (bands, candidates, " +
-    "candidate docs); containmentPairs keeps them (ADVICE r7/r8)") {
-    val contained = (1 to 30).map(i => s"w$i").mkString(" ")
-    val container = (1 to 80).map(i => s"w$i").mkString(" ")
-    val docs = Seq((2L, container), (9L, contained),
-      (5L, (200 to 240).map(i => s"v$i").mkString(" "))).toDF("doc_id", "text")
-    spark.catalog.clearCache()
-    SparkEntry.clearSessionSweeps()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = D.withContainmentPairs(docs, "doc_id",
-      D.wordKernels(col("text"), 3), 0.6)(_.count())
-    assert(n == 1L)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"withContainmentPairs must leave no new cache entries: $leaked")
-    D.containmentPairs(docs, "doc_id", D.wordKernels(col("text"), 3), 0.6)
-      .count()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
     spark.catalog.clearCache()
   }
 
@@ -433,18 +418,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(both.forall(r => (r.getLong(1) & 15L) == r.getLong(0)))
   }
 
-  test("geometry defaults follow the corpus-size math") {
-    // planes: N/2^p ≈ targetBucket, monotone in N, floor of 1.
-    assert(Vec.planesForCorpus(500, 32) == 4)
-    assert(Vec.planesForCorpus(1L << 30, 4096) == 18)
-    assert(Vec.planesForCorpus(10, 4096) == 1)
-    assert(Vec.planesForCorpus(2000, 4096) == 1)
-    // cells: N/targetCell, clamped to [1, 2^20] (broadcastable centroids).
-    assert(Vec.cellsForCorpus(500, 64) == 7)
-    assert(Vec.cellsForCorpus(1L << 40, 4096) == (1 << 20))
-    assert(Vec.cellsForCorpus(100, 4096) == 1)
-  }
-
   test("deflate_ratio discriminates repetitive from high-entropy text") {
     val repetitive = ("the same line again " * 50).trim
     val prose = "a reasonably varied sentence with many different words " +
@@ -503,16 +476,18 @@ class LlmOpsSpec extends AnyFunSuite {
     val init = Seq((0L, Seq(2f, 2f)), (1L, Seq(8f, 8f))).toDF("cid", "cv")
     val initLocal: Vec.LocalCentroids =
       Seq((0L, Array(2f, 2f)), (1L, Array(8f, 8f)))
-    // training parity: same Lloyd math, float cast absorbs sum order
+    // training parity: one collect, then the in-process Lloyd passes —
+    // same Lloyd math, the float cast absorbs sum order
     val dist = Vec.kmeansTrain(vecs, "vec_id", "embedding", init,
       "cid", "cv", 2).as[(Long, Seq[Float])].collect().toMap
-    val local = Vec.kmeansTrainLocal(vecs, "embedding", initLocal, 2, 2)
+    val rows = vecs.select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toArray).toSeq
+    val local = Vec.kmeansTrainArrays(rows, initLocal, 2)
     assert(local.map { case (c, v) => c -> v.toSeq }.toMap == dist)
     assert(local.map(_._1) == local.map(_._1).sorted,
       "local centroids must come back cid-sorted")
     // iters=0 hands back the seed untouched
-    assert(Vec.kmeansTrainLocal(vecs, "embedding", initLocal, 0, 2)
-      .eq(initLocal))
+    assert(Vec.kmeansTrainArrays(rows, initLocal, 0).eq(initLocal))
     // assignment parity with the DataFrame path on the TRAINED set
     val localDf = local.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cv")
     val viaJoin = Vec.ivfAssign(vecs, "vec_id", "embedding",
@@ -522,7 +497,11 @@ class LlmOpsSpec extends AnyFunSuite {
     val viaExpr = vecs.select(col("vec_id"),
         Vec.nearestCellExpr(col("embedding"), local))
       .as[(Long, Long)].collect().toMap
-    assert(viaExpr == viaJoin)
+    // the driver-side assignment IVFPQ's residual training uses
+    val viaLocal = vecs.as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => id -> Vec.nearestCidLocal(v.toArray, local) }
+      .toMap
+    assert(viaExpr == viaJoin && viaLocal == viaJoin)
     // probe order: ascending (d2, cid), cid breaking exact ties
     val tied: Vec.LocalCentroids =
       Seq((7L, Array(0f, 0f)), (2L, Array(0f, 0f)), (5L, Array(3f, 4f)))
@@ -533,6 +512,14 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(Seq(Tuple1(Seq(0f, 0f))).toDF("embedding")
       .select(Vec.probeCellsExpr(col("embedding"), tied, 2))
       .head.getSeq[Long](0) == Seq(2L, 7L))
+    // all three assignment paths break the exact (d2, cid) tie on cid
+    val q = Seq((0L, Seq(0f, 0f))).toDF("vec_id", "embedding")
+    val tiedDf = tied.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cv")
+    assert(Vec.ivfAssign(q, "vec_id", "embedding", tiedDf, "cid", "cv")
+      .select(col("cell_id")).as[Long].head() == 2L)
+    assert(q.select(Vec.nearestCellExpr(col("embedding"), tied))
+      .as[Long].head() == 2L)
+    assert(Vec.nearestCidLocal(Array(0f, 0f), tied) == 2L)
   }
 
   test("LocalCentroidSweep: one training run per (key, session), clear() " +
@@ -546,7 +533,8 @@ class LlmOpsSpec extends AnyFunSuite {
     var trainings = 0
     def train = {
       trainings += 1
-      Vec.kmeansTrainLocal(vecs, "embedding", initLocal, 2, 2)
+      Vec.kmeansTrainArrays(vecs.select(col("embedding")).collect()
+        .map(_.getSeq[Float](0).toArray).toSeq, initLocal, 2)
     }
     val c1 = sweep(Round, spark, "vecs", "k1")(train)
     val c2 = sweep(Round, spark, "vecs", "k1")(train)
@@ -1013,11 +1001,13 @@ class LlmOpsSpec extends AnyFunSuite {
 
   test("bm25TopK: exact fixed-point scores; tf and length normalization " +
     "rank as BM25 says; non-matching docs absent") {
-    // corpus: N=4, dl = 3,3,3,1 -> sumdl=10, avgdl=2.5; df(x)=3
-    val docs = Seq((1L, "x x y"), (2L, "x y y"), (3L, "z z z"), (4L, "x"))
-      .toDF("doc_id", "text")
+    // corpus "x x y", "x y y", "z z z", "x" as its (id, term, tf, dl)
+    // postings: N=4, dl = 3,3,3,1 -> sumdl=10, avgdl=2.5; df(x)=3
+    val tf = Seq((1L, "x", 2L, 3L), (1L, "y", 1L, 3L), (2L, "x", 1L, 3L),
+        (2L, "y", 2L, 3L), (3L, "z", 3L, 3L), (4L, "x", 1L, 1L))
+      .toDF("doc_id", "term", "tf", "dl")
     val q = Seq(("qa", "x")).toDF("query_id", "term")
-    val out = T.bm25TopK(docs, "doc_id", col("text"), q, k = 10)
+    val out = T.bm25TopKFromTf(tf, "doc_id", Seq(4L).toDF("__n"), q, k = 10)
       .collect().map(r => r.getLong(1) -> (r.getInt(2), r.getLong(3)))
       .toMap
     // the operator's exact double pipeline, replayed here op-for-op
@@ -1189,33 +1179,15 @@ class LlmOpsSpec extends AnyFunSuite {
       inter = (sa & sb).size
       if 2L * inter >= (sa.size + sb.size - inter)
     } yield (a, b) -> inter.toDouble / (sa.size + sb.size - inter)).toMap
-    val got = D.withPrefixFilterPairs(docs, "doc_id", kn, 1, 2) { pairs =>
-      pairs.collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    }
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = D.prefixFilterPairs(docs, "doc_id", kn, 1, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got == expected)
     assert(expected.nonEmpty) // the corpus actually exercises the join
-  }
-
-  test("withPrefixFilterPairs releases its three caches (sets, prefix, " +
-    "candidates); prefixFilterPairs keeps them") {
-    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w q"))
-      .toDF("doc_id", "text")
-    val kn = D.wordKernels(col("text"), 3)
-    spark.catalog.clearCache()
-    SparkEntry.clearSessionSweeps()
-    // Diff against a snapshot, not global emptiness: localCheckpoint
-    // RDDs from EARLIER suites linger in getPersistentRDDs until the
-    // ContextCleaner GCs them, and a global assertion flakes on suite
-    // order (seen r9: a TextOps checkpoint from a prior test).
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val n = D.withPrefixFilterPairs(docs, "doc_id", kn, 1, 2)(_.count())
-    assert(n == 1L)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"withPrefixFilterPairs must leave no new cache entries: $leaked")
-    D.prefixFilterPairs(docs, "doc_id", kn, 1, 2).count()
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
+    // sets, prefix and candidates stay persisted until clearCache
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size == 3, s"prefixFilterPairs persisted $held")
     spark.catalog.clearCache()
   }
 
@@ -1288,9 +1260,11 @@ class LlmOpsSpec extends AnyFunSuite {
   // -------------------------------------------------- lexical diversity
 
   test("lexicalDiversity: exact counts on a known corpus") {
-    val docs = Seq(("s1", "a a b"), ("s1", "a c"), ("s2", "x x x x"))
-      .toDF("source", "text")
-    val out = T.lexicalDiversity(docs, col("source"), col("text"))
+    // docs s1: "a a b", "a c"; s2: "x x x x" as (grp, __tok, __n) counts
+    val tc = Seq(("s1", "a", 3L), ("s1", "b", 1L), ("s1", "c", 1L),
+      ("s2", "x", 4L)).toDF("grp", "__tok", "__n")
+    val nd = Seq(("s1", 2L), ("s2", 1L)).toDF("grp", "n_docs")
+    val out = T.lexicalDiversityFromCounts(tc, nd)
       .collect().map(r => r.getString(0) -> r).toMap
     val s1 = out("s1") // tokens: a a b a c → n=5, types {a:3,b:1,c:1}
     assert(s1.getLong(1) == 2L && s1.getLong(2) == 5L &&
@@ -1315,15 +1289,24 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("dsirScore ranks target-vocabulary docs above off-target docs") {
-    val docs = Seq(
-      (1L, "alpha beta gamma alpha beta", true),
-      (2L, "alpha beta gamma gamma beta", true),
-      (3L, "zeta eta theta iota kappa", false),
-      (4L, "alpha beta gamma beta alpha", false), // target-looking raw doc
-      (5L, "zeta eta theta zeta eta", false))
-      .toDF("doc_id", "text", "tgt")
-    val out = T.dsirScore(docs, col("doc_id"), col("text"), col("tgt"),
-        buckets = 64)
+    // (doc_id, term, tf, tgt) postings of
+    //   1 "alpha beta gamma alpha beta"  (target)
+    //   2 "alpha beta gamma gamma beta"  (target)
+    //   3 "zeta eta theta iota kappa"
+    //   4 "alpha beta gamma beta alpha"  (target-looking raw doc)
+    //   5 "zeta eta theta zeta eta"
+    val tf = Seq(
+      (1L, "alpha", 2L, true), (1L, "beta", 2L, true), (1L, "gamma", 1L, true),
+      (2L, "alpha", 1L, true), (2L, "beta", 2L, true), (2L, "gamma", 2L, true),
+      (3L, "zeta", 1L, false), (3L, "eta", 1L, false),
+      (3L, "theta", 1L, false), (3L, "iota", 1L, false),
+      (3L, "kappa", 1L, false),
+      (4L, "alpha", 2L, false), (4L, "beta", 2L, false),
+      (4L, "gamma", 1L, false),
+      (5L, "zeta", 2L, false), (5L, "eta", 2L, false),
+      (5L, "theta", 1L, false))
+      .toDF("doc_id", "term", "tf", "tgt")
+    val out = T.dsirScoreFromTf(tf, col("doc_id"), col("tgt"), buckets = 64)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     // Doc 4 shares the target vocabulary → scores above the zeta docs.
     assert(out(4L) > out(3L) && out(4L) > out(5L))
@@ -1416,10 +1399,10 @@ class LlmOpsSpec extends AnyFunSuite {
     "table; degenerate single-bucket group yields null") {
     // freqs 8,4,2,1 → ranks 1..4: pts (x=ilog2 r, y=ilog2 f) =
     // (0,3),(1,2),(1,1),(2,0)
-    val text = (Seq.fill(8)("a") ++ Seq.fill(4)("b") ++ Seq.fill(2)("c") ++
-      Seq("d")).mkString(" ")
-    val docs = Seq(("g", text), ("one", "x y")).toDF("src", "text")
-    val out = T.zipfSlope(docs, col("src"), col("text"))
+    val tc = Seq(("g", "a", 8L), ("g", "b", 4L), ("g", "c", 2L),
+      ("g", "d", 1L), ("one", "x", 1L), ("one", "y", 1L))
+      .toDF("grp", "__tok", "__n")
+    val out = T.zipfSlopeFromCounts(tc)
       .collect().map(r => r.getString(0) -> r).toMap
     val g = out("g")
     // n=4, sx=4, sy=6, sxy=0*3+1*2+1*1+2*0=3, sxx=0+1+1+4=6
@@ -1429,8 +1412,8 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(g.getDouble(3) == (6.0 - (-1.5) * 4.0) / 4.0) // intercept = 3
     // "one": tokens x,y each freq 1 → ranks 1,2 → x∈{0,1}, y=0 — den>0
     // (x varies) so slope 0; make a REAL degenerate: single token.
-    val deg = T.zipfSlope(Seq(("d", "solo")).toDF("s", "t"), col("s"),
-      col("t")).collect()
+    val deg = T.zipfSlopeFromCounts(
+      Seq(("d", "solo", 1L)).toDF("grp", "__tok", "__n")).collect()
     assert(deg.head.isNullAt(2) && deg.head.isNullAt(3))
   }
 
@@ -1464,14 +1447,14 @@ class LlmOpsSpec extends AnyFunSuite {
     "integer division") {
     // 4 docs, each starts with the template 'copy right' and continues
     // uniquely → every doc: 1 boilerplate bigram of its distinct set.
-    val docs = Seq(
-      (1L, "copy right alpha beta"),   // grams: copy-right, right-alpha, alpha-beta → 1/3 → decile 3
-      (2L, "copy right gamma delta"),  // 1/3 → 3
-      (3L, "copy right epsilon"),      // copy-right, right-epsilon → 1/2 → 5
-      (4L, "copy right"))              // 1/1 → 10
-      .toDF("doc_id", "text")
-    val out = T.boilerplateCensus(docs, col("doc_id"),
-        T.tokens(col("text")), n = 2, minDocPct = 90)
+    // Fed as the distinct (doc_id, term) bigram rows the artifact holds.
+    val grams = Seq(
+      (1L, "copy right"), (1L, "right alpha"), (1L, "alpha beta"), // 1/3 → 3
+      (2L, "copy right"), (2L, "right gamma"), (2L, "gamma delta"), // 1/3 → 3
+      (3L, "copy right"), (3L, "right epsilon"),                    // 1/2 → 5
+      (4L, "copy right"))                                           // 1/1 → 10
+      .toDF("doc_id", "term")
+    val out = T.boilerplateCensusFromTf(grams, minDocPct = 90)
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3))).toMap
     // 'copy right' df=4 of 4 docs → 100% ≥ 90% → boilerplate; all other
@@ -1483,10 +1466,9 @@ class LlmOpsSpec extends AnyFunSuite {
     // Threshold scales with the corpus: at 100% the shared bigram is
     // still in every doc; doubling the corpus with docs lacking it
     // drops it below any >50% bar.
-    val out2 = T.boilerplateCensus(
-      docs.union(Seq((5L, "x y"), (6L, "y z"), (7L, "z w"),
-        (8L, "w x")).toDF("doc_id", "text")),
-      col("doc_id"), T.tokens(col("text")), n = 2, minDocPct = 90)
+    val out2 = T.boilerplateCensusFromTf(
+      grams.union(Seq((5L, "x y"), (6L, "y z"), (7L, "z w"),
+        (8L, "w x")).toDF("doc_id", "term")), minDocPct = 90)
       .collect().map(r => r.getInt(0)).toSet
     assert(out2 == Set(0), s"no gram survives 90% of 8 docs: $out2")
   }

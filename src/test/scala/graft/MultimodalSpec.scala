@@ -4,10 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.MultimodalOps
-import graft.operators.MultimodalOps.RawAsset
 
-/** Unit tests for the multimodal binary-column plumbing (stubbed decode,
-  * real schema/chunking/partition-batch shape). */
+/** Unit tests for the multimodal binary-column plumbing: the asset
+  * adapter, payload chunking and decode-free perceptual-hash dedup. */
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -28,200 +27,6 @@ class MultimodalSpec extends AnyFunSuite {
     val ch = df.select(MultimodalOps.chunks(col("content"), 32).as("c"))
       .head.getSeq[Array[Byte]](0)
     assert(ch.map(_.length).toSeq == Seq(32, 32, 6)) // 70 = 32+32+6
-  }
-
-  test("frameSample keeps every Nth frame with its index") {
-    val df = Seq((1L, "x" * 100)).toDF("id", "text")
-      .withColumn("content", encode(col("text"), "UTF-8"))
-    val frames = MultimodalOps.frameSample(df, col("content"), 10, 3)
-      .select("frame_idx").as[Int].collect().sorted
-    assert(frames.toSeq == Seq(0, 3, 6, 9)) // 10 frames, every 3rd
-  }
-
-  test("decodePartitions: stub decoder is deterministic over partitions") {
-    val ds = Seq(
-      RawAsset(1L, "image", "abc".getBytes("UTF-8")),
-      RawAsset(2L, "audio", Array.emptyByteArray)).toDS.repartition(2)
-    val out = MultimodalOps.decodePartitions(ds).collect()
-      .sortBy(_.asset_id)
-    // 'a'=97,'b'=98,'c'=99: sum 294; hist buckets 1,2,3 each get 1/3
-    assert((out(0).asset_id, out(0).modality, out(0).n_bytes,
-      out(0).checksum) == (1L, "image", 3, 294L))
-    assert(out(0).features.toSeq ==
-      Seq(0f, 1f / 3, 1f / 3, 1f / 3, 0f, 0f, 0f, 0f))
-    assert(out(1).n_bytes == 0 && out(1).checksum == 0L)
-  }
-
-  /** 2x2 P6 fixture: red, green, blue, (10,20,30) — with a header comment. */
-  private def ppmFixture: Array[Byte] =
-    "P6\n# fixture\n2 2\n255\n".getBytes("US-ASCII") ++ Array[Int](
-      255, 0, 0, 0, 255, 0, 0, 0, 255, 10, 20, 30).map(_.toByte)
-
-  /** Mono 8 kHz 16-bit PCM fixture with samples 100, -200, 300, -400. */
-  private def wavFixture: Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(52)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(44)
-      .put("WAVE".getBytes("US-ASCII"))
-    bb.put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1).putInt(8000).putInt(16000)
-      .putShort(2).putShort(16)
-    bb.put("data".getBytes("US-ASCII")).putInt(8)
-    Seq(100, -200, 300, -400).foreach(s => bb.putShort(s.toShort))
-    bb.array()
-  }
-
-  test("pureJvmDecoder decodes a real PPM: dimensions and channel means") {
-    val out = MultimodalOps.decodePartitions(
-      Seq(RawAsset(7L, "image", ppmFixture)).toDS,
-      MultimodalOps.pureJvmDecoder()).head
-    assert(out.checksum == 825L) // 255*3 + 10+20+30
-    val f = out.features
-    assert((f(0), f(1), f(2)) == (2f, 2f, 255f))
-    assert((f(3), f(4), f(5)) == (66.25f, 68.75f, 71.25f)) // per-channel
-    assert(f(6) == 68.75f) // mean luma = 825 / 12
-  }
-
-  test("pureJvmDecoder decodes a real WAV: rate, sample count, amplitude") {
-    val out = MultimodalOps.decodePartitions(
-      Seq(RawAsset(8L, "audio", wavFixture)).toDS,
-      MultimodalOps.pureJvmDecoder()).head
-    assert(out.checksum == 1000L) // sum |samples|
-    val f = out.features
-    assert((f(0), f(1), f(2)) == (8000f, 1f, 4f))
-    assert(f(3) == 250f)                       // mean |sample|
-    assert(math.abs(f(4) - 273.8613f) < 1e-3)  // rms = sqrt(75000)
-    assert(f(5) == 400f)                       // peak
-  }
-
-  /** 2x2 image encoded by the JDK's own ImageIO writer for `fmt`:
-    * red, green, blue, white (channel sums 510/510/510, total 1530) —
-    * except GIF, whose JDK writer QUANTIZES through a heuristic palette
-    * (white comes back blue on this fixture), so GIF gets a uniform red
-    * image any palette round-trips exactly (sum 1020, means 255/0/0). */
-  private def imageFixture(fmt: String): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(2, 2,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    if (fmt == "gif") (0 to 1).foreach(y =>
-      (0 to 1).foreach(x => img.setRGB(x, y, 0xff0000)))
-    else {
-      img.setRGB(0, 0, 0xff0000); img.setRGB(1, 0, 0x00ff00)
-      img.setRGB(0, 1, 0x0000ff); img.setRGB(1, 1, 0xffffff)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, fmt, bos),
-      s"JDK ships no $fmt writer")
-    bos.toByteArray
-  }
-
-  test("pureJvmDecoder decodes real PNG/BMP/GIF end-to-end through " +
-    "javax.imageio: dimensions, channel means, the PPM feature contract") {
-    for (fmt <- Seq("png", "bmp", "gif")) {
-      val bytes = imageFixture(fmt)
-      val out = MultimodalOps.decodePartitions(
-        Seq(RawAsset(9L, "image", bytes)).toDS,
-        MultimodalOps.pureJvmDecoder()).head
-      assert(out.n_bytes == bytes.length, s"$fmt n_bytes")
-      val (sum, means) =
-        if (fmt == "gif") (1020L, (255f, 0f, 0f))
-        else (1530L, (127.5f, 127.5f, 127.5f))
-      assert(out.checksum == sum, s"$fmt checksum was ${out.checksum}")
-      val f = out.features
-      assert((f(0), f(1), f(2)) == (2f, 2f, 255f), s"$fmt header features")
-      assert((f(3), f(4), f(5)) == means,
-        s"$fmt channel means were ${f.toSeq}")
-      assert(f(6) == (sum / 12f), s"$fmt mean luma")
-    }
-    // PNG magic with a truncated body: ImageIO throws inside, the seam
-    // must fall back to the stub, never propagate.
-    val corrupt = imageFixture("png").take(20)
-    val fb = MultimodalOps.decodePartitions(
-      Seq(RawAsset(10L, "image", corrupt)).toDS,
-      MultimodalOps.pureJvmDecoder()).head
-    assert(fb.checksum == MultimodalOps.stubDecoder(
-      RawAsset(10L, "image", corrupt)).checksum,
-      "corrupt PNG must take the stub path")
-  }
-
-  test("animated GIF decodes FIRST FRAME ONLY — the documented ImageIO " +
-    "contract (features cover frame 0; all-frame sampling is the codec " +
-    "seam's job)") {
-    // Two solid 2x2 frames with palette-exact colors (red, then blue —
-    // single-color frames survive the JDK writer's palette quantization
-    // exactly, the imageFixture discipline). If the decoder ever summed
-    // every frame, the checksum would read 2040 and the red mean would
-    // dilute to 127.5; the pinned contract is frame 0 alone.
-    def frame(rgb: Int): java.awt.image.BufferedImage = {
-      val img = new java.awt.image.BufferedImage(2, 2,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      (0 to 1).foreach(y => (0 to 1).foreach(x => img.setRGB(x, y, rgb)))
-      img
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val w = javax.imageio.ImageIO.getImageWritersBySuffix("gif").next()
-    w.setOutput(ios)
-    w.prepareWriteSequence(null)
-    Seq(0xff0000, 0x0000ff).foreach(c => w.writeToSequence(
-      new javax.imageio.IIOImage(frame(c), null, null),
-      w.getDefaultWriteParam))
-    w.endWriteSequence(); ios.close()
-    val bytes = bos.toByteArray
-    assert(new String(bytes, 0, 4, "US-ASCII") == "GIF8", "fixture sanity")
-    val out = MultimodalOps.decodePartitions(
-      Seq(RawAsset(11L, "image", bytes)).toDS,
-      MultimodalOps.pureJvmDecoder()).head
-    assert(out.checksum == 1020L,
-      s"expected frame-0-only channel sum 1020, got ${out.checksum}")
-    val f = out.features
-    assert((f(0), f(1)) == (2f, 2f))
-    assert((f(3), f(4), f(5)) == ((255f, 0f, 0f)),
-      s"frame-0 means must be pure red, got ${f.toSeq}")
-  }
-
-  test("pureJvmDecoder falls back to the stub for unknown or truncated " +
-    "payloads") {
-    val truncatedPpm = ppmFixture.take(14) // header, body missing
-    val out = MultimodalOps.decodePartitions(
-      Seq(RawAsset(1L, "image", "abc".getBytes("UTF-8")),
-        RawAsset(2L, "image", truncatedPpm)).toDS,
-      MultimodalOps.pureJvmDecoder()).collect().sortBy(_.asset_id)
-    // identical to the stub's documented output for "abc"
-    assert(out(0).checksum == 294L && out(0).n_bytes == 3)
-    // truncated body: dispatched to PPM but fails the length check -> stub
-    assert(out(1).n_bytes == truncatedPpm.length)
-    assert(out(1).features.sum > 0f) // stub histogram, not PPM shape
-  }
-
-  test("pureJvmDecoder survives adversarial headers: it falls back, " +
-    "never throws or spins (ADVICE r4)") {
-    // WAV whose first chunk declares length 0xFFFFFFF8 — as an Int that
-    // is -8, making the old walk's step 0 (infinite loop); as unsigned
-    // it overflows any cursor bound. Must fall back to the stub.
-    val evilWav = {
-      val bb = java.nio.ByteBuffer.allocate(24)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes("US-ASCII")).putInt(16)
-        .put("WAVE".getBytes("US-ASCII"))
-      bb.put("junk".getBytes("US-ASCII")).putInt(0xFFFFFFF8)
-      bb.putInt(0)
-      bb.array()
-    }
-    // PPM with a 12-digit width (Int.parseInt throws) and one whose
-    // w*h*3 overflows Int past the length guard (46341^2*3 < 0 in Int).
-    val evilPpm1 = "P6\n123456789012 2\n255\n".getBytes("US-ASCII")
-    val evilPpm2 = "P6\n46341 46341\n255\nxxx".getBytes("US-ASCII")
-    val out = MultimodalOps.decodePartitions(
-      Seq(RawAsset(1L, "audio", evilWav),
-        RawAsset(2L, "image", evilPpm1),
-        RawAsset(3L, "image", evilPpm2)).toDS,
-      MultimodalOps.pureJvmDecoder()).collect().sortBy(_.asset_id)
-    assert(out.length == 3) // reached: no hang, no exception
-    // all three fell back to the stub (byte-histogram features)
-    out.foreach(o => assert(o.features.length == 8))
-    assert(out(0).n_bytes == evilWav.length)
-    assert(out(1).n_bytes == evilPpm1.length)
-    assert(out(2).n_bytes == evilPpm2.length)
   }
 
   test("binarySimhash: identical payloads share the hash, a small edit " +
