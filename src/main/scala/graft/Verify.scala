@@ -11,10 +11,6 @@ object Verify {
     // mid-run reproduces the q338 race.
     HarnessLock.acquireOrDie("verify")
     val spark = Session.local()
-    // The oracle twins for the export-reading queries (q186/q197/q338)
-    // name per-corpus /tmp paths — bind the dir so the dumped SQL globs
-    // the same files the queries just wrote.
-    SparkEntry.bindCorpusDir(sfDir)
     // Verify owns the export-dump lifecycle (it rebuilds its corpus's
     // dumps below, and its oracle twins are the only readers): sweep
     // stale ones — tables too — before dumping. Bench deliberately
@@ -57,7 +53,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // The twins of the export-reading queries (q186/q197/q338) name
+    // per-corpus /tmp paths: built for sfDir, the dumped SQL globs the
+    // same files the queries just wrote.
+    val json = graft.oracle.OracleSql(sfDir)
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

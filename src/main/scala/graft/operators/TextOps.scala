@@ -103,12 +103,6 @@ object TextOps {
       st => concat_ws(" ", slice(words, st, lit(size))))
   }
 
-  /** Set Jaccard similarity of two (distinct-element) arrays, as the exact
-    * double quotient of two small ints — bit-identical across engines. */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
-
   /** Count of tokens belonging to a (small, literal) stopword list. */
   def stopwordCount(words: Column, stopwords: Seq[String]): Column =
     size(filter(words, w => w.isin(stopwords: _*)))

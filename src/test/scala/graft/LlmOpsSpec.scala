@@ -30,12 +30,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(rows(1) == Seq.empty) // size<n must NOT produce sequence(0,-1)
   }
 
-  test("jaccard is exact |intersect|/|union| on distinct sets") {
-    val df = Seq((Seq("x", "y", "z"), Seq("y", "z", "w"))).toDF("a", "b")
-      .select(T.jaccard(col("a"), col("b")))
-    assert(df.head.getDouble(0) == 0.5)
-  }
-
   test("collocationLift: exact lift ratios, deterministic tie order, " +
     "single-token docs contribute nothing") {
     val docs = Seq("x y", "x y", "p q", "p z", "x q", "solo")

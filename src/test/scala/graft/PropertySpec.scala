@@ -79,20 +79,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("jaccard is symmetric, bounded, 1 on self, 0 on disjoint") {
-    val words = Gen.listOfN(8, Gen.oneOf("a", "b", "c", "d", "e", "f"))
-    forAll2(words, words) { (wa, wb) =>
-      val df = Seq((wa.distinct, wb.distinct, wa.distinct.map("z" + _)))
-        .toDF("a", "b", "zc")
-      val Seq(ab, ba, aa, disj) = df.select(
-        T.jaccard(col("a"), col("b")), T.jaccard(col("b"), col("a")),
-        T.jaccard(col("a"), col("a")), T.jaccard(col("a"), col("zc")))
-        .head.toSeq.map(_.asInstanceOf[Double]).toSeq
-      assert(ab == ba && ab >= 0.0 && ab <= 1.0)
-      assert(aa == 1.0 && disj == 0.0)
-    }
-  }
-
   test("unionAll preserves total row count") {
     forAll2(rows, rows) { (a, b) =>
       val (da, db) = (a.toDF("k", "v", "x"), b.toDF("k", "v", "x"))

@@ -3,14 +3,14 @@
 
 Lists every public member of an object under `graft.operators` that no
 surface root reaches, and says whether `src/test` names it. The roots are
-every main source outside `graft/operators/` (`SparkEntry`, `EtlFlow`,
-`Tables`, `StreamOps`, `Bench`, `Verify`, the sources, ...) plus
-`perfbench/scala`. From them the walk follows references into operator
-members: `Alias.name` where `Alias` is the object or an import alias of
-it, and a bare `name` inside the member's own object. A member's body
-runs from its definition line to the next line indented no deeper than
-it. Comments and string text are blanked first, so a scaladoc link or a
-column name is not a reference.
+every main source outside `graft/operators/` (`SparkEntry`, the DuckDB
+twins in `graft.oracle`, `EtlFlow`, `Tables`, `StreamOps`, `Bench`,
+`Verify`, the sources, ...) plus `perfbench/scala`. From them the walk
+follows references into operator members: `Alias.name` where `Alias` is
+the object or an import alias of it, and a bare `name` inside the
+member's own object. A member's body runs from its definition line to
+the next line indented no deeper than it. Comments and string text are
+blanked first, so a scaladoc link or a column name is not a reference.
 
 Name-based, so it errs towards "reached" (two members of one object
 sharing a name are one node); `apply` is skipped, since calls to it are
