@@ -19,34 +19,23 @@ import graft.functions.{DeflateRatio, DotProductF32, DotProductF64, I8Dot,
   * this for every harness session). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f32"),
-      new ExpressionInfo(classOf[DotProductF32].getName, "dot_f32"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "dot_f32 takes exactly 2 arguments")
-        DotProductF32(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotProductF64].getName, "dot_f64"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "dot_f64 takes exactly 2 arguments")
-        DotProductF64(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "simhash60 takes exactly 1 argument")
-        SimHash60(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "minhash_sig takes exactly 1 argument")
-        MinHashSig(args.head)
-      }))
+    // kernels whose only argument check is the count
+    def exactly(name: String, cls: Class[_], n: Int)
+               (mk: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (args: Seq[Expression]) => {
+          require(args.length == n,
+            s"$name takes exactly $n argument${if (n == 1) "" else "s"}")
+          mk(args)
+        }))
+    exactly("dot_f32", classOf[DotProductF32], 2)(a =>
+      DotProductF32(a.head, a(1)))
+    exactly("dot_f64", classOf[DotProductF64], 2)(a =>
+      DotProductF64(a.head, a(1)))
+    exactly("simhash60", classOf[SimHash60], 1)(a => SimHash60(a.head))
+    exactly("minhash_sig", classOf[MinHashSig], 1)(a => MinHashSig(a.head))
     // fused n-gram kernels: (text, n-literal)
     def nGram(name: String, mk: (Expression, Int) => Expression)
              (args: Seq[Expression]): Expression = {
@@ -84,39 +73,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("word_min_hash32"),
       new ExpressionInfo(classOf[WindowMinHash32].getName, "word_min_hash32"),
       nGram("word_min_hash32", WindowMinHash32(_, _, word = true))))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "sorted_intersect_count takes exactly 2 arguments")
-        SortedIntersectCount(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersect].getName,
-        "sorted_intersect"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          "sorted_intersect takes exactly 2 arguments")
-        SortedIntersect(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("deflate_ratio"),
-      new ExpressionInfo(classOf[DeflateRatio].getName, "deflate_ratio"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "deflate_ratio takes exactly 1 argument")
-        DeflateRatio(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("token_hash60_array"),
-      new ExpressionInfo(classOf[TokenHash60Array].getName,
-        "token_hash60_array"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "token_hash60_array takes exactly 1 argument")
-        TokenHash60Array(args.head)
-      }))
+    exactly("sorted_intersect_count", classOf[SortedIntersectCount], 2)(a =>
+      SortedIntersectCount(a.head, a(1)))
+    exactly("sorted_intersect", classOf[SortedIntersect], 2)(a =>
+      SortedIntersect(a.head, a(1)))
+    exactly("deflate_ratio", classOf[DeflateRatio], 1)(a =>
+      DeflateRatio(a.head))
+    exactly("token_hash60_array", classOf[TokenHash60Array], 1)(a =>
+      TokenHash60Array(a.head))
     ext.injectFunction((
       new FunctionIdentifier("lsh_bucket_f32"),
       new ExpressionInfo(classOf[LshBucketF32].getName, "lsh_bucket_f32"),
@@ -130,20 +94,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         LshBucketF32(args.head, p)
       }))
-    ext.injectFunction((
-      new FunctionIdentifier("i8_quantize"),
-      new ExpressionInfo(classOf[I8Quantize].getName, "i8_quantize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "i8_quantize takes exactly 1 argument")
-        I8Quantize(args.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("i8_dot"),
-      new ExpressionInfo(classOf[I8Dot].getName, "i8_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "i8_dot takes exactly 2 arguments")
-        I8Dot(args.head, args(1))
-      }))
+    exactly("i8_quantize", classOf[I8Quantize], 1)(a => I8Quantize(a.head))
+    exactly("i8_dot", classOf[I8Dot], 2)(a => I8Dot(a.head, a(1)))
     ext.injectFunction((
       new FunctionIdentifier("word_window_select"),
       new ExpressionInfo(classOf[WindowHashSelect].getName,
@@ -185,12 +137,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         RedactCount(args.head, p, t)
       }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "nfc_normalize takes exactly 1 argument")
-        NfcNormalize(args.head)
-      }))
+    exactly("nfc_normalize", classOf[NfcNormalize], 1)(a =>
+      NfcNormalize(a.head))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,37 +33,40 @@ object SparkEntry {
   /** Exact-sum helper: decimal-cast sum exported as double. */
   private def dsum(c: Column): Column = sum(c).cast("double")
 
-  /** Spread a scan across all cores before per-row expression-heavy work
-    * (hashing, shingling) — but ONLY when the source arrives with fewer
-    * splits than cores (a small parquet file is one partition and would
-    * serialize the map work on a single thread). At cluster scale the
-    * file splits already provide parallelism and the guard makes this a
-    * no-op — an unconditional repartition would be a full shuffle of the
-    * corpus for nothing. */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame = {
+  /** Spread a scan across all cores before per-row kernel work (hashing,
+    * shingling, vector math) — but ONLY when the frame arrives with fewer
+    * partitions than cores (a small parquet file is one split and would
+    * serialize the map work on a single thread) AND its plan-stats size
+    * (= file bytes for a scan) is at least `minBytes`. The partition
+    * count is checked first, so a frame that already splits never reads
+    * plan stats. At cluster scale the file splits already provide
+    * parallelism and the guard makes this a no-op — an unconditional
+    * repartition would be a full shuffle of the corpus for nothing.
+    *
+    * The byte gate is per kernel, not global: the rescue exchange only
+    * pays when the kernel work (∝ scan bytes) exceeds the exchange +
+    * AQE-barrier cost (~0.1–0.4 s measured). Heavy per-row kernels
+    * spread at any size (gate 0, r17); the light per-doc ones wait for
+    * [[SpreadMinBytes]] (r18). */
+  private[graft] def spread(s: SparkSession, df: DataFrame,
+                            minBytes: Long): DataFrame = {
     val target = s.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** [[spread]] gated on SCAN SIZE (r18): the documents parquet is one
-    * ROW GROUP, so its scan is unsplittable below file granularity and
-    * per-doc kernels run on a single task at any SF — but the rescue
-    * exchange only pays when the kernel work (∝ scan bytes) exceeds the
-    * exchange + AQE-barrier cost (~0.1–0.4 s measured). Gate at 4 MB:
-    * the sf0.1 corpus (0.6 MB, kernels ≤ 0.5 s single-task) stays on
-    * the raw scan where the r18 A/B measured the exchange as a pure
-    * loss, the sf1 probe (6 MB, kernels 1.5–4.4 s single-task) spreads
-    * (measured −51% over the band, q60 −87%), and at cluster scale
-    * multi-row-group files already split so the partition guard makes
-    * it a no-op. Size from plan stats = file bytes for a scan. */
-  private val SpreadMinBytes = 4L * 1024 * 1024
-  private def spreadBig(s: SparkSession, df: DataFrame): DataFrame = {
-    val target = s.sparkContext.defaultParallelism
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        SpreadMinBytes && df.rdd.getNumPartitions < target)
+    if (df.rdd.getNumPartitions < target &&
+        df.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes)
       df.repartition(target)
     else df
   }
+
+  /** The r18 byte gate of the light per-doc kernels: the documents
+    * parquet is one ROW GROUP, so its scan is unsplittable below file
+    * granularity and per-doc kernels run on a single task at any SF.
+    * Gate at 4 MB: the sf0.1 corpus (0.6 MB, kernels ≤ 0.5 s
+    * single-task) stays on the raw scan where the r18 A/B measured the
+    * exchange as a pure loss, the sf1 probe (6 MB, kernels 1.5–4.4 s
+    * single-task) spreads (measured −51% over the band, q60 −87%), and
+    * at cluster scale multi-row-group files already split so the
+    * partition guard makes it a no-op. */
+  private val SpreadMinBytes = 4L * 1024 * 1024
 
   /** The embeddings corpus [[spread]] across cores (r17, guide §2.1):
     * every ANN/quantization path runs per-row vector kernels (nearest
@@ -76,7 +80,219 @@ object SparkEntry {
     * (`vec_id < 20`) keep reading the raw scan — tiny by construction
     * and usually broadcast. */
   private def emb(s: SparkSession, dir: String): DataFrame =
-    spread(s, t(s, dir, "embeddings"))
+    spread(s, t(s, dir, "embeddings"), 0L)
+
+  /** The documents corpus [[spread]] across cores at any size, for the
+    * heavy per-doc kernels (n-gram models, span dedup, phrase search). */
+  private def spreadDocs(s: SparkSession, dir: String): DataFrame =
+    spread(s, t(s, dir, "documents"), 0L)
+
+  /** The documents corpus [[spread]] only above [[SpreadMinBytes]], for
+    * the light per-doc kernels (token stats, shingle sets); q19 is the
+    * first of them. */
+  private def gatedSpreadDocs(s: SparkSession, dir: String): DataFrame =
+    spread(s, t(s, dir, "documents"), SpreadMinBytes)
+
+  // ------------------------------------------------- shared query fragments
+  // Star-schema joins, exact derived terms and readouts that several
+  // query bodies share. The joins apply through `Dataset.transform`; a
+  // fragment whose DuckDB twin is one `sql*` value in OracleSql names it.
+
+  /** `l_extendedprice` in exact integer cents. */
+  private def priceCents: Column =
+    expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
+
+  /** Exact e4 revenue of a line: price cents × (10000 − discount basis
+    * points), the integer form of `l_extendedprice * (1 - l_discount)`. */
+  private def revE4: Column =
+    priceCents *
+      (lit(10000L) - expr("CAST(round(l_discount * 10000) AS BIGINT)"))
+
+  /** Event `value` in exact integer cents. */
+  private def valueCents: Column =
+    (col("value").cast("decimal(12,2)") * lit(100)).cast("long")
+
+  /** A purchase's value in cents, 0 for other events (`cents`). */
+  private def purchaseCents: Column =
+    when(col("event_type") === "purchase" && col("value").isNotNull,
+      valueCents).otherwise(lit(0L)).as("cents")
+
+  /** Events with a value, for the per-event-type screens. */
+  private def eventValues(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events").filter(col("value").isNotNull)
+
+  /** Per-user A/B readout input: events `(user_id, us, cols…)` split at
+    * the midpoint of their µs range (`mid`) and grouped per user. The
+    * Spark twin of `sqlAbCentsCtes` / `sqlAbEventCtes` (`ev`) and
+    * `sqlAbMidCte` (`m`) in [[graft.oracle.OracleSql]]. */
+  private def abPerUser(s: SparkSession, dir: String,
+                        cols: Column*): RelationalGroupedDataset = {
+    val ev = t(s, dir, "events").select(
+      col("user_id") +: expr("unix_micros(ts)").as("us") +: cols: _*)
+    val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
+    ev.crossJoin(broadcast(midDf)).groupBy(col("user_id"))
+  }
+
+  /** 1 when a user purchased after the A/B midpoint, else 0. */
+  private def abPostPurchase: Column =
+    max(when(col("us") >= col("mid") &&
+      col("event_type") === "purchase", 1L).otherwise(0L))
+
+  /** Events grouped per (event_type, `day`). */
+  private def eventsPerDay(s: SparkSession, dir: String,
+                           day: Column): RelationalGroupedDataset =
+    t(s, dir, "events").groupBy(col("event_type"), day)
+
+  /** An event's day since the epoch (`day`). */
+  private def epochDay: Column =
+    datediff(to_date(col("ts")), to_date(lit("1970-01-01")))
+      .cast("long").as("day")
+
+  /** Whole days from order date to ship date. */
+  private def shipLagDays: Column =
+    expr("unix_micros(l_shipdate) div 86400000000") -
+      expr("unix_micros(o_orderdate) div 86400000000")
+
+  /** SCD2 state history of `ev`'s event types per user, versions
+    * ordered by (ts, event_id): the Spark twin of `sqlScdLagCtes`. */
+  private def scdHistory(ev: DataFrame): DataFrame =
+    Ti.scd2(
+      ev.select(col("user_id"), col("event_type"), col("ts"),
+        col("event_id")),
+      Seq("user_id"), col("event_type"), "ts",
+      Seq(unix_micros(col("ts")), col("event_id")))
+
+  /** Value counts `f` of `grouped`'s (g, v) cells, with each g's running
+    * count `cum` in v order and its total `tot`: the Spark twin of
+    * `sqlCumCountCte`. */
+  private def cumCounts(grouped: RelationalGroupedDataset, g: String,
+                        v: String): DataFrame =
+    grouped.agg(count(lit(1)).as("f"))
+      .withColumn("cum", sum(col("f")).over(Window
+        .partitionBy(col(g)).orderBy(col(v))))
+      .withColumn("tot", sum(col("f")).over(Window
+        .partitionBy(col(g))))
+
+  /** One-way ANOVA's Σ term over sources, folded in source order:
+    * `sum_terms` of `sqlAnovaCtes`. */
+  private def anovaSumTerms: Column =
+    expr("aggregate(array_sort(collect_list(struct(source, term)))" +
+      ", 0.0D, (acc, x) -> acc + x.term)").as("sum_terms")
+
+  /** `agg`'s per-`g` success counts `succ` of `total` with their rate
+    * (as `rate`) and its 95% Wilson band (`wilson_lo`, `wilson_hi`): the
+    * Spark twin of `sqlWilsonCtes` + `sqlWilsonBounds`. */
+  private def wilsonRates(agg: DataFrame, g: String, total: String,
+                          succ: String, rate: String): DataFrame = {
+    val (lo, hi) = An.wilsonBounds(col(succ), col(total), 1.96)
+    agg.select(col(g), col(total), col(succ),
+      (col(succ).cast("double") / col(total).cast("double")).as(rate),
+      lo.as("wilson_lo"), hi.as("wilson_hi"))
+  }
+
+  /** Near-dup component label per document (`doc_id`, `label`). */
+  private def nearDupDocLabels(s: SparkSession, dir: String): DataFrame =
+    nearDupComponents(s, dir)
+      .select(col("node").as("doc_id"), col("label"))
+
+  /** Broadcast `nation(n_nationkey, n_name)`. */
+  private def nationNames(s: SparkSession, dir: String): DataFrame =
+    broadcast(t(s, dir, "nation")
+      .select(col("n_nationkey"), col("n_name")))
+
+  /** Each line's supplier nation (`s_nationkey`), broadcast. */
+  private def joinSupplier(s: SparkSession, dir: String)
+                          (df: DataFrame): DataFrame =
+    df.join(broadcast(t(s, dir, "supplier")
+        .select(col("s_suppkey"), col("s_nationkey"))),
+      col("l_suppkey") === col("s_suppkey"))
+
+  /** [[joinSupplier]] plus the supplier nation's `n_name`. */
+  private def joinSupplierNation(s: SparkSession, dir: String)
+                                (df: DataFrame): DataFrame =
+    joinSupplier(s, dir)(df)
+      .join(nationNames(s, dir), col("s_nationkey") === col("n_nationkey"))
+
+  /** Each order's customer nation (`c_nationkey`). */
+  private def joinCustomer(s: SparkSession, dir: String)
+                          (df: DataFrame): DataFrame =
+    df.join(t(s, dir, "customer")
+        .select(col("c_custkey"), col("c_nationkey")),
+      col("o_custkey") === col("c_custkey"))
+
+  /** Each line's customer and supplier nations, through its order. */
+  private def joinTradeNations(s: SparkSession, dir: String)
+                              (df: DataFrame): DataFrame =
+    df.join(t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey")),
+      col("l_orderkey") === col("o_orderkey"))
+      .transform(joinCustomer(s, dir))
+      .transform(joinSupplier(s, dir))
+
+  /** Each order's customer market segment (`c_mktsegment`). */
+  private def joinCustomerSegment(s: SparkSession, dir: String)
+                                 (df: DataFrame): DataFrame =
+    df.join(t(s, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment")),
+      col("o_custkey") === col("c_custkey"))
+
+  /** Each line's order date. */
+  private def joinOrderDate(s: SparkSession, dir: String)
+                           (df: DataFrame): DataFrame =
+    df.join(t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderdate")),
+      col("l_orderkey") === col("o_orderkey"))
+
+  /** Each line's order date and priority. */
+  private def joinOrderPriority(s: SparkSession, dir: String)
+                               (df: DataFrame): DataFrame =
+    df.join(t(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_orderdate"),
+          col("o_orderpriority")),
+      col("l_orderkey") === col("o_orderkey"))
+
+  /** Each line's part type, broadcast. */
+  private def joinPartType(s: SparkSession, dir: String)
+                          (df: DataFrame): DataFrame =
+    df.join(broadcast(t(s, dir, "part")
+        .select(col("p_partkey"), col("p_type"))),
+      col("l_partkey") === col("p_partkey"))
+
+  /** The lines whose part satisfies `p` (broadcast part keys). */
+  private def joinPartsWhere(s: SparkSession, dir: String, p: Column)
+                            (df: DataFrame): DataFrame =
+    df.join(broadcast(t(s, dir, "part")
+        .filter(p)
+        .select(col("p_partkey"))),
+      col("l_partkey") === col("p_partkey"))
+
+  /** The full region row of each nation (`n_regionkey`), broadcast. */
+  private def joinRegion(s: SparkSession, dir: String)
+                        (df: DataFrame): DataFrame =
+    df.join(broadcast(t(s, dir, "region")),
+      col("n_regionkey") === col("r_regionkey"))
+
+  /** Suppliers with their full nation and region rows. */
+  private def supplierRegions(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "supplier")
+      .join(broadcast(t(s, dir, "nation")),
+        col("s_nationkey") === col("n_nationkey"))
+      .transform(joinRegion(s, dir))
+
+  /** Customers with their full nation row. */
+  private def customerNations(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "customer")
+      .join(broadcast(t(s, dir, "nation")),
+        col("c_nationkey") === col("n_nationkey"))
+
+  /** The suppliers of the nation named `nation`. */
+  private def nationSuppliers(s: SparkSession, dir: String,
+                              nation: String): DataFrame =
+    t(s, dir, "supplier")
+      .join(broadcast(t(s, dir, "nation")
+          .filter(col("n_name") === nation)
+          .select(col("n_nationkey"))),
+        col("s_nationkey") === col("n_nationkey"))
 
   // ---------------------------------------------------------------- q01
   /** Flagship (SURVEY.md §7 minimum slice): scan→filter→join→derive→agg —
@@ -195,8 +411,7 @@ object SparkEntry {
         .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(t(s, dir, "nation")),
           col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+        .transform(joinRegion(s, dir))
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_items"),
           dsum(C.revenue(col("l_extendedprice"), col("l_discount")))
@@ -205,9 +420,7 @@ object SparkEntry {
 
     // A3: grouped average (exact sum / count → double).
     "q12_avg_by_group" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
+      customerNations(s, dir)
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_customers"),
           dsum(C.money(col("c_acctbal"))).as("sum_acctbal"))
@@ -246,9 +459,7 @@ object SparkEntry {
 
     // V1/V3 + C9/C10/C12: tooltip text + marker size viz prep.
     "q16_viz_prep" -> ((s, dir) =>
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")),
-          col("c_nationkey") === col("n_nationkey"))
+      customerNations(s, dir)
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_customers"),
           dsum(C.money(col("c_acctbal"))).as("total_bal"))
@@ -302,10 +513,7 @@ object SparkEntry {
     // integer cents (the q127 convention) so both medians run over the
     // bounded value-histogram route — med/mad report in cents.
     "q76_robust_outliers" -> ((s, dir) =>
-      An.robustOutliers(
-          t(s, dir, "events").filter(col("value").isNotNull),
-          col("event_type"),
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
+      An.robustOutliers(eventValues(s, dir), col("event_type"), valueCents)
         .select(col("grp").as("event_type"), col("med"), col("mad"),
           col("n_total"), col("n_outliers"), col("outlier_frac"))),
 
@@ -332,12 +540,8 @@ object SparkEntry {
     // keeps the dump bounded; the filter is on the partition key, so it
     // prunes BEFORE the shuffle.
     "q78_scd2_history" -> ((s, dir) =>
-      Ti.scd2(
-          t(s, dir, "events").filter(pmod(col("user_id"), lit(10)) === 0)
-            .select(col("user_id"), col("event_type"), col("ts"),
-              col("event_id")),
-          Seq("user_id"), col("event_type"), "ts",
-          Seq(unix_micros(col("ts")), col("event_id")))
+      scdHistory(
+          t(s, dir, "events").filter(pmod(col("user_id"), lit(10)) === 0))
         .select(col("user_id"), col("state"), col("valid_from_us"),
           col("valid_to_us"), col("is_current"))),
 
@@ -415,8 +619,7 @@ object SparkEntry {
     // ranking is identical: log is monotone). One exact-integer-input
     // division; ties broken by the pair itself.
     "q87_collocations" -> ((s, dir) =>
-      T.collocationLift(spread(s, t(s, dir, "documents")), col("text"),
-        minCount = 5, k = 20)),
+      T.collocationLift(spreadDocs(s, dir), col("text"), minCount = 5, k = 20)),
 
     // Rolling engagement: DAU / trailing-7-day WAU / stickiness per day.
     // Sliding distinct counting explodes each (user, day) activity to
@@ -439,7 +642,7 @@ object SparkEntry {
     // across every dashboard query; the serve scans dims-cardinality
     // rows.
     "q91_rollup_serve" -> ((s, dir) => {
-      val db = "graft_rollups"
+      val db = RollupDb
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       Cat.createRollup(s,
         t(s, dir, "lineitem").withColumn("ship_year",
@@ -652,7 +855,7 @@ object SparkEntry {
       An.correlation(
         t(s, dir, "events").filter(col("value").isNotNull),
         col("event_type"), hour(col("ts")),
-        (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))),
+        valueCents)),
 
     // L92: PageRank over the co-purchase graph (parts sharing an order)
     // — scaled-integer arithmetic (rank in 10⁻⁹ units, floor-div mass
@@ -719,7 +922,7 @@ object SparkEntry {
     // oriented (contained, container).
     "q113_containment" -> ((s, dir) =>
       D.containmentPairs(
-        spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
+        spreadDocs(s, dir).select(col("doc_id"), col("text")),
         "doc_id", D.wordKernels(col("text"), 3), 0.6)),
 
     // L97: Kaplan-Meier survival over user lifetimes at HOUR granularity
@@ -767,7 +970,7 @@ object SparkEntry {
     // next tokens with exact conditional probabilities, contexts seen
     // ≥5 times. Pairs expand map-side; counts shuffle once.
     "q118_ngram_lm" -> ((s, dir) =>
-      T.ngramNextTokens(spread(s, t(s, dir, "documents")), col("text"),
+      T.ngramNextTokens(spreadDocs(s, dir), col("text"),
         n = 3, minContext = 5L, k = 3)),
 
     // L102: BPE tokenizer training — the first 6 merge rules learned
@@ -828,7 +1031,7 @@ object SparkEntry {
     // (spec-pinned identical to the ngramNextTokens + lmNoveltyStats
     // composition).
     "q122_lm_novelty" -> ((s, dir) =>
-      T.lmSelfNoveltyStats(spread(s, t(s, dir, "documents")),
+      T.lmSelfNoveltyStats(spreadDocs(s, dir),
         col("source"), col("text"), n = 3, minContext = 5L, k = 3)),
 
     // L106: hybrid-retrieval rank fusion — RRF over the radius-1
@@ -893,10 +1096,7 @@ object SparkEntry {
     // event type over value cents; the quartile-based robust screen
     // next to q76's median/MAD and q112's mean/sd.
     "q127_tukey_fences" -> ((s, dir) =>
-      An.tukeyFences(
-        t(s, dir, "events").filter(col("value").isNotNull),
-        col("event_type"),
-        (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))),
+      An.tukeyFences(eventValues(s, dir), col("event_type"), valueCents)),
 
     // L111: near-dup pair EVIDENCE report — the audit table a curation
     // pipeline ships with its dedup decisions: per banded candidate pair
@@ -967,7 +1167,7 @@ object SparkEntry {
     // majority-dup by the integer test 2·dup ≥ total.
     "q129_dup_span_share" -> ((s, dir) => {
       val perDoc = D.dupSpanShare(
-        spread(s, t(s, dir, "documents")), "doc_id", col("text"),
+        spreadDocs(s, dir), "doc_id", col("text"),
         width = 16, modulus = 4, carry = Seq("source"))
       perDoc.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -987,7 +1187,7 @@ object SparkEntry {
     // completeness check at sf0.01.
     "q130_prefix_join" -> ((s, dir) =>
       D.prefixFilterPairs(
-        spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
+        spreadDocs(s, dir).select(col("doc_id"), col("text")),
         "doc_id", D.wordKernels(col("text"), 3), tNum = 1, tDen = 2)),
 
     // L114: fixed-grid linear-interpolation resample of event values at
@@ -1006,7 +1206,7 @@ object SparkEntry {
     // audit (q49 is the ANN-side one). Per-pair rows, each double one
     // exact division — no float summation anywhere.
     "q132_minhash_calibration" -> ((s, dir) => {
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spreadDocs(s, dir)
         .select(col("doc_id"), col("text"))
       val kn = D.wordKernels(col("text"), 3)
       val sigs = docs.select(col("doc_id"), kn.sig.as("__sig"))
@@ -1111,14 +1311,13 @@ object SparkEntry {
     // the Lee et al. rewrite: 16-token windows seen in >= 2 docs are
     // cut from every doc but the window's first.
     "q138_dup_span_removal" -> ((s, dir) =>
-      D.dupSpanRemove(spread(s, t(s, dir, "documents")), "doc_id",
-        col("text"), width = 16)),
+      D.dupSpanRemove(spreadDocs(s, dir), "doc_id", col("text"), width = 16)),
 
     // L122: positional phrase search — adjacency-in-order matching over
     // a positional inverted index; phrase terms broadcast.
     "q139_phrase_search" -> ((s, dir) => {
       import s.implicits._
-      T.phraseSearch(spread(s, t(s, dir, "documents")), "doc_id",
+      T.phraseSearch(spreadDocs(s, dir), "doc_id",
         col("text"), searchPhrases.toDF("phrase_id", "phrase"))
     }),
 
@@ -1132,7 +1331,7 @@ object SparkEntry {
     // L124: cross-source contamination matrix — pairwise distinct
     // 13-gram overlap between sources (the train/eval bleed audit).
     "q141_contamination_matrix" -> ((s, dir) =>
-      T.crossSourceOverlap(spread(s, t(s, dir, "documents")),
+      T.crossSourceOverlap(spreadDocs(s, dir),
         col("source"), col("text"), n = 13)),
 
     // L125: decode-free binary perceptual-hash near-dup — byte-window
@@ -1140,7 +1339,7 @@ object SparkEntry {
     // exact Hamming verify at <= 8.
     "q142_binary_phash_neardup" -> ((s, dir) =>
       M.binaryNearDupPairs(
-        M.fromText(spread(s, t(s, dir, "documents")), "doc_id", "text"),
+        M.fromText(spreadDocs(s, dir), "doc_id", "text"),
         "asset_id", col("content"), maxHamming = 8)),
 
     // L126: Zipf rank-frequency slope per source — OLS over exact
@@ -1158,8 +1357,7 @@ object SparkEntry {
     "q144_dedup_yield" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"),
         size(T.tokens(col("text"))).cast("long").as("__nt"))
-      val comp = nearDupComponents(s, dir)
-        .select(col("node").as("doc_id"), col("label"))
+      val comp = nearDupDocLabels(s, dir)
       val lab = docs.join(comp, Seq("doc_id"), "left")
         .withColumn("__cid", coalesce(col("label"), col("doc_id")))
       val cl = lab.groupBy(col("__cid"))
@@ -1180,11 +1378,7 @@ object SparkEntry {
     "q145_pit_join" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .filter(pmod(col("user_id"), lit(10)) === 0)
-      val hist = Ti.scd2(
-          ev.select(col("user_id"), col("event_type"), col("ts"),
-            col("event_id")),
-          Seq("user_id"), col("event_type"), "ts",
-          Seq(unix_micros(col("ts")), col("event_id")))
+      val hist = scdHistory(ev)
         .select(col("user_id"), col("valid_from_us"), col("state"),
           col("event_id").as("__vid"))
       val probes = ev.filter(col("event_type") === "purchase")
@@ -1203,8 +1397,7 @@ object SparkEntry {
     // (fold, lang).
     "q146_group_kfold" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-      val comp = nearDupComponents(s, dir)
-        .select(col("node").as("doc_id"), col("label"))
+      val comp = nearDupDocLabels(s, dir)
       docs.join(comp, Seq("doc_id"), "left")
         .withColumn("__cid", coalesce(col("label"), col("doc_id")))
         .withColumn("fold",
@@ -1272,7 +1465,7 @@ object SparkEntry {
     "q150_bootstrap_ci" -> ((s, dir) =>
       An.hashBootstrap(
           spread(s, t(s, dir, "lineitem").select(col("l_returnflag"),
-            col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
+            col("l_orderkey"), col("l_linenumber"), col("l_quantity")), 0L),
           col("l_returnflag"),
           concat(col("l_orderkey"), lit("_"), col("l_linenumber")),
           col("l_quantity"), b = 32)
@@ -1340,11 +1533,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           sum(when(col("value") > 100.0, 1L).otherwise(0L))
             .as("n_success"))
-      val (lo, hi) = An.wilsonBounds(col("n_success"), col("n"), 1.96)
-      agg.select(col("event_type"), col("n"), col("n_success"),
-        (col("n_success").cast("double") / col("n").cast("double"))
-          .as("p_hat"),
-        lo.as("wilson_lo"), hi.as("wilson_hi"))
+      wilsonRates(agg, "event_type", "n", "n_success", "p_hat")
     }),
 
     // L138: Benford first-digit audit — the fraud/synthetic-data screen:
@@ -1724,9 +1913,8 @@ object SparkEntry {
     // integer windowed sufficient statistics over a days×types table,
     // one double division per row.
     "q174_rolling_slope" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("__d"))
+      val daily = eventsPerDay(s, dir,
+        expr("unix_micros(ts) div 86400000000").as("__d"))
         .agg(count(lit(1)).as("__y"))
       val w = Window.partitionBy(col("event_type")).orderBy(col("__d"))
         .rangeBetween(-6, 0)
@@ -1753,9 +1941,8 @@ object SparkEntry {
     // variance-to-mean ratio (F=1 Poisson baseline; F>1 bursty). One
     // exact rational per group: F = n(nΣy²−(Σy)²) / (n(n−1)Σy).
     "q175_fano_burstiness" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("__d"))
+      val daily = eventsPerDay(s, dir,
+        expr("unix_micros(ts) div 86400000000").as("__d"))
         .agg(count(lit(1)).as("__y"))
       val D38 = "decimal(38,0)"
       val dec = (c: Column) => c.cast(D38)
@@ -1865,11 +2052,7 @@ object SparkEntry {
         .agg(sum(col("tf")).as("n_tokens"),
           sum(when(col("term").isin(Stopwords: _*), col("tf"))
             .otherwise(0L)).as("n_stop"))
-      val (lo, hi) = An.wilsonBounds(col("n_stop"), col("n_tokens"), 1.96)
-      agg.select(col("source"), col("n_tokens"), col("n_stop"),
-        (col("n_stop").cast("double") / col("n_tokens").cast("double"))
-          .as("stop_share"),
-        lo.as("wilson_lo"), hi.as("wilson_hi"))
+      wilsonRates(agg, "source", "n_tokens", "n_stop", "stop_share")
     }),
 
     // L165: cohort LTV triangle — per acquisition-month cohort, the
@@ -2004,10 +2187,7 @@ object SparkEntry {
     "q188_ship_latency_quantiles" -> ((s, dir) => {
       val gaps = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_shipdate"))
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate"),
-              col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
+        .transform(joinOrderPriority(s, dir))
         .filter(unix_micros(col("l_shipdate")) >=
           unix_micros(col("o_orderdate")))
         .select(col("o_orderpriority"),
@@ -2249,7 +2429,7 @@ object SparkEntry {
       val path = partFilesExport(s, dir)
       val files = s.read.parquet(path)
         .select(regexp_replace(input_file_name(),
-          lit("^.*graft_part_files[^/]*/"), lit("")).as("f"))
+          lit(s"^.*$PartFilesBase[^/]*/"), lit("")).as("f"))
         .groupBy(col("f")).agg(count(lit(1)).as("n"))
       files
         .withColumn("cum",
@@ -2446,7 +2626,7 @@ object SparkEntry {
         .filter(expr("l_shipdate <= TIMESTAMP'1998-09-02 00:00:00'"))
         .select(col("l_returnflag"), col("l_linestatus"),
           expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
+          priceCents.as("cents"),
           expr("CAST(round(l_discount * 10000) AS BIGINT)").as("dbp"),
           expr("CAST(round(l_tax * 10000) AS BIGINT)").as("tbp"))
       l.groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -2486,11 +2666,7 @@ object SparkEntry {
           col("o_orderpriority"))
       val l = t(s, dir, "lineitem")
         .filter(expr("l_shipdate > TIMESTAMP'1998-03-15 00:00:00'"))
-        .select(col("l_orderkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+        .select(col("l_orderkey"), revE4.as("rev"))
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"),
@@ -2514,15 +2690,9 @@ object SparkEntry {
           expr("o_orderdate < TIMESTAMP'1997-01-01 00:00:00'"))
         .select(col("o_orderkey"), col("o_custkey"))
       t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+        .select(col("l_orderkey"), col("l_suppkey"), revE4.as("rev"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
+        .transform(joinCustomer(s, dir))
         .join(broadcast(t(s, dir, "supplier")
             .select(col("s_suppkey"), col("s_nationkey"))),
           col("l_suppkey") === col("s_suppkey") &&
@@ -2546,7 +2716,7 @@ object SparkEntry {
           col("l_quantity") < 24)
         // single corpus-scale group: decimal(38,0) sum (LongType wraps
         // at ~1e10 filtered rows), ONE double cast at the end.
-        .agg(sum((expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
+        .agg(sum((priceCents *
             expr("CAST(round(l_discount * 10000) AS BIGINT)"))
             .cast("decimal(38,0)"))
           .cast("double").as("revenue_e4"),
@@ -2561,19 +2731,13 @@ object SparkEntry {
         .select(col("o_orderkey"), col("o_custkey"))
       t(s, dir, "lineitem")
         .filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+        .select(col("l_orderkey"), revE4.as("rev"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .join(t(s, dir, "customer")
             .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
               col("c_nationkey")),
           col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
+        .join(nationNames(s, dir), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
           col("n_name"))
         .agg(sum(col("rev")).as("revenue_e4"))
@@ -2607,20 +2771,8 @@ object SparkEntry {
     "q208_tpch_q7" -> ((s, dir) =>
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
-          year(col("l_shipdate")).as("l_year"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+          year(col("l_shipdate")).as("l_year"), revE4.as("rev"))
+        .transform(joinTradeNations(s, dir))
         .filter((col("s_nationkey") === 1 && col("c_nationkey") === 2) ||
           (col("s_nationkey") === 2 && col("c_nationkey") === 1))
         .groupBy(col("s_nationkey").as("supp_nation"),
@@ -2636,14 +2788,8 @@ object SparkEntry {
       t(s, dir, "lineitem")
         .filter(expr("l_shipdate >= TIMESTAMP'1996-03-01 00:00:00'") &&
           expr("l_shipdate < TIMESTAMP'1996-04-01 00:00:00'"))
-        .select(col("l_partkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
-        .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
+        .select(col("l_partkey"), revE4.as("rev"))
+        .transform(joinPartType(s, dir))
         // month-slice groups scale with the corpus → decimal(38,0)
         // sums, ONE double cast each; the share divides the two doubles
         // (both exactly rounded from the same integers in both engines).
@@ -2681,11 +2827,7 @@ object SparkEntry {
     // disjunctions — the multi-predicate pushdown shape.
     "q211_tpch_q19" -> ((s, dir) =>
       t(s, dir, "lineitem")
-        .select(col("l_partkey"), col("l_quantity"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+        .select(col("l_partkey"), col("l_quantity"), revE4.as("rev"))
         .join(broadcast(t(s, dir, "part")
             .select(col("p_partkey"), col("p_brand"), col("p_size"))),
           col("l_partkey") === col("p_partkey"))
@@ -2716,10 +2858,7 @@ object SparkEntry {
         .select(col("c_custkey"))
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+          revE4.as("rev"))
         .join(broadcast(t(s, dir, "part")
             .filter(col("p_type") === "PROMO").select(col("p_partkey"))),
           col("l_partkey") === col("p_partkey"))
@@ -2728,9 +2867,7 @@ object SparkEntry {
               year(col("o_orderdate")).as("o_year")),
           col("l_orderkey") === col("o_orderkey"))
         .join(asiaCust, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinSupplier(s, dir))
         .groupBy(col("o_year"))
         // per-year groups scale with the corpus → decimal(38,0) sums,
         // ONE double cast each; the share divides the two doubles.
@@ -2751,10 +2888,7 @@ object SparkEntry {
         .filter(expr("l_shipdate >= TIMESTAMP'1996-01-01 00:00:00'") &&
           expr("l_shipdate < TIMESTAMP'1996-04-01 00:00:00'"))
         .groupBy(col("l_suppkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-          (lit(10000L) -
-            expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-          .as("total_rev_e4"))
+        .agg(sum(revE4).as("total_rev_e4"))
       rev.crossJoin(broadcast(rev.agg(max(col("total_rev_e4"))
           .as("__mx"))))
         .filter(col("total_rev_e4") === col("__mx"))
@@ -2770,14 +2904,10 @@ object SparkEntry {
     // through by 5n — no 0.2·avg double ever exists to disagree on).
     "q214_tpch_q17" -> ((s, dir) => {
       val l = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-            .filter(col("p_brand") === "Brand#4")
-            .select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartsWhere(s, dir, col("p_brand") === "Brand#4"))
         .select(col("p_partkey"),
           expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
-            .as("cents"))
+          priceCents.as("cents"))
       val stats = l.groupBy(col("p_partkey").as("__pk"))
         .agg(sum(col("qty")).as("__sq"), count(lit(1)).as("__n"))
       l.join(stats, col("p_partkey") === col("__pk"))
@@ -2930,15 +3060,7 @@ object SparkEntry {
     // = the q183 integer-midpoint rule (replayable, no wall clock);
     // degenerate var(X)=0 reads null on both engines.
     "q221_cuped_readout" -> ((s, dir) => {
-      val D = "decimal(38,0)"
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"),
-        when(col("event_type") === "purchase" && col("value").isNotNull,
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
-          .otherwise(lit(0L)).as("cents"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, purchaseCents)
         .agg(sum(when(col("us") < col("mid"), col("cents"))
             .otherwise(0L)).as("x"),
           sum(when(col("us") >= col("mid"), col("cents"))
@@ -2946,6 +3068,7 @@ object SparkEntry {
         .select(pmod(col("user_id"), lit(2L)).as("arm"),
           col("x"), col("y"))
         .localCheckpoint(true) // two consumers: pooled θ + per-arm stats
+      val D = "decimal(38,0)"
       val g = per.agg(count(lit(1)).as("n"),
         sum(col("x").cast(D)).as("sx"), sum(col("y").cast(D)).as("sy"),
         sum(col("x").cast(D) * col("x").cast(D)).as("sxx"),
@@ -2981,16 +3104,10 @@ object SparkEntry {
     // domain. All counts exact BIGINT; uplift/Qini assemble with pinned
     // double division order, null-guarded on empty arms.
     "q222_qini_deciles" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"), col("event_type"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, col("event_type"))
         .agg(sum(when(col("us") < col("mid"), 1L).otherwise(0L))
             .as("score"),
-          max(when(col("us") >= col("mid") &&
-              col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("conv"))
+          abPostPurchase.as("conv"))
         .select(pmod(col("user_id"), lit(2L)).as("arm"),
           col("score"), col("conv"))
       // (score, arm) cells — the corpus is never re-joined; two
@@ -3122,7 +3239,6 @@ object SparkEntry {
     // odds). Blocked self-join (the L59 discipline) + two tiny
     // broadcast u-stats; top-200 by odds via TakeOrdered.
     "q225_fs_linkage" -> ((s, dir) => {
-      val D = "decimal(38,0)"
       val base = t(s, dir, "documents")
         .filter(col("source").isNotNull && col("lang").isNotNull &&
           col("text").isNotNull && col("n_chars").isNotNull)
@@ -3131,6 +3247,7 @@ object SparkEntry {
           element_at(split(col("text"), " "), 1).as("f2"))
         .localCheckpoint(true) // consumers: u1, u2, both join sides
       val nDf = base.agg(count(lit(1)).as("nn"))
+      val D = "decimal(38,0)"
       def uStat(f: String, out: String): DataFrame =
         base.groupBy(col(f)).agg(count(lit(1)).as("nv"))
           .agg(sum(col("nv").cast(D) * (col("nv") - 1L).cast(D))
@@ -3224,10 +3341,7 @@ object SparkEntry {
     // the checkpointed daily frame feeds all three consumers.
     "q226_mann_kendall" -> ((s, dir) => {
       val D = "decimal(38,0)"
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), to_date(lit("1970-01-01")))
-            .cast("long").as("day"))
+      val daily = eventsPerDay(s, dir, epochDay)
         .agg(count(lit(1)).as("n"))
         .localCheckpoint(true) // consumers: pair join ×2, ties, n_days
       val sDf = daily.as("a").join(daily.as("b"),
@@ -3273,10 +3387,7 @@ object SparkEntry {
     // so the cross-engine hash cannot drift. Argmax ties break to the
     // earliest day.
     "q227_pettitt_changepoint" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), to_date(lit("1970-01-01")))
-            .cast("long").as("day"))
+      val daily = eventsPerDay(s, dir, epochDay)
         .agg(count(lit(1)).as("n"))
         .localCheckpoint(true) // consumers: value histogram + day tag
       val vw = Window.partitionBy(col("event_type")).orderBy(col("n"))
@@ -3320,7 +3431,6 @@ object SparkEntry {
     // sort anywhere: ranking is histogram arithmetic, so the plan
     // survives a corpus 100× wider.
     "q228_spearman_rank" -> ((s, dir) => {
-      val D = "decimal(38,0)"
       val base = t(s, dir, "documents")
         .filter(col("source").isNotNull && col("text").isNotNull &&
           col("n_chars").isNotNull)
@@ -3338,6 +3448,7 @@ object SparkEntry {
       val ranked = base
         .join(broadcast(rankMap("v1")), Seq("source", "v1"))
         .join(broadcast(rankMap("v2")), Seq("source", "v2"))
+      val D = "decimal(38,0)"
       val g = ranked.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("r_v1").cast(D)).as("s1"),
@@ -3389,18 +3500,11 @@ object SparkEntry {
     // transcendental anywhere, so the statistic is bit-stable. One
     // per-user shuffle; everything after is a single row.
     "q230_welch_ttest" -> ((s, dir) => {
-      val D = "decimal(38,0)"
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"),
-        when(col("event_type") === "purchase" && col("value").isNotNull,
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
-          .otherwise(lit(0L)).as("cents"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, purchaseCents)
         .agg(sum(when(col("us") >= col("mid"), col("cents"))
           .otherwise(0L)).as("y"))
         .select(pmod(col("user_id"), lit(2L)).as("arm"), col("y"))
+      val D = "decimal(38,0)"
       def side(a: Int, n: String, sy: String, syy: String) = Seq(
         sum(when(col("arm") === a.toLong, 1L).otherwise(0L)).as(n),
         sum(when(col("arm") === a.toLong, col("y").cast(D))
@@ -3459,9 +3563,7 @@ object SparkEntry {
             col("n_j").cast("double")).as("term"))
       val tot = g.agg(sum(col("n_j")).as("nn"),
         sum(col("s_j")).as("s"), sum(col("ss_j")).as("ss"),
-        countDistinct(col("source")).as("k"),
-        expr("aggregate(array_sort(collect_list(struct(source, term)))" +
-          ", 0.0D, (acc, x) -> acc + x.term)").as("sum_terms"))
+        countDistinct(col("source")).as("k"), anovaSumTerms)
       val sst = col("ss").cast("double") -
         (col("s") * col("s")).cast("double") / col("nn").cast("double")
       val ssb = col("sum_terms") -
@@ -3485,7 +3587,6 @@ object SparkEntry {
     // transcendental. The histogram window runs over distinct lengths
     // (domain-bounded), never over rows.
     "q232_kruskal_wallis" -> ((s, dir) => {
-      val D = "decimal(38,0)"
       val base = t(s, dir, "documents")
         .filter(col("source").isNotNull && col("n_chars").isNotNull)
         .select(col("source"), col("n_chars").as("v"))
@@ -3497,6 +3598,7 @@ object SparkEntry {
             hw.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) +
             col("cnt") + 1L).as("r2"))
         .localCheckpoint(true) // consumers: rank join + tie term
+      val D = "decimal(38,0)"
       val grp = base.join(broadcast(hist.select(col("v"), col("r2"))),
           Seq("v"))
         .groupBy(col("source"))
@@ -3508,9 +3610,7 @@ object SparkEntry {
       val ties = hist.agg(sum(col("cnt").cast(D) * col("cnt").cast(D) *
         col("cnt").cast(D) - col("cnt").cast(D)).as("tie_num"))
       val tot = grp.agg(sum(col("n_j")).as("nn"),
-        countDistinct(col("source")).as("k"),
-        expr("aggregate(array_sort(collect_list(struct(source, term)))" +
-          ", 0.0D, (acc, x) -> acc + x.term)").as("sum_terms"))
+        countDistinct(col("source")).as("k"), anovaSumTerms)
       val h0 = lit(12.0) * col("sum_terms") /
         (col("nn").cast(D) * (col("nn") + 1L).cast(D)).cast("double") -
         (lit(3L) * (col("nn") + 1L)).cast("double")
@@ -3535,16 +3635,10 @@ object SparkEntry {
     // discipline). The crude pooled OR rides along to expose the
     // confounding. One per-user shuffle; strata are capped at 4.
     "q233_cmh_odds_ratio" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"), col("event_type"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, col("event_type"))
         .agg(least(sum(when(col("us") < col("mid"), 1L).otherwise(0L)),
             lit(3L)).as("stratum"),
-          max(when(col("us") >= col("mid") &&
-            col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("conv"))
+          abPostPurchase.as("conv"))
         .select(pmod(col("user_id"), lit(2L)).as("arm"),
           col("stratum"), col("conv"))
       val cells = per.groupBy(col("stratum")).agg(
@@ -3715,20 +3809,10 @@ object SparkEntry {
     // pinned divisions; one per-user shuffle.
     "q237_effect_sizes" -> ((s, dir) => {
       val D = "decimal(38,0)"
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"),
-        col("event_type"),
-        when(col("event_type") === "purchase" && col("value").isNotNull,
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
-          .otherwise(lit(0L)).as("cents"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, col("event_type"), purchaseCents)
         .agg(sum(when(col("us") >= col("mid"), col("cents"))
             .otherwise(0L)).as("y"),
-          max(when(col("us") >= col("mid") &&
-            col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("conv"))
+          abPostPurchase.as("conv"))
         .select(pmod(col("user_id"), lit(2L)).as("arm"), col("y"),
           col("conv"),
           T.ilog2(col("y") + 1L).cast("long").as("yb"))
@@ -3807,10 +3891,7 @@ object SparkEntry {
     // grid is their product.
     "q238_friedman" -> ((s, dir) => {
       val D = "decimal(38,0)"
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), to_date(lit("1970-01-01")))
-            .cast("long").as("day"))
+      val daily = eventsPerDay(s, dir, epochDay)
         .agg(count(lit(1)).as("cnt"))
         .localCheckpoint(true) // consumers: grid axes + the fill join
       val days = daily.select(col("day")).distinct()
@@ -3862,7 +3943,7 @@ object SparkEntry {
         .groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase" &&
             col("value").isNotNull,
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
+          valueCents)
           .otherwise(lit(0L))).as("y"))
       val g = per.agg(count(lit(1)).as("n_users"),
         sum(col("y").cast(D)).as("sy"),
@@ -3922,17 +4003,11 @@ object SparkEntry {
     // (|b−c|−1)²/(b+c) — exact integers to one division each. One
     // per-user shuffle, four-cell output.
     "q241_mcnemar" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"), col("event_type"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, col("event_type"))
         .agg(max(when(col("us") < col("mid") &&
             col("event_type") === "purchase", 1L).otherwise(0L))
             .as("pre"),
-          max(when(col("us") >= col("mid") &&
-            col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("post"))
+          abPostPurchase.as("post"))
       per.agg(
           sum(when(col("pre") === 1L && col("post") === 1L, 1L)
             .otherwise(0L)).as("both_conv"),
@@ -3963,15 +4038,7 @@ object SparkEntry {
     // decimal(38,0), and the normal-approx z from exact integer
     // numerator A = 2W⁺ − n(n+1) against IEEE sqrt.
     "q242_wilcoxon_signed_rank" -> ((s, dir) => {
-      val D = "decimal(38,0)"
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("unix_micros(ts)").as("us"),
-        when(col("event_type") === "purchase" && col("value").isNotNull,
-          (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))
-          .otherwise(lit(0L)).as("cents"))
-      val midDf = ev.agg(expr("(min(us) + max(us)) div 2").as("mid"))
-      val per = ev.crossJoin(broadcast(midDf))
-        .groupBy(col("user_id"))
+      val per = abPerUser(s, dir, purchaseCents)
         .agg((sum(when(col("us") >= col("mid"), col("cents"))
           .otherwise(0L)) -
           sum(when(col("us") < col("mid"), col("cents"))
@@ -3985,6 +4052,7 @@ object SparkEntry {
           (lit(2L) * coalesce(sum(col("t")).over(
             hw.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) +
             col("t") + 1L).as("r2"))
+      val D = "decimal(38,0)"
       val g = per.join(broadcast(hist), Seq("mb"))
         .agg(count(lit(1)).as("n_eff"),
           sum(when(col("d") > 0L, col("r2").cast(D))
@@ -4010,7 +4078,6 @@ object SparkEntry {
     // (decimal stats, source-ordered folds). Two bounded shuffles +
     // one broadcast median join.
     "q243_brown_forsythe" -> ((s, dir) => {
-      val D = "decimal(38,0)"
       val base = t(s, dir, "documents")
         .filter(col("source").isNotNull && col("n_chars").isNotNull)
         .select(col("source"), col("n_chars").as("v"))
@@ -4028,6 +4095,7 @@ object SparkEntry {
         .groupBy(col("source")).agg(min(col("v")).as("med"))
       val dev = base.join(broadcast(med), Seq("source"))
         .select(col("source"), abs(col("v") - col("med")).as("z"))
+      val D = "decimal(38,0)"
       val g = dev.groupBy(col("source"))
         .agg(count(lit(1)).as("n_j"), sum(col("z").cast(D)).as("s_j"),
           sum(col("z").cast(D) * col("z").cast(D)).as("ss_j"))
@@ -4036,9 +4104,7 @@ object SparkEntry {
             col("n_j").cast("double")).as("term"))
       val tot = g.agg(sum(col("n_j")).as("nn"), sum(col("s_j")).as("s"),
         sum(col("ss_j")).as("ss"),
-        countDistinct(col("source")).as("k"),
-        expr("aggregate(array_sort(collect_list(struct(source, term)))" +
-          ", 0.0D, (acc, x) -> acc + x.term)").as("sum_terms"))
+        countDistinct(col("source")).as("k"), anovaSumTerms)
       val sst = col("ss").cast("double") -
         (col("s") * col("s")).cast("double") / col("nn").cast("double")
       val ssb = col("sum_terms") -
@@ -4063,10 +4129,7 @@ object SparkEntry {
         .filter(expr("l_shipdate >= TIMESTAMP'1997-01-01 00:00:00'") &&
           expr("l_shipdate < TIMESTAMP'1998-01-01 00:00:00'"))
         .select(col("l_orderkey"), col("l_shipdate"))
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate"),
-              col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
+        .transform(joinOrderPriority(s, dir))
         .select(
           when(unix_micros(col("l_shipdate")) >
               unix_micros(col("o_orderdate")) + lit(5184000000000L),
@@ -4097,11 +4160,7 @@ object SparkEntry {
         .filter(unix_micros(col("l_shipdate")) >
           unix_micros(col("o_orderdate")) + lit(5184000000000L))
         .select(col("l_orderkey"), col("l_suppkey"))
-      val natSupp = broadcast(t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")
-            .filter(col("n_name") === "NATION_3")
-            .select(col("n_nationkey"))),
-          col("s_nationkey") === col("n_nationkey"))
+      val natSupp = broadcast(nationSuppliers(s, dir, "NATION_3")
         .select(col("s_suppkey"), col("s_name")))
       val others = lines
         .select(col("l_orderkey").as("o2_orderkey"),
@@ -4160,17 +4219,12 @@ object SparkEntry {
     // double division (value·n_parts vs 2·total overflows bigint at
     // corpus scale).
     "q247_tpch_q11" -> ((s, dir) => {
-      val natSupp = broadcast(t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")
-            .filter(col("n_name") === "NATION_7")
-            .select(col("n_nationkey"))),
-          col("s_nationkey") === col("n_nationkey"))
+      val natSupp = broadcast(nationSuppliers(s, dir, "NATION_7")
         .select(col("s_suppkey")))
       val v = t(s, dir, "lineitem")
         .join(natSupp, col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("value_e2"))
+        .agg(sum(priceCents).as("value_e2"))
       v.join(broadcast(v.agg(sum(col("value_e2")).as("total_e2"),
           count(lit(1)).as("n_parts"))))
         .filter(col("value_e2").cast("decimal(38,0)") * col("n_parts") >
@@ -4188,17 +4242,10 @@ object SparkEntry {
             .filter(col("p_name").like("%red%"))
             .select(col("p_partkey"), col("p_retailprice"))),
           col("l_partkey") === col("p_partkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
+        .transform(joinSupplierNation(s, dir))
         .select(col("n_name").as("nation"),
           year(col("l_shipdate")).as("o_year"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")) -
+          (revE4 -
             expr("CAST(round(p_retailprice * 100) AS BIGINT)") *
               lit(10000L) *
               expr("CAST(round(l_quantity) AS BIGINT)")).as("amount"))
@@ -4227,14 +4274,11 @@ object SparkEntry {
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"),
           col("n_name")))
       val cost = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-            .filter(col("p_size") === 15 && col("p_type") === "STANDARD")
-            .select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartsWhere(s, dir,
+          col("p_size") === 15 && col("p_type") === "STANDARD"))
         .join(euSupp, col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"), col("l_suppkey"))
-        .agg(min(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("cost_e2"))
+        .agg(min(priceCents).as("cost_e2"))
       val minCost = cost.groupBy(col("l_partkey").as("mc_partkey"))
         .agg(min(col("cost_e2")).as("min_cost_e2"))
       cost
@@ -4256,10 +4300,7 @@ object SparkEntry {
     // test; the supplier probe is a left-semi join.
     "q250_tpch_q20" -> ((s, dir) => {
       val concentrated = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-            .filter(col("p_name").like("%blue%"))
-            .select(col("p_partkey"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartsWhere(s, dir, col("p_name").like("%blue%")))
         .select(col("l_partkey"), col("l_suppkey"),
           expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),
           year(col("l_shipdate")).as("yr"))
@@ -4270,11 +4311,7 @@ object SparkEntry {
         .filter(col("qty_1997") * lit(2L) > col("qty_total"))
         .select(col("l_suppkey"))
         .distinct()
-      t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")
-            .filter(col("n_name") === "NATION_1")
-            .select(col("n_nationkey"))),
-          col("s_nationkey") === col("n_nationkey"))
+      nationSuppliers(s, dir, "NATION_1")
         .join(concentrated, col("s_suppkey") === col("l_suppkey"),
           "left_semi")
         .select(col("s_name"), col("s_acctbal"))
@@ -4407,17 +4444,9 @@ object SparkEntry {
     // domain through one reducer's row_number sort.
     "q255_nation_top_parts" -> ((s, dir) => {
       val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
+        .transform(joinSupplierNation(s, dir))
         .groupBy(col("n_name"), col("l_partkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-          (lit(10000L) -
-            expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-          .as("rev_e4"))
+        .agg(sum(revE4).as("rev_e4"))
         .join(broadcast(t(s, dir, "part")
             .select(col("p_partkey"), col("p_name"))),
           col("l_partkey") === col("p_partkey"))
@@ -4481,23 +4510,18 @@ object SparkEntry {
     // are region-bounded (≤ 5 rows of 25), ranked deterministically.
     "q257_ratio_to_report" -> ((s, dir) => {
       val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinSupplier(s, dir))
         .join(broadcast(t(s, dir, "nation")
             .select(col("n_nationkey"), col("n_name"),
               col("n_regionkey"))),
           col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+        .transform(joinRegion(s, dir))
         .groupBy(col("r_name"), col("n_name"))
         // per-nation group scales with the corpus: sum and window-sum
         // stay EXACT in decimal(38,0) (a LongType sum of ~1e11/row
         // products wraps at 100-TB scale; a double window-sum would be
         // frame-order-divergent), double casts only at output.
-        .agg(sum((expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-          (lit(10000L) -
-            expr("CAST(round(l_discount * 10000) AS BIGINT)")))
+        .agg(sum(revE4
           .cast("decimal(38,0)"))
           .as("__rev_d"))
       val wr = Window.partitionBy(col("r_name"))
@@ -4983,12 +5007,8 @@ object SparkEntry {
     // so the ranking window never sees corpus-scale partitions.
     "q272_mode_per_group" -> ((s, dir) => {
       val cnts = t(s, dir, "orders")
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
+        .transform(joinCustomer(s, dir))
+        .join(nationNames(s, dir), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"), col("o_orderpriority"))
         .agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy(col("n_name"))
@@ -5248,27 +5268,19 @@ object SparkEntry {
     // join planning + grouping-set expansion together.
     "q282_snowflake_cube" -> ((s, dir) =>
       t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+        .select(col("l_orderkey"), col("l_partkey"), revE4.as("rev"))
         .join(t(s, dir, "orders")
             .select(col("o_orderkey"), col("o_custkey"),
               year(col("o_orderdate")).as("o_year")),
           col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
+        .transform(joinCustomer(s, dir))
         .join(broadcast(t(s, dir, "nation")
             .select(col("n_nationkey"), col("n_regionkey"))),
           col("c_nationkey") === col("n_nationkey"))
         .join(broadcast(t(s, dir, "region")
             .select(col("r_regionkey"), col("r_name"))),
           col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartType(s, dir))
         // Pre-aggregate to the FINEST grain before the CUBE (guide §2.3
         // "aggregate before you shuffle", r17): Expand's ×8 grouping-set
         // multiplier then runs over the |r_name × o_year × p_type| grain
@@ -5434,12 +5446,7 @@ object SparkEntry {
     // census re-aggregates in one more bounded shuffle.
     "q287_tail_lumping" -> ((s, dir) => {
       val cnts = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
+        .transform(joinSupplierNation(s, dir))
         .join(broadcast(t(s, dir, "part")
             .select(col("p_partkey"), col("p_name"))),
           col("l_partkey") === col("p_partkey"))
@@ -5609,12 +5616,7 @@ object SparkEntry {
     // division per pair.
     "q293_weighted_jaccard" -> ((s, dir) => {
       val v = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
+        .transform(joinSupplierNation(s, dir))
         .groupBy(col("n_name"), col("l_partkey"))
         .agg(count(lit(1)).as("c"))
         .localCheckpoint()
@@ -5647,10 +5649,7 @@ object SparkEntry {
         val r = t(s, dir, "lineitem")
           .filter(year(col("l_shipdate")) === y)
           .groupBy(col("l_partkey"))
-          .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
+          .agg(sum(revE4).as("rev"))
           .orderBy(col("rev").desc, col("l_partkey"))
           .limit(10)
         r.withColumn("rk", row_number().over(
@@ -6086,12 +6085,8 @@ object SparkEntry {
     // the construction's guarantees VISIBLE to the consumer instead of
     // assumed). Per-key windows only.
     "q310_scd2_validity_audit" -> ((s, dir) => {
-      val hist = Ti.scd2(
-          t(s, dir, "events").filter(pmod(col("user_id"), lit(10)) === 0)
-            .select(col("user_id"), col("event_type"), col("ts"),
-              col("event_id")),
-          Seq("user_id"), col("event_type"), "ts",
-          Seq(unix_micros(col("ts")), col("event_id")))
+      val hist = scdHistory(
+          t(s, dir, "events").filter(pmod(col("user_id"), lit(10)) === 0))
         .select(col("user_id"), col("valid_from_us"),
           col("valid_to_us"), col("is_current"))
       val w = Window.partitionBy(col("user_id"))
@@ -6122,17 +6117,12 @@ object SparkEntry {
     // whether the LAST day sits outside its band — the alert-rule
     // configuration an on-call dashboard consumes.
     "q311_alert_bands" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("unix_micros(ts) div 86400000000").as("day"))
+      val daily = eventsPerDay(s, dir,
+        expr("unix_micros(ts) div 86400000000").as("day"))
         .agg(count(lit(1)).as("n"))
         .localCheckpoint()
-      val hist = daily.groupBy(col("event_type"), col("n"))
-        .agg(count(lit(1)).as("f"))
-        .withColumn("cum", sum(col("f")).over(Window
-          .partitionBy(col("event_type")).orderBy(col("n"))))
-        .withColumn("tot", sum(col("f")).over(Window
-          .partitionBy(col("event_type"))))
+      val hist = cumCounts(daily.groupBy(col("event_type"), col("n")),
+        "event_type", "n")
       def q(kNum: Long): DataFrame = hist
         .filter(col("cum") * 10L >= col("tot") * kNum)
         .groupBy(col("event_type"))
@@ -6228,9 +6218,7 @@ object SparkEntry {
     // cannot round.
     "q315_purchase_cadence" -> ((s, dir) => {
       val med = t(s, dir, "orders")
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
+        .transform(joinCustomerSegment(s, dir))
         .groupBy(col("o_custkey"), col("c_mktsegment"))
         .agg(sort_array(collect_set(
           expr("unix_micros(o_orderdate) div 86400000000"))).as("days"))
@@ -6304,9 +6292,7 @@ object SparkEntry {
     // Per-order distinct count (order-bounded), then a ≤6-row census.
     "q318_basket_diversity" -> ((s, dir) => {
       val nt = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartType(s, dir))
         .groupBy(col("l_orderkey"))
         .agg(countDistinct(col("p_type")).as("n_types"))
         .groupBy(col("n_types"))
@@ -6324,19 +6310,10 @@ object SparkEntry {
     // readout behind every SLA renegotiation.
     "q319_ship_lag_trend" -> ((s, dir) => {
       val lag0 = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(year(col("l_shipdate")).as("yr"),
-          (expr("unix_micros(l_shipdate) div 86400000000") -
-            expr("unix_micros(o_orderdate) div 86400000000"))
-            .as("lag_days"))
-      val hist = lag0.groupBy(col("yr"), col("lag_days"))
-        .agg(count(lit(1)).as("f"))
-        .withColumn("cum", sum(col("f")).over(Window
-          .partitionBy(col("yr")).orderBy(col("lag_days"))))
-        .withColumn("tot", sum(col("f")).over(Window
-          .partitionBy(col("yr"))))
+        .transform(joinOrderDate(s, dir))
+        .select(year(col("l_shipdate")).as("yr"), shipLagDays.as("lag_days"))
+      val hist = cumCounts(lag0.groupBy(col("yr"), col("lag_days")),
+        "yr", "lag_days")
       val med = hist.filter(col("cum") * 2L >= col("tot"))
         .groupBy(col("yr")).agg(min(col("lag_days")).as("median_lag"))
       lag0.groupBy(col("yr"))
@@ -6356,20 +6333,8 @@ object SparkEntry {
     // directional readout q208's symmetric volume query doesn't give.
     "q320_trade_balance" -> ((s, dir) => {
       val flow = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"))
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .select(col("l_orderkey"), col("l_suppkey"), revE4.as("rev"))
+        .transform(joinTradeNations(s, dir))
         .filter(col("s_nationkey") =!= col("c_nationkey"))
         .groupBy(col("s_nationkey").as("from_n"),
           col("c_nationkey").as("to_n"))
@@ -6414,12 +6379,8 @@ object SparkEntry {
     // share division over exact cents.
     "q322_key_account_risk" -> ((s, dir) =>
       t(s, dir, "orders")
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "nation")
-            .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
+        .transform(joinCustomer(s, dir))
+        .join(nationNames(s, dir), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"), col("o_custkey"))
         .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
           .as("rev"))
@@ -6444,10 +6405,7 @@ object SparkEntry {
               expr("length(bin(CAST(round(o_totalprice * 100) " +
                 "AS BIGINT))) - 1").as("value_bucket")),
           col("l_orderkey") === col("o_orderkey"))
-        .select(col("value_bucket"),
-          (expr("unix_micros(l_shipdate) div 86400000000") -
-            expr("unix_micros(o_orderdate) div 86400000000"))
-            .as("lag_days"))
+        .select(col("value_bucket"), shipLagDays.as("lag_days"))
         .groupBy(col("value_bucket"))
         .agg(count(lit(1)).as("n_lines"),
           sum(col("lag_days")).as("__s"))
@@ -6494,19 +6452,15 @@ object SparkEntry {
     // (year·4 + quarter), lag windows per region.
     "q325_region_qoq" -> ((s, dir) => {
       val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinSupplier(s, dir))
         .join(broadcast(t(s, dir, "nation")
             .select(col("n_nationkey"), col("n_regionkey"))),
           col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+        .transform(joinRegion(s, dir))
         .groupBy(col("r_name"),
           (year(col("l_shipdate")) * 4 +
             quarter(col("l_shipdate")) - 1).as("qi"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("rev"))
+        .agg(sum(priceCents).as("rev"))
       val w = Window.partitionBy(col("r_name")).orderBy(col("qi"))
       rev
         .withColumn("prev", lag(col("rev"), 1).over(w))
@@ -6566,8 +6520,7 @@ object SparkEntry {
       // former semi-join route scanned lineitem a second time for the
       // same integer sums.
       val revs = t(s, dir, "lineitem")
-        .select(col("l_partkey"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("c"))
+        .select(col("l_partkey"), priceCents.as("c"))
         .join(broadcast(perPart.filter(col("n_suppliers") === 1L)
           .select(col("l_partkey"), lit(1L).as("__single"))),
           Seq("l_partkey"), "left")
@@ -6613,9 +6566,7 @@ object SparkEntry {
     // outputs the campaign-size census per segment.
     "q329_overdue_customers" -> ((s, dir) => {
       val base = t(s, dir, "orders")
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
+        .transform(joinCustomerSegment(s, dir))
         .groupBy(col("o_custkey"), col("c_mktsegment"))
         .agg(sort_array(collect_set(
           expr("unix_micros(o_orderdate) div 86400000000"))).as("days"))
@@ -6655,14 +6606,8 @@ object SparkEntry {
             .select(col("p_partkey"), col("p_brand"),
               col("p_retailprice"))),
           col("l_partkey") === col("p_partkey"))
-        .select(col("p_brand"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")))
-            .as("rev"),
-          (expr("CAST(round(l_extendedprice * 100) AS BIGINT)") *
-            (lit(10000L) -
-              expr("CAST(round(l_discount * 10000) AS BIGINT)")) -
+        .select(col("p_brand"), revE4.as("rev"),
+          (revE4 -
             expr("CAST(round(p_retailprice * 100) AS BIGINT)") *
               lit(10000L) *
               expr("CAST(round(l_quantity) AS BIGINT)")).as("profit"))
@@ -6688,9 +6633,7 @@ object SparkEntry {
         .join(t(s, dir, "lineitem")
             .select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinSupplier(s, dir))
         .groupBy(col("o_custkey"))
         .agg(countDistinct(col("s_nationkey")).as("n_nations"))
         .groupBy(col("n_nations"))
@@ -6708,8 +6651,7 @@ object SparkEntry {
     "q332_seasonal_items" -> ((s, dir) => {
       val pq = t(s, dir, "lineitem")
         .groupBy(col("l_partkey"), quarter(col("l_shipdate")).as("q"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("rev"))
+        .agg(sum(priceCents).as("rev"))
       val per = pq.groupBy(col("l_partkey"))
         .agg(max(col("rev")).as("max_q"), sum(col("rev")).as("tot"))
         .select(col("l_partkey"), col("tot"),
@@ -6730,20 +6672,11 @@ object SparkEntry {
     // audit.
     "q333_priority_speed" -> ((s, dir) => {
       val lag0 = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate"),
-              col("o_orderpriority")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_orderpriority"),
-          (expr("unix_micros(l_shipdate) div 86400000000") -
-            expr("unix_micros(o_orderdate) div 86400000000"))
-            .as("lag_days"))
-      val hist = lag0.groupBy(col("o_orderpriority"), col("lag_days"))
-        .agg(count(lit(1)).as("f"))
-        .withColumn("cum", sum(col("f")).over(Window
-          .partitionBy(col("o_orderpriority")).orderBy(col("lag_days"))))
-        .withColumn("tot", sum(col("f")).over(Window
-          .partitionBy(col("o_orderpriority"))))
+        .transform(joinOrderPriority(s, dir))
+        .select(col("o_orderpriority"), shipLagDays.as("lag_days"))
+      val hist = cumCounts(
+          lag0.groupBy(col("o_orderpriority"), col("lag_days")),
+          "o_orderpriority", "lag_days")
       val med = hist.filter(col("cum") * 2L >= col("tot"))
         .groupBy(col("o_orderpriority"))
         .agg(min(col("lag_days")).as("median_lag"))
@@ -6792,18 +6725,12 @@ object SparkEntry {
     // histogram (cum·100 ≥ k·n — the q251/q311 discipline; the full
     // ladder a pricing review reads).
     "q335_value_ladder" -> ((s, dir) => {
-      val h = t(s, dir, "orders")
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT) div 100")
-            .as("d"))
-        .agg(count(lit(1)).as("f"))
-        .withColumn("cum", sum(col("f")).over(Window
-          .partitionBy(col("c_mktsegment")).orderBy(col("d"))))
-        .withColumn("tot", sum(col("f")).over(Window
-          .partitionBy(col("c_mktsegment"))))
+      val h = cumCounts(t(s, dir, "orders")
+          .transform(joinCustomerSegment(s, dir))
+          .groupBy(col("c_mktsegment"),
+            expr("CAST(round(o_totalprice * 100) AS BIGINT) div 100")
+              .as("d")),
+          "c_mktsegment", "d")
         .localCheckpoint()
       def p(k: Long, name: String): DataFrame = h
         .filter(col("cum") * 100L >= col("tot") * k)
@@ -6936,8 +6863,7 @@ object SparkEntry {
     "q356_part_name_census" -> ((s, dir) => {
       val rev = t(s, dir, "lineitem")
         .groupBy(col("l_partkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("cents"))
+        .agg(sum(priceCents).as("cents"))
       val g = t(s, dir, "part")
         .join(rev, col("p_partkey") === col("l_partkey"), "left_outer")
         .groupBy(split(col("p_name"), " ").getItem(0).as("first_token"))
@@ -6956,12 +6882,8 @@ object SparkEntry {
     // rule); 25 rows, no per-row window.
     "q353_ship_lag_p99" -> ((s, dir) => {
       val lag = t(s, dir, "lineitem")
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinOrderDate(s, dir))
+        .transform(joinSupplier(s, dir))
         .groupBy(col("s_nationkey"),
           expr("(unix_micros(l_shipdate) - unix_micros(o_orderdate))" +
             " div 86400000000").as("lag_days"))
@@ -7037,12 +6959,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_lines"),
           sum(when(col("l_returnflag") === "R", 1L).otherwise(0L))
             .as("n_returned"))
-      val (lo, hi) = An.wilsonBounds(col("n_returned"), col("n_lines"),
-        1.96)
-      agg.select(col("p_brand"), col("n_lines"), col("n_returned"),
-        (col("n_returned").cast("double") / col("n_lines").cast("double"))
-          .as("return_rate"),
-        lo.as("wilson_lo"), hi.as("wilson_hi"))
+      wilsonRates(agg, "p_brand", "n_lines", "n_returned", "return_rate")
     }),
 
     // Nation-affinity lift — which (customer nation → supplier nation)
@@ -7053,15 +6970,7 @@ object SparkEntry {
       val D = "decimal(38,0)"
       val flows = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(t(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
+        .transform(joinTradeNations(s, dir))
         .select(col("c_nationkey").as("cn"), col("s_nationkey").as("sn"))
         .localCheckpoint()
       val cs = flows.groupBy(col("cn"), col("sn"))
@@ -7094,8 +7003,7 @@ object SparkEntry {
           max(expr("CAST(round(l_discount * 10000) AS BIGINT)"))
             .as("mx"),
           count(lit(1)).as("n"),
-          sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-            .as("cents"))
+          sum(priceCents).as("cents"))
         .groupBy(expr("(mx - mn) div 100").cast("int")
           .as("spread_bucket"))
         .agg(count(lit(1)).as("n_parts"), sum(col("n")).as("n_lines"),
@@ -7107,9 +7015,7 @@ object SparkEntry {
     // axis). Integer month ordinal (year·12+month), no interval math.
     "q348_fill_rate_trend" -> ((s, dir) =>
       t(s, dir, "lineitem")
-        .join(t(s, dir, "orders")
-            .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
+        .transform(joinOrderDate(s, dir))
         .groupBy((year(col("o_orderdate")) * 12 +
           month(col("o_orderdate")) - 1).as("mi"))
         .agg(countDistinct(col("o_orderkey")).as("n_orders"),
@@ -7169,12 +7075,9 @@ object SparkEntry {
     "q346_supplier_hhi" -> ((s, dir) => {
       val D = "decimal(38,0)"
       val rev = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part")
-            .select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
+        .transform(joinPartType(s, dir))
         .groupBy(col("p_type"), col("l_suppkey"))
-        .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
-          .as("c"))
+        .agg(sum(priceCents).as("c"))
       rev.groupBy(col("p_type"))
         .agg(count(lit(1)).as("n_suppliers"),
           sum(col("c").cast(D)).as("__tot"),
@@ -7324,7 +7227,7 @@ object SparkEntry {
     "q125_label_agreement" -> ((s, dir) => {
       import s.implicits._
       val markers = langIdMarkers.toDF("m_word", "m_lang", "m_weight")
-      val docs = spreadBig(s, t(s, dir, "documents"))  // see q19
+      val docs = gatedSpreadDocs(s, dir)
       val best = T.langIdBest(docs, "doc_id", col("text"), markers)
       val lab = docs.select(col("doc_id"), col("lang"))
         .join(best, Seq("doc_id"), "left")
@@ -7338,10 +7241,7 @@ object SparkEntry {
     // deterministic per-row z; reports the scale parameters and the
     // |z| > 2 / > 3 tail mass that decides if z-scoring is usable.
     "q112_standardize" -> ((s, dir) =>
-      An.standardize(
-        t(s, dir, "events").filter(col("value").isNotNull),
-        col("event_type"),
-        (col("value").cast("decimal(12,2)") * lit(100)).cast("long"))),
+      An.standardize(eventValues(s, dir), col("event_type"), valueCents)),
 
     // Semi-structured props: extract the long-tail JSON attribute k
     // (get_json_object + try_cast, codegen'd — no UDF, no schema
@@ -7383,7 +7283,7 @@ object SparkEntry {
     // 100 TB history. Greedy-by-id verdict: rejected if near-dup of any
     // existing doc or a smaller-id batch mate.
     "q85_incremental_dedup" -> ((s, dir) => {
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spreadDocs(s, dir)
         .select(col("doc_id"), col("text"))
       val incoming = docs.filter(pmod(col("doc_id"), lit(10)) === 7)
       val existing = docs.filter(pmod(col("doc_id"), lit(10)) =!= 7)
@@ -7416,7 +7316,7 @@ object SparkEntry {
       // per-doc token kernels otherwise run on a single task at any SF
       // (the sf1 cpus-8-vs-32 falsification measured ratio ~1.0 — a
       // serial stage, not parallel kernel CPU).
-      spreadBig(s, t(s, dir, "documents")).select(col("doc_id"), col("lang"),
+      gatedSpreadDocs(s, dir).select(col("doc_id"), col("lang"),
         size(T.tokens(col("text"))).as("n_tokens"),
         size(array_distinct(T.tokens(col("text")))).as("n_distinct"),
         T.subtokenCount(col("text")).as("n_subtokens"),
@@ -7438,7 +7338,7 @@ object SparkEntry {
     // Ratios are exact int/int double divisions → oracle-stable.
     "q21_text_quality" -> ((s, dir) => {
       val w = T.tokens(col("text"))
-      spreadBig(s, t(s, dir, "documents"))  // one-row-group file; see q19
+      gatedSpreadDocs(s, dir)
         .select(col("doc_id"),
           size(w).as("n_tokens"),
           T.stopwordCount(w, Stopwords).as("n_stopwords"),
@@ -7461,7 +7361,7 @@ object SparkEntry {
     "q22_lang_id" -> ((s, dir) => {
       import s.implicits._
       val markers = langIdMarkers.toDF("m_word", "m_lang", "m_weight")
-      val docs = spreadBig(s, t(s, dir, "documents"))  // see q19
+      val docs = gatedSpreadDocs(s, dir)
       val best = T.langIdBest(docs, "doc_id", col("text"), markers)
       docs.select(col("doc_id"), col("lang"))
         .join(best, Seq("doc_id"), "left")
@@ -7475,7 +7375,7 @@ object SparkEntry {
     // Fingerprints via the fused window-min kernels (spec-pinned equal to
     // the composable minTokenHash / rollingFingerprint forms).
     "q23_fingerprint" -> ((s, dir) =>
-      spread(s, t(s, dir, "documents")).select(col("doc_id"),
+      spreadDocs(s, dir).select(col("doc_id"),
         md5(col("text")).as("content_md5"),
         call_function("word_min_hash32", col("text"), lit(1))
           .as("min_token_hash"),
@@ -7510,8 +7410,7 @@ object SparkEntry {
     "q66_cluster_curation" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
-      val comp = nearDupComponents(s, dir)
-        .select(col("node").as("doc_id"), col("label"))
+      val comp = nearDupDocLabels(s, dir)
       docs.join(comp, Seq("doc_id"), "left")
         .withColumn("keep",
           col("label").isNull || col("label") === col("doc_id"))
@@ -7574,7 +7473,7 @@ object SparkEntry {
     // explode at ~n_tokens/4 while detecting repeats at ARBITRARY
     // offsets; one combinable shuffle on span_hash.
     "q70_repeated_spans" -> ((s, dir) =>
-      D.repeatedSpans(spread(s, t(s, dir, "documents")), "doc_id",
+      D.repeatedSpans(spreadDocs(s, dir), "doc_id",
         col("text"), width = 16, modulus = 4)),
 
     // L52: exact fixed-size per-stratum sample — EXACTLY 5 docs per lang
@@ -7613,7 +7512,7 @@ object SparkEntry {
     // Build: one scan, ×3 explode, shuffle bounded by depth×width.
     // Probes: the 5 most frequent tokens; estimates must overestimate.
     "q69_countmin" -> ((s, dir) => {
-      val toks = spreadBig(s, t(s, dir, "documents"))  // see q19
+      val toks = gatedSpreadDocs(s, dir)
         .select(explode(T.tokens(col("text"))).as("w"))
       val sketch = Sk.cmsBuild(toks, col("w"), 3, 1024)
       val exact = toks.groupBy(col("w")).agg(count(lit(1)).as("exact_n"))
@@ -7664,7 +7563,7 @@ object SparkEntry {
     // chr(769)) so an NFC-normalizing editor/formatter can't silently
     // compose the source literal and break oracle parity (ADVICE r5).
     "q64_unicode_nfc" -> ((s, dir) =>
-      spreadBig(s, t(s, dir, "documents"))  // see q19
+      gatedSpreadDocs(s, dir)
         .withColumn("dirty",
           concat(col("text"),
           lit(" cafe\u0301 e\u0301cole")))  // NFD: explicit combining-acute escapes
@@ -7678,8 +7577,7 @@ object SparkEntry {
 
     // SimHash: 60-bit per-doc signature via ±1 bit votes over token hashes.
     "q26_simhash" -> ((s, dir) =>
-      D.simhashText(spread(s, t(s, dir, "documents")), "doc_id",
-        col("text"))),
+      D.simhashText(spreadDocs(s, dir), "doc_id", col("text"))),
 
     // Similarity search baseline: brute-force cosine top-5 for 20 query
     // vectors — query side broadcast, corpus streamed once, no shuffle.
@@ -7856,7 +7754,7 @@ object SparkEntry {
     // LLM context-window prep: overlapping token chunks (size 32, stride
     // 24 → 8-token overlap), one output row per chunk. Map-side only.
     "q56_token_chunks" -> ((s, dir) =>
-      spreadBig(s, t(s, dir, "documents")).select(col("doc_id"),  // see q19
+      gatedSpreadDocs(s, dir).select(col("doc_id"),
           posexplode(T.tokenChunks(T.tokens(col("text")), 32, 24))
             .as(Seq("chunk_idx", "chunk_text")))
         .withColumn("n_chunk_tokens",
@@ -7866,7 +7764,7 @@ object SparkEntry {
     // token's share of the doc — high ratios flag boilerplate/spam for
     // dropping. Two partial-aggregable shuffles (doc×word, then doc).
     "q59_repetition" -> ((s, dir) => {
-      val tf = spreadBig(s, t(s, dir, "documents"))  // see q19
+      val tf = gatedSpreadDocs(s, dir)
         .select(col("doc_id"), explode(T.tokens(col("text"))).as("w"))
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
       tf.groupBy(col("doc_id"))
@@ -7912,7 +7810,7 @@ object SparkEntry {
       // corpus side spread (see q19) — the whole bill here is the
       // char-8 kernel, which otherwise runs on the file's single row
       // group; the eval side stays on the raw scan (5 docs).
-      spreadBig(s, docs).select(col("doc_id"), hs.as("__hs"))
+      gatedSpreadDocs(s, dir).select(col("doc_id"), hs.as("__hs"))
         .crossJoin(broadcast(ev))
         .select(col("doc_id"),
           when(nSh > 0, nSh).as("n_shingles"),
@@ -7977,7 +7875,7 @@ object SparkEntry {
     // predicted language. One retained-corpus row per surviving doc.
     "q35_corpus_curation" -> ((s, dir) => {
       import s.implicits._
-      val docs = spread(s, t(s, dir, "documents"))
+      val docs = spreadDocs(s, dir)
       // near-dup losers: every id_b of a verified pair (id_a < id_b
       // keeps each cluster's minimum id); pairs from the session sweep —
       // one build feeds q25/q35/q61/q66
@@ -8003,11 +7901,7 @@ object SparkEntry {
     // J5/A3 over the remaining dim chain (supplier→nation→region): every
     // corpus table is exercised by at least one oracle query.
     "q36_supplier_balance" -> ((s, dir) =>
-      t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+      supplierRegions(s, dir)
         .groupBy(col("r_name"))
         .agg(count(lit(1)).as("n_suppliers"),
           dsum(C.money(col("s_acctbal"))).as("sum_acctbal"))
@@ -8093,18 +7987,14 @@ object SparkEntry {
     // tokenization; threshold 0.7 on char-set Jaccard.
     "q39_ngram_jaccard" -> ((s, dir) =>
       D.nearDupPairs(
-        spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
+        spreadDocs(s, dir).select(col("doc_id"), col("text")),
         "doc_id", T.charShinglesMulti(col("text"), 8), 0.7,
         kernels = Some(D.charKernels(col("text"), 8)))),
 
     // OLAP rollup (grouping sets): region/nation subtotals + grand total
     // in one pass — partial-aggregable, one shuffle.
     "q40_rollup" -> ((s, dir) =>
-      t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+      supplierRegions(s, dir)
         .rollup(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_suppliers"),
           dsum(C.money(col("s_acctbal"))).as("sum_acctbal"))),
@@ -8113,11 +8003,7 @@ object SparkEntry {
     // Expand + single-shuffle aggregation (completes the grouping-sets
     // family beside q40's rollup).
     "q47_cube" -> ((s, dir) =>
-      t(s, dir, "supplier")
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
+      supplierRegions(s, dir)
         .cube(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_suppliers"),
           dsum(C.money(col("s_acctbal"))).as("sum_acctbal"))),
@@ -8153,7 +8039,7 @@ object SparkEntry {
       val raw = concat(col("text"), lit(" contact user"),
         col("doc_id").cast("string"), lit("@mail.example ref "),
         (col("doc_id") * 7).cast("string"))
-      spreadBig(s, t(s, dir, "documents"))  // see q19
+      gatedSpreadDocs(s, dir)
         .select(col("doc_id"), raw.as("__raw"))
         .select(col("doc_id"),
           T.redactCount(col("__raw"), T.EmailPattern, "<EMAIL>").as("__r1"))
@@ -8346,8 +8232,9 @@ object SparkEntry {
   private[graft] val IvfTrainDenom = 10000
   private[graft] val IvfTrainSalt = "ivf"
 
-  /** The warehouse db of the per-corpus bucketed serving tables, and
-    * their name prefixes (each table is `<prefix><dirHash>`). */
+  /** The warehouse db of q91's rollup and of the per-corpus bucketed
+    * serving tables, and the latter's name prefixes (each table is
+    * `<prefix><dirHash>`). */
   private val RollupDb = "graft_rollups"
   private val CoPurchaseSymPrefix = "copurchase_sym_"
   private def docTermsPrefix(gram: Int): String = s"docterms${gram}_"
@@ -8723,7 +8610,7 @@ object SparkEntry {
       // corpus-wide doc_id re-shuffle of the term-bucketed layout
       // (VERDICT r11 #2 — exactly that aggregate made q100 slower than
       // its from-text plan).
-      val tf = spread(s, t(s, dir, "documents"))
+      val tf = spreadDocs(s, dir)
         .select(col("doc_id"), col("source"), col("lang"),
           toks.as("__toks"))
         .select(col("doc_id"), col("source"), col("lang"),
@@ -8901,7 +8788,7 @@ object SparkEntry {
       val path = exportDir(NdjsonFeedBase, dir)
       val json = to_json(struct(col("event_id"), col("event_type"),
         col("user_id"),
-        (col("value").cast("decimal(12,2)") * lit(100)).cast("long")
+        valueCents
           .as("cents")))
       val line = when(pmod(col("event_id"), lit(97)) === 0,
         substring(json, 1, 10)).otherwise(json)
@@ -9146,7 +9033,7 @@ object SparkEntry {
   private def wordCandidatePairs(s: SparkSession, dir: String): DataFrame =
     SessionMemo(Round, s, dir, "worddup3:0.0")(
       D.withNearDupPairs(
-        spread(s, t(s, dir, "documents")).select(col("doc_id"), col("text")),
+        spreadDocs(s, dir).select(col("doc_id"), col("text")),
         "doc_id", T.wordShinglesMulti(T.tokens(col("text")), 3), 0.0,
         Some(D.wordKernels(col("text"), 3)))(_.localCheckpoint(true)))
 
